@@ -295,8 +295,9 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path):
     import os
 
     from the_movies_db_spark.upsert import (
+        _MOR_PTR,
+        _commit_version,
         _mor_base_dir,
-        _mor_write_ptr,
         append_mor_delta,
         compact_mor,
         read_mor,
@@ -339,7 +340,7 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path):
     merged = read_mor(spark, root, "pk")
     nxt = "base-99"
     merged.write.mode("overwrite").parquet(os.path.join(root, nxt))
-    _mor_write_ptr(root, nxt)
+    _commit_version(root, nxt, _MOR_PTR)
     # deltas still present and re-apply idempotently over the new base
     assert glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
     assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect

@@ -576,3 +576,38 @@ def test_branch_merge_error_policy(spark, tmp_path):
         U.merge_branch(spark, root, "dev", "pk", on_conflict="error")
     # branch untouched by the failed merge
     assert U.list_branches(root) == ["dev"]
+
+
+def test_compact_table_takes_writer_lease(spark, tmp_path):
+    """Compacting a versioned table is a commit: it must take the
+    writer lease, so a held lease raises instead of letting the
+    compaction commit over (and drop) a concurrent writer's version."""
+    import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import compact_table
+
+    root = str(tmp_path / "tbl")
+    write_upsert(spark, root, _df(spark, [(1, "a", T0), (2, "b", T0)]), "id")
+    before = U._current_version(root)
+    with U.writer_lock(root):
+        with pytest.raises(U.WriterLockError):
+            compact_table(spark, root)
+    assert U._current_version(root) == before
+    assert _as_map(U.read_table(spark, root)).keys() == {1, 2}
+
+
+def test_flat_parquet_root_upgrades_on_first_upsert(spark, tmp_path):
+    """A flat-Parquet root (plain io.write_table output, no pointer)
+    holds data: the first upsert merges into it and leaves a versioned
+    table behind."""
+    import os
+
+    import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import write_table
+
+    root = str(tmp_path / "flat")
+    write_table(_df(spark, [(1, "a", T0), (2, "b", T0)]), root)
+    assert not os.path.exists(os.path.join(root, U.CURRENT_POINTER))
+    write_upsert(spark, root, _df(spark, [(2, "B", T1), (3, "c", T1)]), "id")
+    got = {k: v.val for k, v in _as_map(U.read_table(spark, root)).items()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+    assert U._current_version(root) in U.list_versions(root)

@@ -434,43 +434,38 @@ def compact_table(
     dominate scans long before data volume does. Returns
     (files_before, files_after). For a versioned table root (one with a
     ``_CURRENT`` pointer, see ``upsert.write_upsert``) the rewrite
-    commits as a new version via the atomic pointer flip — crash-safe;
-    for a plain flat dir it falls back to rename-swap.
+    commits as a new version through ``upsert.rewrite_table`` — under
+    the writer lease, so it raises ``upsert.WriterLockError`` instead
+    of racing a concurrent upsert, and crash-safe via the atomic
+    pointer flip; for a plain flat dir it falls back to rename-swap.
     """
     import glob
     import shutil
     import tempfile
 
-    from the_movies_db_spark.upsert import (
-        _commit_version,
-        _current_version,
-        _next_version_name,
-        table_data_path,
-        vacuum_table,
-    )
+    from the_movies_db_spark.upsert import rewrite_table, table_data_path
 
-    data_dir = table_data_path(path)
-    files_before = len(
-        glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-    )
-    total_bytes = sum(
-        os.path.getsize(f)
-        for f in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-    )
-    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+    files_before = 0
 
-    df = spark.read.parquet(data_dir)
-    out = df.repartition(int(n_out))
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
+    def rewrite(df: DataFrame) -> DataFrame:
+        # sized from the data dir read under the lease (versioned case)
+        nonlocal files_before
+        files = glob.glob(
+            os.path.join(table_data_path(path), "**", "*.parquet"),
+            recursive=True,
+        )
+        files_before = len(files)
+        total_bytes = sum(os.path.getsize(f) for f in files)
+        n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+        out = df.repartition(int(n_out))
+        if sort_within_by:
+            out = out.sortWithinPartitions(*sort_within_by)
+        return out
 
-    if _current_version(path) is not None:
-        version = _next_version_name(path)
-        out.write.mode("overwrite").parquet(os.path.join(path, version))
-        _commit_version(path, version)
-        vacuum_table(path, keep=1)
-        final_dir = os.path.join(path, version)
+    if table_data_path(path) != path:
+        final_dir = os.path.join(path, rewrite_table(spark, path, rewrite))
     else:
+        out = rewrite(spark.read.parquet(path))
         staging = tempfile.mkdtemp(
             prefix=os.path.basename(path) + "_compact_",
             dir=os.path.dirname(path) or ".",

@@ -179,7 +179,11 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from the_movies_db_spark.io import load_table, scratch_dir
-    from the_movies_db_spark.upsert import additive_upsert
+    from the_movies_db_spark.upsert import (
+        additive_upsert,
+        read_table,
+        rewrite_table,
+    )
 
     work = scratch_dir("incroll")
     src = f"{work}/src"
@@ -198,17 +202,6 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ["window_start", "event_type"]
 
     def maintain(batch_df, batch_id: int) -> None:
-        import os
-
-        from the_movies_db_spark.upsert import (
-            _commit_version,
-            _current_version,
-            _next_version_name,
-            read_table,
-            vacuum_table,
-        )
-
-        s = batch_df.sparkSession
         delta = (
             batch_df.groupBy(
                 F.date_trunc("hour", "ts").alias("window_start"), "event_type"
@@ -217,20 +210,15 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("value").alias("sum_value"),
             )
         )
-        if os.path.exists(target) and _current_version(target) is not None:
-            merged = additive_upsert(
-                read_table(s, target), delta, keys, ["n_events", "sum_value"]
-            )
-        else:
-            merged = delta
-        version = _next_version_name(target)
-        merged.write.mode("overwrite").parquet(os.path.join(target, version))
-        _commit_version(target, version)
-        vacuum_table(target, keep=1)
+        rewrite_table(
+            batch_df.sparkSession,
+            target,
+            lambda cur: delta if cur is None else additive_upsert(
+                cur, delta, keys, ["n_events", "sum_value"]
+            ),
+        )
 
     E.run_foreach_batch_available_now(stream, maintain)
-    from the_movies_db_spark.upsert import read_table
-
     return read_table(spark, target).select(
         "window_start",
         "event_type",
@@ -559,6 +547,7 @@ def streaming_bitmap_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from the_movies_db_spark.io import load_table, scratch_dir
+    from the_movies_db_spark.upsert import read_table, rewrite_table
 
     work = scratch_dir("bmdau")
     src = f"{work}/src"
@@ -572,17 +561,6 @@ def streaming_bitmap_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def maintain(batch_df, batch_id: int) -> None:
-        import os
-
-        from the_movies_db_spark.upsert import (
-            _commit_version,
-            _current_version,
-            _next_version_name,
-            read_table,
-            vacuum_table,
-        )
-
-        s = batch_df.sparkSession
         delta = B.word_table(
             batch_df,
             "user_id",
@@ -591,9 +569,11 @@ def streaming_bitmap_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("day_idx"),
         )
-        if os.path.exists(target) and _current_version(target) is not None:
-            cur = read_table(s, target)
-            merged = (
+
+        def or_merge(cur):
+            if cur is None:
+                return delta
+            return (
                 cur.withColumnRenamed("bits", "__old")
                 .join(delta.withColumnRenamed("bits", "__new"),
                       ["day_idx", "wid"], "full_outer")
@@ -603,16 +583,10 @@ def streaming_bitmap_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
                     B.or_merge("__old", "__new").alias("bits"),
                 )
             )
-        else:
-            merged = delta
-        version = _next_version_name(target)
-        merged.write.mode("overwrite").parquet(os.path.join(target, version))
-        _commit_version(target, version)
-        vacuum_table(target, keep=1)
+
+        rewrite_table(batch_df.sparkSession, target, or_merge)
 
     E.run_foreach_batch_available_now(stream, maintain)
-    from the_movies_db_spark.upsert import read_table
-
     return (
         read_table(spark, target)
         .groupBy("day_idx")
@@ -660,12 +634,14 @@ def streaming_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     additive MERGE (shuffles bounded by the batch and the key grain);
     the rank window partitions by event_type over the maintained
     key-grain table, never the event history."""
-    import os
-
     from pyspark.sql import functions as F
 
     from the_movies_db_spark.io import load_table, scratch_dir
-    from the_movies_db_spark.upsert import additive_upsert
+    from the_movies_db_spark.upsert import (
+        additive_upsert,
+        read_table,
+        rewrite_table,
+    )
 
     work = scratch_dir("topkinc")
     src = f"{work}/src"
@@ -679,34 +655,19 @@ def streaming_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def maintain(batch_df, batch_id: int) -> None:
-        from the_movies_db_spark.upsert import (
-            _commit_version,
-            _current_version,
-            _next_version_name,
-            read_table,
-            vacuum_table,
-        )
-
-        s = batch_df.sparkSession
         delta = batch_df.groupBy("event_type", "user_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
-        if os.path.exists(target) and _current_version(target) is not None:
-            merged = additive_upsert(
-                read_table(s, target), delta,
-                ["event_type", "user_id"], ["n"],
-            )
-        else:
-            merged = delta
-        version = _next_version_name(target)
-        merged.write.mode("overwrite").parquet(os.path.join(target, version))
-        _commit_version(target, version)
-        vacuum_table(target, keep=1)
+        rewrite_table(
+            batch_df.sparkSession,
+            target,
+            lambda cur: delta if cur is None else additive_upsert(
+                cur, delta, ["event_type", "user_id"], ["n"]
+            ),
+        )
 
     E.run_foreach_batch_available_now(stream, maintain)
     from pyspark.sql import Window
-
-    from the_movies_db_spark.upsert import read_table
 
     counts = read_table(spark, target)
     w = Window.partitionBy("event_type").orderBy(

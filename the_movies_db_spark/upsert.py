@@ -21,10 +21,13 @@ relative to the target (the common daily-increment case), pass
 ``broadcast_batch=True`` and the plan degrades to a broadcast outer
 join with NO shuffle of the target. With a transactional table format
 (Delta/Iceberg) this maps to native ``MERGE INTO``; on plain Parquet,
-``write_upsert`` writes a complete new version directory and commits
-it with an atomic pointer-file flip (manifest-guarded swap — a crash
-at any point leaves the previous version readable; see the
-versioned-table section below).
+every writer of a versioned table commits through ``rewrite_table``
+(or, when it holds the writer lease itself, ``_publish``): write a
+complete new version directory, then flip an atomic pointer file
+(manifest-guarded swap — a crash at any point leaves the previous
+version readable; see the versioned-table section below). The
+version-dir layout is private to this module, so swapping in a
+transactional format means replacing those two functions.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ import os
 import re
 import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from functools import reduce
 
@@ -51,11 +54,34 @@ def with_audit_column(df: DataFrame, column: str = AUDIT_COLUMN) -> DataFrame:
     return df.withColumn(column, F.current_timestamp())
 
 
+def _key_list(pk: str | Sequence[str]) -> list[str]:
+    return [pk] if isinstance(pk, str) else list(pk)
+
+
+def _keyed_join(
+    target: DataFrame, batch: DataFrame, keys: Sequence[str]
+) -> tuple[DataFrame, Column, Column]:
+    """Null-safe full-outer join of ``target`` (alias ``t``) and
+    ``batch`` (alias ``b``) on ``keys`` — the shared prelude of every
+    MERGE variant. Returns ``(joined, batch_matched, target_matched)``:
+    the flags say which side supplied a row for the key."""
+    cond = reduce(
+        lambda a, c: a & c,
+        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
+    )
+    joined = target.alias("t").join(batch.alias("b"), cond, "full_outer")
+    return (
+        joined,
+        F.col(f"b.{keys[0]}").isNotNull(),
+        F.col(f"t.{keys[0]}").isNotNull(),
+    )
+
+
 def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataFrame:
     """Keyed dedup keeping the most recent row per key — row_number
     over (pk ORDER BY order_col DESC). This is THE scale-safe dedup:
     one shuffle on pk, no full-row comparison."""
-    keys = [pk] if isinstance(pk, str) else list(pk)
+    keys = _key_list(pk)
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -92,34 +118,20 @@ def merge_upsert(
     including its audit timestamp; WHEN NOT MATCHED THEN insert the
     batch row; unmatched target rows persist.
     """
-    keys = [pk] if isinstance(pk, str) else list(pk)
+    keys = _key_list(pk)
     if evolve:
         target, batch = reconcile(target, batch)
     if order_col is not None and order_col in batch.columns:
         batch = keep_latest(batch, keys, order_col)
     if broadcast_batch:
         batch = F.broadcast(batch)
-
-    t, b = target.alias("t"), batch.alias("b")
-    cond = reduce(
-        lambda a, c: a & c,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
-    )
-    joined = t.join(b, cond, "full_outer")
-
     non_key_cols = [c for c in target.columns if c not in keys]
-    changed = changed_predicate("t", "b", non_key_cols, audit_col)
-    batch_matched = F.col(f"b.{keys[0]}").isNotNull()
-    target_matched = F.col(f"t.{keys[0]}").isNotNull()
-    take_batch = (batch_matched & ~target_matched) | (
-        batch_matched & target_matched & changed
+    return conditional_merge(
+        target,
+        batch,
+        keys,
+        matched_update=changed_predicate("t", "b", non_key_cols, audit_col),
     )
-
-    out_cols = [
-        F.when(take_batch, F.col(f"b.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in target.columns
-    ]
-    return joined.select(*out_cols)
 
 
 # --- versioned table commits (manifest-guarded swap) -----------------------
@@ -131,6 +143,13 @@ def merge_upsert(
 # readable version: before the flip the old version is still current;
 # the flip itself is a single atomic os.replace; orphaned version dirs
 # are garbage, removed by `vacuum_table`.
+#
+# The commit protocol lives ONLY here. `rewrite_table` (take the lease,
+# read current, transform, publish) is the public commit path; writers
+# that need the lease for more than one read — `delete_keys`, the
+# branch writers — hold it themselves and call `_publish` (next version
+# name → parquet write → pre-flip hook → pointer flip → vacuum). No
+# other module knows the version-dir naming or the pointer file.
 
 CURRENT_POINTER = "_CURRENT"
 _VERSION_RE = re.compile(r"v\d{8}$")
@@ -232,8 +251,10 @@ def writer_lock(
             pass  # lease was stolen mid-write (we exceeded it)
 
 
-def _current_version(target_path: str) -> str | None:
-    f = os.path.join(target_path, CURRENT_POINTER)
+def _current_version(
+    target_path: str, pointer: str = CURRENT_POINTER
+) -> str | None:
+    f = os.path.join(target_path, pointer)
     if not os.path.exists(f):
         return None
     with open(f) as fh:
@@ -279,24 +300,24 @@ def list_versions(target_path: str) -> list[str]:
 
 
 def _next_version_name(target_path: str) -> str:
-    versions = [
-        d for d in os.listdir(target_path) if _VERSION_RE.fullmatch(d)
-    ] if os.path.exists(target_path) else []
-    n = max((int(v[1:]) for v in versions), default=0) + 1
+    versions = list_versions(target_path)
+    n = int(versions[-1][1:]) + 1 if versions else 1
     return f"v{n:08d}"
 
 
-def _commit_version(target_path: str, version_name: str) -> None:
-    """Atomically point ``_CURRENT`` at ``version_name``: write a temp
-    pointer, fsync, and os.replace it over the live pointer (atomic on
-    POSIX — readers see either the old or the new version, never a
-    torn state)."""
-    tmp = os.path.join(target_path, f".{CURRENT_POINTER}.tmp")
+def _commit_version(
+    target_path: str, version_name: str, pointer: str = CURRENT_POINTER
+) -> None:
+    """Atomically point ``pointer`` (``_CURRENT`` by default) at
+    ``version_name``: write a temp pointer, fsync, and os.replace it
+    over the live pointer (atomic on POSIX — readers see either the old
+    or the new version, never a torn state)."""
+    tmp = os.path.join(target_path, f".{pointer}.tmp")
     with open(tmp, "w") as fh:
         fh.write(version_name)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(target_path, CURRENT_POINTER))
+    os.replace(tmp, os.path.join(target_path, pointer))
 
 
 def vacuum_table(target_path: str, keep: int = 1) -> list[str]:
@@ -323,6 +344,55 @@ def vacuum_table(target_path: str, keep: int = 1) -> list[str]:
     return removed
 
 
+def _write_version(target_path: str, df: DataFrame) -> str:
+    """Write ``df`` into the next version dir — staged, not yet
+    current. Caller holds the writer lease."""
+    version = _next_version_name(target_path)
+    df.write.mode("overwrite").parquet(os.path.join(target_path, version))
+    return version
+
+
+def _publish(target_path: str, df: DataFrame, keep_versions: int) -> str:
+    """Commit ``df`` as the table's new current version and return its
+    name: write the version dir, run the pre-flip hook, flip the
+    pointer, vacuum to ``keep_versions``. Caller holds the writer
+    lease."""
+    version = _write_version(target_path, df)
+    if _before_pointer_flip is not None:
+        _before_pointer_flip()
+    _commit_version(target_path, version)
+    vacuum_table(target_path, keep=keep_versions)
+    return version
+
+
+def rewrite_table(
+    spark: SparkSession,
+    target_path: str,
+    fn: Callable[[DataFrame | None], DataFrame],
+    keep_versions: int = 1,
+    lock_wait: float = 0.0,
+) -> str:
+    """THE commit path for a versioned table: under :func:`writer_lock`,
+    read the current table, commit ``fn(current)`` as a new version
+    (:func:`_publish`) and return its name. ``fn`` gets ``None`` when
+    the table has no data yet; a legacy flat-Parquet root holding data
+    files counts as data, so the first rewrite upgrades it in place to
+    the versioned layout.
+
+    ``lock_wait=0`` raises :class:`WriterLockError` at once if another
+    writer holds the lease; ``> 0`` serializes behind it."""
+    with writer_lock(target_path, wait_seconds=lock_wait):
+        has_data = _current_version(target_path) is not None or any(
+            not f.startswith((".", "_")) for f in os.listdir(target_path)
+        )
+        current = (
+            spark.read.parquet(table_data_path(target_path))
+            if has_data
+            else None
+        )
+        return _publish(target_path, fn(current), keep_versions)
+
+
 def write_upsert(
     spark: SparkSession,
     target_path: str,
@@ -345,33 +415,19 @@ def write_upsert(
     the plain-Parquet analog of Delta's VERSION AS OF + RETAIN.
 
     SINGLE-WRITER: the whole read→merge→commit runs under
-    :func:`writer_lock`. A concurrent writer gets
-    :class:`WriterLockError` immediately (``lock_wait=0``) or
-    serializes behind the lease (``lock_wait > 0``) — never a torn
+    :func:`writer_lock` (via :func:`rewrite_table`). A concurrent
+    writer gets :class:`WriterLockError` immediately (``lock_wait=0``)
+    or serializes behind the lease (``lock_wait > 0``) — never a torn
     version dir or a silently dropped batch."""
-    with writer_lock(target_path, wait_seconds=lock_wait):
-        exists = os.path.exists(target_path)
-        current = table_data_path(target_path) if exists else None
-        has_data = exists and (
-            _current_version(target_path) is not None
-            or any(
-                not f.startswith((".", "_"))
-                for f in os.listdir(target_path)
-            )
-        )
-        if not has_data:
-            out = batch
-            if order_col is not None and order_col in batch.columns:
-                out = keep_latest(out, pk, order_col)
-        else:
-            target = spark.read.parquet(current)
-            out = merge_upsert(target, batch, pk, order_col=order_col)
-        version = _next_version_name(target_path)
-        out.write.mode("overwrite").parquet(os.path.join(target_path, version))
-        if _before_pointer_flip is not None:
-            _before_pointer_flip()
-        _commit_version(target_path, version)
-        vacuum_table(target_path, keep=keep_versions)
+
+    def merge(current: DataFrame | None) -> DataFrame:
+        if current is not None:
+            return merge_upsert(current, batch, pk, order_col=order_col)
+        if order_col is not None and order_col in batch.columns:
+            return keep_latest(batch, pk, order_col)
+        return batch
+
+    rewrite_table(spark, target_path, merge, keep_versions, lock_wait)
 
 
 def delete_keys(
@@ -401,10 +457,8 @@ def delete_keys(
     internal lease would not exclude a concurrent partitioned writer,
     and committing a version dir into the flat root would silently
     change the table layout, so the mismatch is rejected up front."""
-    pks = [pk] if isinstance(pk, str) else list(pk)
-    if os.path.isdir(target_path) and not os.path.exists(
-        os.path.join(target_path, CURRENT_POINTER)
-    ):
+    pks = _key_list(pk)
+    if os.path.isdir(target_path) and _current_version(target_path) is None:
         raise ValueError(
             f"delete_keys requires a flat versioned-dir table (no "
             f"{CURRENT_POINTER} pointer found in {target_path}); for "
@@ -412,21 +466,13 @@ def delete_keys(
             "with the surviving rows instead"
         )
     with writer_lock(target_path, wait_seconds=lock_wait):
-        current = table_data_path(target_path)
-        target = spark.read.parquet(current)
+        target = spark.read.parquet(table_data_path(target_path))
         survivors = target.join(keys.select(*pks).distinct(), pks, "left_anti")
         n_before = target.count()
-        version = _next_version_name(target_path)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(target_path, version)
-        )
+        version = _publish(target_path, survivors, keep_versions)
         n_after = spark.read.parquet(
             os.path.join(target_path, version)
         ).count()
-        if _before_pointer_flip is not None:
-            _before_pointer_flip()
-        _commit_version(target_path, version)
-        vacuum_table(target_path, keep=keep_versions)
     return n_before - n_after
 
 
@@ -459,7 +505,7 @@ def write_upsert_partitioned(
     dynamic partition overwrite so ONLY those directories are
     replaced. Returns the list of rewritten partition values.
     """
-    keys = [pk] if isinstance(pk, str) else list(pk)
+    keys = _key_list(pk)
     parts = [
         str(r[0])
         for r in batch.select(partition_col).distinct().collect()
@@ -527,19 +573,14 @@ def additive_upsert(
     merged here — the full fact history is never re-read. One shuffle
     of two already-aggregated sides on the rollup keys.
     """
-    t, d = target.alias("t"), delta.alias("d")
-    cond = reduce(
-        lambda a, k: a & k,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys],
-    )
-    joined = t.join(d, cond, "full_outer")
+    joined, _, _ = _keyed_join(target, delta, keys)
     key_cols = [
-        F.coalesce(F.col(f"t.{k}"), F.col(f"d.{k}")).alias(k) for k in keys
+        F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k) for k in keys
     ]
     measure_cols = [
         (
             F.coalesce(F.col(f"t.{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d.{c}"), F.lit(0))
+            + F.coalesce(F.col(f"b.{c}"), F.lit(0))
         ).alias(c)
         for c in sum_cols
     ]
@@ -569,7 +610,7 @@ def scd2_upsert(
     ``valid_to IS NOT NULL``) + current versions full-outer-joined to
     the deduped batch. Two shuffles total regardless of history depth.
     """
-    keys = [pk] if isinstance(pk, str) else list(pk)
+    keys = _key_list(pk)
     data_cols = [
         c for c in target.columns if c not in (*keys, valid_from, valid_to)
     ]
@@ -578,20 +619,14 @@ def scd2_upsert(
     closed = target.filter(F.col(valid_to).isNotNull())
     current = target.filter(F.col(valid_to).isNull())
 
-    t, b = current.alias("t"), batch.alias("b")
-    cond = reduce(
-        lambda a, k: a & k,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
-    )
-    joined = t.join(b, cond, "full_outer")
-    matched = F.col(f"t.{keys[0]}").isNotNull() & F.col(f"b.{keys[0]}").isNotNull()
-    changed = matched & reduce(
+    joined, batch_matched, target_matched = _keyed_join(current, batch, keys)
+    changed = (target_matched & batch_matched) & reduce(
         lambda a, c: a | c,
         [~F.col(f"t.{c}").eqNullSafe(F.col(f"b.{c}")) for c in data_cols],
     )
 
     # surviving current rows: unchanged target rows, or closed-out versions
-    kept_current = joined.filter(F.col(f"t.{keys[0]}").isNotNull()).select(
+    kept_current = joined.filter(target_matched).select(
         *[F.col(f"t.{k}").alias(k) for k in keys],
         *[F.col(f"t.{c}").alias(c) for c in data_cols],
         F.col(f"t.{valid_from}").alias(valid_from),
@@ -599,7 +634,7 @@ def scd2_upsert(
     )
     # new versions: brand-new pks, or the changed rows' replacements
     new_current = joined.filter(
-        (F.col(f"b.{keys[0]}").isNotNull() & F.col(f"t.{keys[0]}").isNull()) | changed
+        (batch_matched & ~target_matched) | changed
     ).select(
         *[F.col(f"b.{k}").alias(k) for k in keys],
         *[F.col(f"b.{c}").alias(c) for c in data_cols],
@@ -629,15 +664,9 @@ def conditional_merge(
     the Delta/Iceberg conditional-clause MERGE surface expressed as a
     full-outer join + one select, so Catalyst plans it like any other
     join (broadcast/shuffle by key, AQE-eligible)."""
-    keys = [pk] if isinstance(pk, str) else list(pk)
-    t, b = target.alias("t"), batch.alias("b")
-    cond = reduce(
-        lambda a, c: a & c,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
+    joined, batch_matched, target_matched = _keyed_join(
+        target, batch, _key_list(pk)
     )
-    joined = t.join(b, cond, "full_outer")
-    batch_matched = F.col(f"b.{keys[0]}").isNotNull()
-    target_matched = F.col(f"t.{keys[0]}").isNotNull()
     both = batch_matched & target_matched
     delete_row = (
         both & matched_delete if matched_delete is not None else F.lit(False)
@@ -674,15 +703,9 @@ def merge_preview(
     Both sides' columns come back under ``t_``/``b_`` prefixes so the
     caller can aggregate deltas. Same single full-outer join as the
     real MERGE — previewing costs exactly one merge plan, no writes."""
-    keys = [pk] if isinstance(pk, str) else list(pk)
-    t, b = target.alias("t"), batch.alias("b")
-    cond = reduce(
-        lambda a, c: a & c,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
+    joined, batch_matched, target_matched = _keyed_join(
+        target, batch, _key_list(pk)
     )
-    joined = t.join(b, cond, "full_outer")
-    batch_matched = F.col(f"b.{keys[0]}").isNotNull()
-    target_matched = F.col(f"t.{keys[0]}").isNotNull()
     both = batch_matched & target_matched
     delete_row = (
         both & matched_delete if matched_delete is not None else F.lit(False)
@@ -729,10 +752,8 @@ def write_audit_publish(
     the publish itself is one atomic pointer rename, identical cost at
     any table size."""
     with writer_lock(target_path):
-        staged_v = _next_version_name(target_path)
-        staged_path = os.path.join(target_path, staged_v)
-        df.write.parquet(staged_path)
-        staged = spark.read.parquet(staged_path)
+        staged_v = _write_version(target_path, df)
+        staged = spark.read.parquet(os.path.join(target_path, staged_v))
         n_staged = staged.count()
         # A NULL audit predicate is treated as BAD (quarantined), never
         # silently dropped: the quarantine side takes `pred IS NOT FALSE`
@@ -752,10 +773,12 @@ def write_audit_publish(
             }
         qdir = os.path.join(target_path, "_quarantine", staged_v)
         bad.write.mode("overwrite").parquet(qdir)
-        clean_v = _next_version_name(target_path)
-        clean_path = os.path.join(target_path, clean_v)
-        staged.filter(f"({bad_predicate}) IS FALSE").write.parquet(clean_path)
-        n_published = spark.read.parquet(clean_path).count()
+        clean_v = _write_version(
+            target_path, staged.filter(f"({bad_predicate}) IS FALSE")
+        )
+        n_published = spark.read.parquet(
+            os.path.join(target_path, clean_v)
+        ).count()
         _commit_version(target_path, clean_v)
         return {
             "staged_version": staged_v,
@@ -782,8 +805,8 @@ def write_audit_publish(
 # and within one delta batch the LAST row wins (``__pos``, frozen at
 # write time, breaks intra-batch ties deterministically).
 # The base lives in versioned dirs (``base-<n>``) behind an atomic
-# ``_BASE`` pointer file — the same pattern as the COW ``_CURRENT``
-# pointer — so compaction is crash-safe at EVERY point: the pointer is
+# ``_BASE`` pointer file, flipped by the same ``_commit_version``
+# (fsync + os.replace) as the COW ``_CURRENT`` pointer — so compaction is crash-safe at EVERY point: the pointer is
 # either old (deltas intact) or new (deltas re-apply idempotently);
 # orphan base dirs from a crash are swept at the next compaction.
 # ---------------------------------------------------------------------------
@@ -791,36 +814,24 @@ def write_audit_publish(
 _MOR_PTR = "_BASE"
 
 
-def _mor_write_ptr(root: str, name: str) -> None:
-    tmp = os.path.join(root, f".{_MOR_PTR}.tmp")
-    with open(tmp, "w") as f:
-        f.write(name)
-    os.replace(tmp, os.path.join(root, _MOR_PTR))
-
-
 def _mor_base_dir(root: str) -> str:
-    ptr = os.path.join(root, _MOR_PTR)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            return os.path.join(root, f.read().strip())
-    return os.path.join(root, "base")  # pre-pointer layout
+    # "base": the pre-pointer layout
+    return os.path.join(root, _current_version(root, _MOR_PTR) or "base")
 
 
 def write_mor_base(df: DataFrame, root: str) -> None:
     """Initialize a merge-on-read table: base data, empty delta log."""
     os.makedirs(root, exist_ok=True)
     df.write.mode("overwrite").parquet(os.path.join(root, "base-1"))
-    _mor_write_ptr(root, "base-1")
+    _commit_version(root, "base-1", _MOR_PTR)
     os.makedirs(os.path.join(root, "deltas"), exist_ok=True)
 
 
 def _next_delta_seq(root: str) -> int:
-    import re as _re
-
     seqs = [
         int(m.group(1))
         for p in glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-        if (m := _re.search(r"delta-(\d+)\.parquet$", p))
+        if (m := re.search(r"delta-(\d+)\.parquet$", p))
     ]
     return max(seqs, default=0) + 1
 
@@ -898,8 +909,6 @@ def compact_mor(spark: SparkSession, root: str, pk: str) -> int:
     idempotently (latest-op-wins is stable under replay: 'U' rewrites
     the identical row, 'D' anti-joins nothing). Orphan ``base-*`` dirs
     from either crash are swept here, under the writer lease."""
-    import re as _re
-
     with writer_lock(root):
         delta_files = sorted(
             glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
@@ -911,11 +920,11 @@ def compact_mor(spark: SparkSession, root: str, pk: str) -> int:
         for d in glob.glob(os.path.join(root, "base-*")):
             if os.path.abspath(d) != os.path.abspath(current):
                 shutil.rmtree(d)
-        m = _re.search(r"base-(\d+)$", current)
+        m = re.search(r"base-(\d+)$", current)
         nxt = f"base-{int(m.group(1)) + 1 if m else 1}"
         merged = read_mor(spark, root, pk).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(os.path.join(root, nxt))
-        _mor_write_ptr(root, nxt)
+        _commit_version(root, nxt, _MOR_PTR)
         for p in delta_files:
             os.remove(p)
         if os.path.abspath(current) != os.path.abspath(
@@ -1018,12 +1027,7 @@ def branch_create(target_path: str, name: str, lock_wait: float = 0.0) -> str:
         if os.path.exists(broot):
             raise ValueError(f"branch already exists: {name}")
         os.makedirs(broot)
-        tmp = os.path.join(broot, f".{_FORK_FILE}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(fork)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(broot, _FORK_FILE))
+        _commit_version(broot, fork, _FORK_FILE)
     return fork
 
 
@@ -1052,10 +1056,7 @@ def write_upsert_branch(
     with writer_lock(broot, wait_seconds=lock_wait):
         cur = read_branch(spark, target_path, name)
         out = merge_upsert(cur, batch, pk, order_col=order_col)
-        version = _next_version_name(broot)
-        out.write.mode("overwrite").parquet(os.path.join(broot, version))
-        _commit_version(broot, version)
-        vacuum_table(broot, keep=1)
+        _publish(broot, out, keep_versions=1)
 
 
 def merge_branch(
@@ -1079,7 +1080,7 @@ def merge_branch(
     """
     if on_conflict not in ("theirs", "error"):
         raise ValueError(f"unknown on_conflict policy: {on_conflict!r}")
-    keys = [pk] if isinstance(pk, str) else list(pk)
+    keys = _key_list(pk)
     with writer_lock(target_path, wait_seconds=lock_wait):
         fork = _branch_fork(target_path, name)
         base = read_table(spark, target_path, version=fork)
@@ -1108,12 +1109,9 @@ def merge_branch(
                 f"merge of branch {name!r} has {n_conflicts} conflicts"
             )
         merged = merge_upsert(ours, th_ch, pk, order_col=None)
-        version = _next_version_name(target_path)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target_path, version)
-        )
-        _commit_version(target_path, version)
+        version = _publish(target_path, merged, keep_versions=1)
         shutil.rmtree(_branch_root(target_path, name), ignore_errors=True)
+        # the consumed branch no longer protects its fork version
         vacuum_table(target_path, keep=1)
         return {
             "n_branch_changes": n_theirs,
