@@ -169,3 +169,100 @@ def test_distributed_fetch_respects_global_rate(spark):
     assert n == 16
     # 8 requests over 2 tasks at 5 req/s/task → ≥ (4-1)/5 = 0.6 s
     assert elapsed >= 0.6
+
+
+def _single_page(results: list[dict]):
+    def call(url: str, params: dict) -> dict:
+        return {"page": params["page"], "total_pages": 1, "results": results}
+
+    return call
+
+
+def _bigint_page():
+    return _single_page([{"id": 1, "vote_count": None}, {"id": 2, "vote_count": 2**53 + 1}])
+
+
+def test_distributed_fetch_keeps_bigint_next_to_null(spark):
+    """A NULL on the same page must not turn the column into float64:
+    2**53 + 1 has no exact double."""
+    df = R.fetch_pages_distributed(spark, _bigint_page, "u", num_pages=1)
+    assert sorted((r.id, r.vote_count) for r in df.collect()) == [
+        (1, None),
+        (2, 2**53 + 1),
+    ]
+
+
+def test_fan_out_enters_plan_as_one_local_relation(spark):
+    df = R.fetch_all_endpoints(
+        spark, fixture_transport(2, 3), endpoints=("popular", "upcoming")
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+
+
+def test_fan_out_matches_row_path(spark):
+    """Same schema (nullability included) and rows as building each
+    endpoint from Python rows and unioning, on pages with NULLs, empty
+    ``genre_ids``, a missing key and a schema-drift array field."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    drift = StructField("keywords", ArrayType(StringType()))
+    schema = StructType([*R.MOVIE_SCHEMA.fields, drift])
+
+    def page(url: str, params: dict) -> dict:
+        ep = url.rsplit("/", 1)[1]
+        rows = [
+            {**_movie(i), "keywords": [ep, None] if i % 2 else []} for i in range(5)
+        ]
+        rows[0]["vote_count"] = None
+        rows[1]["genre_ids"] = [None, 3]
+        del rows[2]["keywords"]
+        return {"page": 1, "total_pages": 1, "results": rows}
+
+    endpoints = ("popular", "upcoming")
+    got = R.fetch_all_endpoints(spark, page, endpoints=endpoints, schema=schema)
+
+    ref = None
+    for e in endpoints:
+        rows = page(f"u/{e}", {"page": 1})["results"]
+        df = spark.createDataFrame(
+            [{f.name: r.get(f.name) for f in schema.fields} for r in rows], schema
+        ).withColumn("endpoint", F.lit(e))
+        ref = df if ref is None else ref.unionByName(df)
+
+    assert got.schema == ref.schema
+    key = lambda r: (r.endpoint, r.id)  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(ref.collect(), key=key)
+
+
+_MISTYPED = [{"id": 1.5}, {"id": 1, "vote_count": "12"}, {"id": 1, "adult": 1}]
+
+
+@pytest.mark.parametrize("bad", _MISTYPED)
+@pytest.mark.parametrize(
+    "fetch",
+    [
+        lambda spark, t: R.fetch_endpoint_df(spark, t, "popular"),
+        lambda spark, t: R.fetch_all_endpoints(spark, t, endpoints=("popular",)),
+    ],
+    ids=["endpoint", "fan_out"],
+)
+def test_mistyped_record_is_rejected(spark, fetch, bad):
+    """A value the row path rejects is not coerced (1.5 must not load as 1)."""
+    from pyspark.errors import PySparkTypeError
+
+    with pytest.raises(PySparkTypeError):
+        fetch(spark, _single_page([{"id": 0}, bad])).collect()
+
+
+@pytest.mark.parametrize("bad", _MISTYPED)
+def test_distributed_fetch_rejects_mistyped_record(spark, bad):
+    """The executor path runs the same verifier as the driver path."""
+
+    def make_transport():
+        return _single_page([{"id": 0}, bad])
+
+    with pytest.raises(Exception, match="can not accept object"):
+        R.fetch_pages_distributed(spark, make_transport, "u", num_pages=1).collect()

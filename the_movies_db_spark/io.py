@@ -348,54 +348,12 @@ def load_tables(
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_temp_views(
-    spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLES
-) -> None:
-    """Expose the test tables to ``spark.sql`` under their bare names."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 # --- catalog operations (reference parity: etl.py:285-334) -----------------
-
-
-def database_exists(spark: SparkSession, name: str) -> bool:
-    """Parity: ``check_schema_exists`` (/root/reference/utilities/etl.py:315-320)."""
-    return spark.catalog.databaseExists(name)
-
-
-def table_exists(spark: SparkSession, name: str, db: str | None = None) -> bool:
-    """Parity: ``check_table_exists`` (/root/reference/utilities/etl.py:307-313)."""
-    return spark.catalog.tableExists(f"{db}.{name}" if db else name)
-
-
-def create_database(spark: SparkSession, name: str) -> None:
-    """Parity: ``create_schema`` (/root/reference/utilities/etl.py:322-334)."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{name}`")
 
 
 def drop_table(spark: SparkSession, name: str) -> None:
     """Parity: ``drop_table`` (/root/reference/utilities/etl.py:302-305)."""
     spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-
-
-def list_columns(spark: SparkSession, df_or_table: DataFrame | str) -> list[dict[str, str]]:
-    """Column-properties records, parity with ``get_column_info``
-    (/root/reference/utilities/etl.py:292-300, queries.py:6-34) which
-    reads ``information_schema.columns`` ordered by ordinal position.
-    Here it is just the schema — no probe table, no SQL.
-    """
-    if isinstance(df_or_table, str):
-        spark = SparkSession.getActiveSession()
-        assert spark is not None
-        return [
-            {"column_name": c.name, "data_type": c.dataType}
-            for c in spark.catalog.listColumns(df_or_table)
-        ]
-    return [
-        {"column_name": f.name, "data_type": f.dataType.simpleString()}
-        for f in df_or_table.schema.fields
-    ]
 
 
 def write_table(

@@ -17,9 +17,20 @@ as engine parameters:
 - **driver or executor fetch**: ``fetch_endpoint_df`` builds the
   DataFrame driver-side (fine for ≤10k rows/endpoint — the reference's
   actual scale); ``fetch_pages_distributed`` parallelizes page fetches
-  across executors via ``mapInPandas`` over a page-id DataFrame — the
+  across executors via ``mapInArrow`` over a page-id DataFrame — the
   shape you'd use for millions of pages, with per-executor politeness
   sleeps standing in for a token bucket (D2).
+
+Arrow-native ingest: both paths turn fetched records into Arrow with
+one builder, ``_records_table``. It first runs Spark's own row
+verifier (the check ``createDataFrame(rows, verifySchema=True)``
+runs), because ``pa.Table.from_pylist`` alone silently truncates a
+float into an integer column; then it builds the table against the
+Arrow form of the schema, which keeps a NULL next to a bigint exact
+(pandas would turn the column into float64). Driver-side, the tables
+of all endpoints enter the plan through a single
+``createDataFrame(table, schema)``: one ``LocalRelation`` of Arrow
+batches, with no Python-row RDD for the first job to deserialize.
 
 Typed landing schema: the reference let pandas/SQLAlchemy guess types
 via a probe table (etl.py:204-210); here the movie record schema is
@@ -33,8 +44,10 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -44,6 +57,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    _make_type_verifier,
 )
 
 Transport = Callable[[str, dict], dict]
@@ -68,6 +82,7 @@ MOVIE_SCHEMA = StructType(
 )
 
 ENDPOINTS = ("popular", "top_rated", "now_playing", "upcoming")  # themovies.py:133
+BASE_URL = "https://api.themoviedb.org/3/movie"
 
 
 class ApiError(RuntimeError):
@@ -117,41 +132,68 @@ def fetch_pages(
         page += 1
 
 
+def _records_table(rows: list[dict], schema: StructType) -> pa.Table:
+    """Record dicts → Arrow table of ``schema``: the one record builder
+    of the driver and executor paths. Every row first passes Spark's
+    own verifier, so a value ``createDataFrame(rows, schema)`` would
+    reject (``1.5`` for a bigint, ``"12"`` for a count, ``1`` for a
+    boolean) is still rejected rather than coerced by Arrow. Keys
+    outside ``schema`` are ignored and missing ones load as NULL."""
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+
+
+def _fetch_endpoint_table(
+    transport: Transport,
+    endpoint: str,
+    schema: StructType,
+    base_url: str = BASE_URL,
+    max_pages: int = 500,
+    **kwargs,
+) -> pa.Table:
+    rows = list(fetch_pages(transport, f"{base_url}/{endpoint}", max_pages, **kwargs))
+    if not rows:  # reference P8 empty-input guard (themovies.py:60-61)
+        raise ValueError(f"no rows returned for endpoint {endpoint!r}")
+    return _records_table(rows, schema)
+
+
 def fetch_endpoint_df(
     spark: SparkSession,
     transport: Transport,
     endpoint: str,
-    base_url: str = "https://api.themoviedb.org/3/movie",
+    base_url: str = BASE_URL,
     max_pages: int = 500,
     schema: StructType = MOVIE_SCHEMA,
     **kwargs,
 ) -> DataFrame:
-    """Driver-side fetch → typed DataFrame (right for ≤10k rows/endpoint)."""
-    rows = list(fetch_pages(transport, f"{base_url}/{endpoint}", max_pages, **kwargs))
-    if not rows:  # reference P8 empty-input guard (themovies.py:60-61)
-        raise ValueError(f"no rows returned for endpoint {endpoint!r}")
-    normalized = [{f.name: r.get(f.name) for f in schema.fields} for r in rows]
-    return spark.createDataFrame(normalized, schema)
+    """Driver-side fetch → typed DataFrame (right for ≤10k rows/endpoint).
+    The records are verified and built into one Arrow table
+    (``_records_table``), which enters the plan as a ``LocalRelation``."""
+    table = _fetch_endpoint_table(transport, endpoint, schema, base_url, max_pages, **kwargs)
+    return spark.createDataFrame(table, schema)
 
 
 def fetch_all_endpoints(
     spark: SparkSession,
     transport: Transport,
     endpoints: Sequence[str] = ENDPOINTS,
+    schema: StructType = MOVIE_SCHEMA,
     **kwargs,
 ) -> DataFrame:
     """Per-endpoint fan-out (reference D1 dynamic task mapping,
-    themovies.py:133-148) → one unioned DataFrame tagged by endpoint."""
-    dfs = [
-        fetch_endpoint_df(spark, transport, e, **kwargs).withColumn(
-            "endpoint", F.lit(e)
-        )
-        for e in endpoints
-    ]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
+    themovies.py:133-148) → one DataFrame tagged by a non-nullable
+    ``endpoint`` column. The endpoints' Arrow tables are concatenated
+    and handed to Spark in a single ``createDataFrame``."""
+    tag = StructField("endpoint", StringType(), nullable=False)
+    tables = []
+    for e in endpoints:
+        t = _fetch_endpoint_table(transport, e, schema, **kwargs)
+        tables.append(t.append_column(tag.name, pa.array([e] * t.num_rows, pa.string())))
+    return spark.createDataFrame(
+        pa.concat_tables(tables), StructType([*schema.fields, tag])
+    )
 
 
 class TokenBucket:
@@ -198,9 +240,11 @@ def fetch_pages_distributed(
     requests_per_sec: float | None = None,
 ) -> DataFrame:
     """Executor-side page fetch: parallelize page ids, fetch per
-    partition via mapInPandas. ``make_transport`` must be picklable
+    partition via mapInArrow. ``make_transport`` must be picklable
     (e.g. a module-level factory) — each executor builds its own
-    session.
+    session. Each page's records go through ``_records_table``, the
+    same verifier and Arrow builder as the driver path, so a bigint
+    stays exact next to a NULL and a mistyped value is rejected.
 
     Rate limiting (D2): ``requests_per_sec`` is the GLOBAL ceiling;
     each task runs a token bucket at ``requests_per_sec /
@@ -210,8 +254,6 @@ def fetch_pages_distributed(
     scale because the scheduler caps concurrent tasks at the partition
     count). ``politeness_s`` is the legacy fixed sleep, kept for
     parity with the reference's behavior."""
-    import pandas as pd
-
     pages = spark.range(1, num_pages + 1).withColumnRenamed("id", "page")
     if partitions:
         pages = pages.repartition(partitions)
@@ -219,26 +261,24 @@ def fetch_pages_distributed(
     per_task_rate = (
         requests_per_sec / max(1, n_tasks) if requests_per_sec else None
     )
-    names = [f.name for f in schema.fields]
 
     def fetch(batches):
         transport = make_transport()
         bucket = (
             TokenBucket(per_task_rate, capacity=1.0) if per_task_rate else None
         )
-        for pdf in batches:
+        for batch in batches:
             out = []
-            for page in pdf["page"]:
+            for page in batch.column("page").to_pylist():
                 if bucket is not None:
                     bucket.acquire()
-                payload = transport(url, {"page": int(page)})
-                for r in payload.get("results", []):
-                    out.append({n: r.get(n) for n in names})
+                payload = transport(url, {"page": page})
+                out.extend(payload.get("results", []))
                 if politeness_s:
                     time.sleep(politeness_s)
-            yield pd.DataFrame(out, columns=names)
+            yield from _records_table(out, schema).to_batches()
 
-    return pages.mapInPandas(fetch, schema)
+    return pages.mapInArrow(fetch, schema)
 
 
 def clean_movies(df: DataFrame) -> DataFrame:

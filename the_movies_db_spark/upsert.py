@@ -16,18 +16,17 @@ execute → drop, /root/reference/utilities/etl.py:88-183):
   rows** — the two MERGE branches at queries.py:42-46.
 
 Physical shape at 100 TB: one shuffle of each side on ``pk`` for the
-full-outer sort-merge join (AQE handles skew); if the batch is small
-relative to the target (the common daily-increment case), pass
-``broadcast_batch=True`` and the plan degrades to a broadcast outer
-join with NO shuffle of the target. With a transactional table format
-(Delta/Iceberg) this maps to native ``MERGE INTO``; on plain Parquet,
-every writer of a versioned table commits through ``rewrite_table``
-(or, when it holds the writer lease itself, ``_publish``): write a
-complete new version directory, then flip an atomic pointer file
-(manifest-guarded swap — a crash at any point leaves the previous
-version readable; see the versioned-table section below). The
-version-dir layout is private to this module, so swapping in a
-transactional format means replacing those two functions.
+full-outer join (AQE handles skew). Spark cannot broadcast either side
+of a full outer join, so the whole target is exchanged even when the
+batch is small (the common daily-increment case). With a transactional
+table format (Delta/Iceberg) this maps to native ``MERGE INTO``; on
+plain Parquet, every writer of a versioned table commits through
+``rewrite_table`` (or, when it holds the writer lease itself,
+``_publish``): write a complete new version directory, then flip an
+atomic pointer file (manifest-guarded swap — a crash at any point
+leaves the previous version readable; see the versioned-table section
+below). The version-dir layout is private to this module, so swapping
+in a transactional format means replacing those two functions.
 """
 
 from __future__ import annotations
@@ -109,7 +108,6 @@ def merge_upsert(
     order_col: str | None = AUDIT_COLUMN,
     audit_col: str = AUDIT_COLUMN,
     evolve: bool = True,
-    broadcast_batch: bool = False,
 ) -> DataFrame:
     """SCD-type-1 MERGE as a single lazy plan.
 
@@ -123,8 +121,6 @@ def merge_upsert(
         target, batch = reconcile(target, batch)
     if order_col is not None and order_col in batch.columns:
         batch = keep_latest(batch, keys, order_col)
-    if broadcast_batch:
-        batch = F.broadcast(batch)
     non_key_cols = [c for c in target.columns if c not in keys]
     return conditional_merge(
         target,
