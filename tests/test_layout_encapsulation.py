@@ -1,5 +1,6 @@
 """Layout encapsulation: only ``upsert.py`` knows the versioned-table
-layout (version-dir naming, the ``_CURRENT`` pointer, the commit step).
+layout (version-dir naming, the ``_CURRENT`` pointer, the commit step)
+and stages or commits a version.
 
 Every other module commits through ``upsert.rewrite_table``; if one
 imports or reaches into the layout helpers, swapping the table format
@@ -18,6 +19,9 @@ LAYOUT_NAMES = {
     "_current_version",
     "_VERSION_RE",
     "CURRENT_POINTER",
+    "_write_version",
+    "_commit",
+    "_publish",
 }
 
 

@@ -284,22 +284,23 @@ def test_mor_intra_batch_ties_resolve_last_row_wins(spark, tmp_path):
         assert got == [(1, "last")]
 
 
-def test_mor_compact_crash_safety_via_pointer(spark, tmp_path):
+def test_mor_compact_crash_safety_via_pointer(spark, tmp_path, monkeypatch):
     """compact_mor is crash-safe at every point (round-12 advice: the
     old base-dir rename pair could strand the table with NO base).
-    Simulate both crash windows against the _BASE-pointer design:
-    (a) crash AFTER the new base is written but BEFORE the pointer
-    flip -> reader sees old base + intact deltas (consistent), and the
-    next compaction sweeps the orphan dir; (b) crash AFTER the flip
-    but BEFORE delta removal -> deltas re-apply idempotently."""
+    Drive the real compaction into both crash windows: (a) crash AFTER
+    the new base version is written but BEFORE the pointer flip ->
+    reader sees old base + intact deltas (consistent), and the next
+    compaction retires the orphan version; (b) crash AFTER the flip but
+    BEFORE delta removal -> deltas re-apply idempotently."""
     import os
 
+    import pytest
+
+    import the_movies_db_spark.upsert as U
     from the_movies_db_spark.upsert import (
-        _MOR_PTR,
-        _commit_version,
-        _mor_base_dir,
         append_mor_delta,
         compact_mor,
+        list_versions,
         read_mor,
         write_mor_base,
     )
@@ -318,29 +319,43 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path):
     append_mor_delta(spark, root, delta)
     expect = {(1, "u1"), (9, "u9")} | {(i, f"v{i}") for i in range(2, 6)}
 
-    # (a) crash before the pointer flip: orphan base-2 exists, pointer
-    # still points at base-1, deltas intact
-    merged = read_mor(spark, root, "pk")
-    merged.write.mode("overwrite").parquet(os.path.join(root, "base-2"))
-    assert _mor_base_dir(root).endswith("base-1")
+    class Crash(RuntimeError):
+        pass
+
+    def crash():
+        raise Crash()
+
+    # (a) crash before the pointer flip: an orphan base version exists,
+    # the pointer still names the old base, deltas intact
+    base = U._current_version(root)
+    with monkeypatch.context() as m, pytest.raises(Crash):
+        m.setattr(U, "_before_pointer_flip", crash)
+        compact_mor(spark, root, "pk")
+    assert U._current_version(root) == base
+    assert len(list_versions(root)) == 2
     assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
-    # recovery = just run compaction again: sweeps the orphan, folds
+    # recovery = just run compaction again: retires the orphan, folds
     n = compact_mor(spark, root, "pk")
     assert n == 1
     assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
     assert not glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-    live = _mor_base_dir(root)
-    assert [os.path.basename(d) for d in glob.glob(os.path.join(root, "base-*"))] == [
-        os.path.basename(live)
-    ]
+    assert list_versions(root) == [U._current_version(root)]
 
-    # (b) crash after the flip, before delta removal: re-append the
-    # same logical delta, write base-N+1, flip, leave deltas in place
+    # (b) crash after the flip, before delta removal: the new base is
+    # current and the consumed deltas are still in place
     append_mor_delta(spark, root, delta)
-    merged = read_mor(spark, root, "pk")
-    nxt = "base-99"
-    merged.write.mode("overwrite").parquet(os.path.join(root, nxt))
-    _commit_version(root, nxt, _MOR_PTR)
+    base = U._current_version(root)
+    real_remove = os.remove
+
+    def remove(p, *a, **k):
+        if os.path.basename(p).startswith("delta-"):
+            raise Crash()
+        return real_remove(p, *a, **k)
+
+    with monkeypatch.context() as m, pytest.raises(Crash):
+        m.setattr(os, "remove", remove)
+        compact_mor(spark, root, "pk")
+    assert U._current_version(root) != base
     # deltas still present and re-apply idempotently over the new base
     assert glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
     assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
@@ -348,3 +363,4 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path):
     compact_mor(spark, root, "pk")
     assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
     assert not glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
+    assert list_versions(root) == [U._current_version(root)]

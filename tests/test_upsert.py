@@ -133,8 +133,20 @@ def test_empty_batch_is_identity(spark, n):
     assert out[1].val == "a"
 
 
-def test_write_upsert_partitioned_prunes(spark, tmp_path):
-    from the_movies_db_spark.upsert import write_upsert_partitioned
+def _partition_inodes(data_dir):
+    import os
+
+    return {
+        d: {f: os.stat(os.path.join(data_dir, d, f)).st_ino
+            for f in os.listdir(os.path.join(data_dir, d))}
+        for d in os.listdir(data_dir) if d.startswith("day=")
+    }
+
+
+def test_write_upsert_partitioned_prunes(spark, tmp_path, monkeypatch):
+    import re
+
+    import the_movies_db_spark.upsert as U
 
     path = str(tmp_path / "ptbl")
     base = spark.createDataFrame(
@@ -142,35 +154,81 @@ def test_write_upsert_partitioned_prunes(spark, tmp_path):
          (3, "c", "2024-01-02", 1), (4, "d", "2024-01-03", 1)],
         "pk long, v string, day string, ver int",
     )
-    write_upsert_partitioned(spark, path, base, "pk", "day", order_col="ver")
+    U.write_upsert_partitioned(spark, path, base, "pk", "day", order_col="ver")
+    before = _partition_inodes(U.table_data_path(path))
 
-    import os
-    sig_before = {
-        d: sorted(os.listdir(f"{path}/{d}"))
-        for d in os.listdir(path) if d.startswith("day=")
-    }
-
+    # capture the target side the merge reads (the touched partitions)
+    merged_targets = []
+    real_merge = U.merge_upsert
+    monkeypatch.setattr(
+        U, "merge_upsert",
+        lambda t, *a, **k: merged_targets.append(t) or real_merge(t, *a, **k),
+    )
     # batch touches only 2024-01-01: update pk=2, insert pk=5
     batch = spark.createDataFrame(
         [(2, "B2", "2024-01-01", 2), (5, "e", "2024-01-01", 2)],
         "pk long, v string, day string, ver int",
     )
-    touched = write_upsert_partitioned(spark, path, batch, "pk", "day", order_col="ver")
+    touched = U.write_upsert_partitioned(
+        spark, path, batch, "pk", "day", order_col="ver"
+    )
     assert touched == ["2024-01-01"]
+    # the touched-partition read is pruned by a partition filter
+    plan = merged_targets[0]._jdf.queryExecution().executedPlan().toString()
+    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+    assert "day" in pf and "2024-01-01" in pf
 
-    got = {r.pk: (r.v, str(r.day)) for r in spark.read.parquet(path).collect()}
+    got = {r.pk: (r.v, str(r.day)) for r in U.read_table(spark, path).collect()}
     assert got == {
         1: ("a", "2024-01-01"), 2: ("B2", "2024-01-01"), 5: ("e", "2024-01-01"),
         3: ("c", "2024-01-02"), 4: ("d", "2024-01-03"),
     }
-    # untouched partition directories were not rewritten
-    sig_after = {
-        d: sorted(os.listdir(f"{path}/{d}"))
-        for d in os.listdir(path) if d.startswith("day=")
-    }
-    assert sig_after["day=2024-01-02"] == sig_before["day=2024-01-02"]
-    assert sig_after["day=2024-01-03"] == sig_before["day=2024-01-03"]
-    assert sig_after["day=2024-01-01"] != sig_before["day=2024-01-01"]
+    # untouched partitions were not rewritten: every file of the new
+    # version is the previous version's file (same inode, hard link)
+    after = _partition_inodes(U.table_data_path(path))
+    assert after["day=2024-01-02"] == before["day=2024-01-02"]
+    assert after["day=2024-01-03"] == before["day=2024-01-03"]
+    assert not set(after["day=2024-01-01"]) & set(before["day=2024-01-01"])
+    assert U.list_versions(path) == [U._current_version(path)]
+
+
+def test_partitioned_upsert_crash_before_flip_keeps_previous_version(
+    spark, tmp_path
+):
+    """The partitioned upsert commits through the shared commit tail: a
+    crash after the new version is staged but before the pointer flip
+    leaves the previous version current, readable and unchanged."""
+    import the_movies_db_spark.upsert as U
+
+    path = str(tmp_path / "ptbl")
+    base = spark.createDataFrame(
+        [(1, "a", "2024-01-01", 1), (2, "b", "2024-01-02", 1)],
+        "pk long, v string, day string, ver int",
+    )
+    U.write_upsert_partitioned(spark, path, base, "pk", "day", order_col="ver")
+    before = U._current_version(path)
+    rows_before = sorted(tuple(r) for r in U.read_table(spark, path).collect())
+
+    def crash():
+        raise RuntimeError("simulated crash before pointer flip")
+
+    batch = spark.createDataFrame(
+        [(1, "A", "2024-01-01", 2), (3, "c", "2024-01-03", 2)],
+        "pk long, v string, day string, ver int",
+    )
+    U._before_pointer_flip = crash
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            U.write_upsert_partitioned(
+                spark, path, batch, "pk", "day", order_col="ver"
+            )
+    finally:
+        U._before_pointer_flip = None
+    assert U._current_version(path) == before
+    assert (
+        sorted(tuple(r) for r in U.read_table(spark, path).collect())
+        == rows_before
+    )
 
 
 def test_merge_upsert_empty_batch_is_identity(spark):
@@ -246,6 +304,26 @@ def test_write_upsert_crash_before_commit_keeps_old_version(spark, tmp_path):
     U.write_upsert(spark, path, _df(spark, [(2, "B", T1), (3, "c", T1)]), "id")
     final = {k: v.val for k, v in _as_map(U.read_table(spark, path)).items()}
     assert final == {1: "a", 2: "B", 3: "c"}
+
+
+def test_crash_before_first_commit_leaves_empty_table(spark, tmp_path):
+    """A version staged by a first commit that crashed before the
+    pointer flip is not table data: the retry must not merge it in."""
+    from the_movies_db_spark import upsert as U
+
+    path = str(tmp_path / "tbl")
+
+    def crash():
+        raise RuntimeError("simulated crash before pointer flip")
+
+    U._before_pointer_flip = crash
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            U.write_upsert(spark, path, _df(spark, [(1, "a", T0)]), "id")
+    finally:
+        U._before_pointer_flip = None
+    U.write_upsert(spark, path, _df(spark, [(2, "b", T0)]), "id")
+    assert _as_map(U.read_table(spark, path)).keys() == {2}
 
 
 def test_vacuum_keeps_current_version(spark, tmp_path):
@@ -401,25 +479,32 @@ def test_crash_mid_write_leaves_valid_pointer_and_stale_lease_recovers(
     assert _as_map(U.read_table(spark, root)).keys() == {1, 3}
 
 
-def test_delete_keys_rejects_partitioned_layout(spark, tmp_path):
-    """delete_keys assumes the flat versioned-dir layout and the
-    INTERNAL writer lease; calling it on a write_upsert_partitioned
-    table (external sibling lock, flat partition dirs, no _CURRENT
-    pointer) must be rejected up front — committing a version dir into
-    the flat root would silently change the table layout."""
-    import pytest
+def test_delete_keys_on_partitioned_table(spark, tmp_path):
+    """delete_keys on a write_upsert_partitioned table: the rows go,
+    the new version is still partitioned by ``day``, and the previous
+    version still returns them while retained."""
+    import os
 
-    from the_movies_db_spark.upsert import delete_keys, write_upsert_partitioned
+    import the_movies_db_spark.upsert as U
 
     path = str(tmp_path / "ptbl")
     base = spark.createDataFrame(
-        [(1, "a", "2024-01-01", 1), (2, "b", "2024-01-02", 1)],
+        [(1, "a", "2024-01-01", 1), (2, "b", "2024-01-02", 1),
+         (3, "c", "2024-01-01", 1)],
         "pk long, v string, day string, ver int",
     )
-    write_upsert_partitioned(spark, path, base, "pk", "day", order_col="ver")
+    U.write_upsert_partitioned(spark, path, base, "pk", "day", order_col="ver")
+    prev = U._current_version(path)
     doomed = spark.createDataFrame([(1,)], "pk long")
-    with pytest.raises(ValueError, match="flat versioned-dir"):
-        delete_keys(spark, path, doomed, "pk")
+    assert U.delete_keys(spark, path, doomed, "pk", keep_versions=2) == 1
+    assert {r.pk for r in U.read_table(spark, path).collect()} == {2, 3}
+    data = U.table_data_path(path)
+    assert sorted(
+        d for d in os.listdir(data) if not d.startswith(("_", "."))
+    ) == ["day=2024-01-01", "day=2024-01-02"]
+    assert {r.pk for r in U.read_table(spark, path, version=prev).collect()} == {
+        1, 2, 3,
+    }
 
 
 def test_write_audit_publish_null_predicate_quarantines(spark, tmp_path):
@@ -444,6 +529,26 @@ def test_write_audit_publish_null_predicate_quarantines(spark, tmp_path):
     qdir = f"{root}/_quarantine/{res['staged_version']}"
     quarantined = {r.id for r in spark.read.parquet(qdir).collect()}
     assert quarantined == {2, 3}
+
+
+def test_write_audit_publish_vacuums_to_published_version(spark, tmp_path):
+    """Each publish is a commit: staged and superseded versions are
+    vacuumed, the quarantine sidecar stays."""
+    import os
+
+    from the_movies_db_spark import upsert as U
+
+    root = str(tmp_path / "wap")
+    ok = spark.createDataFrame([(1, 100), (2, 200)], "id long, cents long")
+    assert U.write_audit_publish(spark, ok, root, "cents <= 0")["audit_passed"]
+    bad = spark.createDataFrame([(1, 100), (2, -5)], "id long, cents long")
+    res = U.write_audit_publish(spark, bad, root, "cents <= 0")
+    assert not res["audit_passed"]
+    assert U.list_versions(root) == [res["published_version"]]
+    assert {r.id for r in U.read_table(spark, root).collect()} == {1}
+    assert os.path.isdir(
+        os.path.join(root, "_quarantine", res["staged_version"])
+    )
 
 
 def test_merge_on_read_lifecycle(spark, tmp_path):

@@ -7,10 +7,6 @@ capabilities are the Spark catalog API — no SQL string synthesis, no
 injection surface (reference bug §2.13.5), no probe temp tables.
 
 Scale notes:
-- ``load_tables`` returns *lazy* DataFrames; nothing is read until an
-  action, so column pruning / predicate pushdown reach the Parquet
-  footers (verify with ``df.explain``: ``PushedFilters`` /
-  ``ReadSchema``).
 - ``write_table`` partitions/buckets are caller-declared: at 100 TB a
   fact table is written ``partitionBy`` a low-cardinality column
   (date) and optionally bucketed by join key so downstream joins
@@ -340,20 +336,6 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
         except Exception:  # non-file sources: keep the repartition
             pass
     return df.repartition(target)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-# --- catalog operations (reference parity: etl.py:285-334) -----------------
-
-
-def drop_table(spark: SparkSession, name: str) -> None:
-    """Parity: ``drop_table`` (/root/reference/utilities/etl.py:302-305)."""
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
 
 
 def write_table(

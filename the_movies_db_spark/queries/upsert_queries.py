@@ -523,9 +523,11 @@ def upsert_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "correctness gate: a REAL partitionBy(month) table is written, "
         "a batch touching only January/June partitions is merged via "
         "write_upsert_partitioned (read with partition-pruning IN "
-        "filter, dynamic-overwrite of ONLY those directories), and the "
-        "whole table reads back equal to the global-merge oracle — "
-        "proving untouched partitions survived byte-for-byte."
+        "filter, ONLY those directories rewritten into the next "
+        "version, every other partition hard-linked into it), and the "
+        "committed version reads back through read_table equal to the "
+        "global-merge oracle — proving untouched partitions survived "
+        "byte-for-byte."
     ),
 )
 def upsert_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,11 +535,12 @@ def upsert_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes (100 TB): the batch's distinct partition values prune
     the target scan (a daily increment reads 0.1% of a date-
-    partitioned table); dynamic partition overwrite replaces only
-    those directories. The full-outer merge shuffles only the touched
+    partitioned table); only those directories are rewritten into the
+    next version, the rest are hard-linked into it, and one pointer
+    flip commits it. The full-outer merge shuffles only the touched
     partitions' rows."""
     from the_movies_db_spark.io import scratch_dir
-    from the_movies_db_spark.upsert import write_upsert_partitioned
+    from the_movies_db_spark.upsert import read_table, write_upsert_partitioned
 
     o = load_table(spark, sf_dir, "orders")
     month = F.date_format("o_orderdate", "yyyy-MM")
@@ -576,7 +579,7 @@ def upsert_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_upsert_partitioned(
         spark, tbl, batch, pk="o_orderkey", partition_col="month"
     )
-    merged = spark.read.parquet(tbl)
+    merged = read_table(spark, tbl)
     return merged.groupBy("month").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum(F.expr("CAST(round(price * 100) AS BIGINT)"))
@@ -1131,9 +1134,9 @@ def upsert_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the copy-on-write versioned tables): the base is written "
         "once, two delta logs append O(batch) upserts and deletes "
         "(one resurrecting previously deleted keys, pinning "
-        "latest-op-wins across logs), and the READER merges — one "
-        "window over the delta grain, one broadcast anti-join of the "
-        "base, one union. The oracle replays the identical merge in "
+        "latest-op-wins across logs), and the READER merges the "
+        "base's current version — one window over the delta grain, one "
+        "anti-join of the base, one union. The oracle replays the identical merge in "
         "SQL, so the hash verifies insert/update/delete/resurrect "
         "semantics end to end."
     ),
@@ -1143,9 +1146,11 @@ def upsert_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes (100 TB): ingest cost is O(delta file) with no base
     rewrite; the scan pays one window over deltas (tiny between
-    compactions) and a broadcast anti-join; compact_mor folds the
-    logs back when the delta share grows. This is the ingest-heavy
-    complement to write_upsert's read-optimized COW versions."""
+    compactions) and an anti-join AQE broadcasts when the touched set
+    is small; compact_mor commits the merged view as the base's next
+    version when the delta share grows. The base is an ordinary
+    versioned table, the ingest-heavy complement to write_upsert's
+    read-optimized COW versions."""
     from the_movies_db_spark.io import scratch_dir
     from the_movies_db_spark.upsert import (
         append_mor_delta,

@@ -19,14 +19,18 @@ Physical shape at 100 TB: one shuffle of each side on ``pk`` for the
 full-outer join (AQE handles skew). Spark cannot broadcast either side
 of a full outer join, so the whole target is exchanged even when the
 batch is small (the common daily-increment case). With a transactional
-table format (Delta/Iceberg) this maps to native ``MERGE INTO``; on
-plain Parquet, every writer of a versioned table commits through
-``rewrite_table`` (or, when it holds the writer lease itself,
-``_publish``): write a complete new version directory, then flip an
-atomic pointer file (manifest-guarded swap — a crash at any point
-leaves the previous version readable; see the versioned-table section
-below). The version-dir layout is private to this module, so swapping
-in a transactional format means replacing those two functions.
+table format (Delta/Iceberg) this maps to native ``MERGE INTO``.
+
+On plain Parquet every table this module writes — copy-on-write,
+partitioned, the merge-on-read base, write-audit-publish — has ONE
+layout: complete ``vNNNNNNNN`` version directories behind an atomic
+``_CURRENT`` pointer. Every writer commits through ``rewrite_table``
+(or, when it holds the writer lease itself, ``_write_version`` +
+``_commit``): write the new version directory, then flip the pointer
+(manifest-guarded swap — a crash at any point leaves the previous
+version readable; see the versioned-table section below). The layout
+is private to this module, so swapping in a transactional format means
+replacing those functions.
 """
 
 from __future__ import annotations
@@ -140,12 +144,19 @@ def merge_upsert(
 # the flip itself is a single atomic os.replace; orphaned version dirs
 # are garbage, removed by `vacuum_table`.
 #
+# A partitioned table is the same layout with `col=value` directories
+# inside each version dir; `_write_version` reads the partitioning off
+# the current version, so every writer keeps it without being told.
+#
 # The commit protocol lives ONLY here. `rewrite_table` (take the lease,
 # read current, transform, publish) is the public commit path; writers
-# that need the lease for more than one read — `delete_keys`, the
-# branch writers — hold it themselves and call `_publish` (next version
-# name → parquet write → pre-flip hook → pointer flip → vacuum). No
-# other module knows the version-dir naming or the pointer file.
+# that need the lease for more than one read hold it themselves and
+# call `_publish` = `_write_version` (next version name → parquet
+# write) + `_commit` (pre-flip hook → pointer flip → vacuum), or the
+# two halves when they must act between them (the partitioned upsert
+# links untouched partitions, write-audit-publish audits the staged
+# version). No other module knows the version-dir naming or the
+# pointer file.
 
 CURRENT_POINTER = "_CURRENT"
 _VERSION_RE = re.compile(r"v\d{8}$")
@@ -169,7 +180,8 @@ _before_pointer_flip = None
 # replace this whole block with their commit-log CAS.
 
 WRITER_LOCK = "_WRITER_LOCK"
-DEFAULT_LEASE_SECONDS = 600.0
+LEASE_SECONDS = 600.0
+_LEASE_POLL_SECONDS = 0.05
 
 
 class WriterLockError(RuntimeError):
@@ -177,13 +189,7 @@ class WriterLockError(RuntimeError):
 
 
 @contextmanager
-def writer_lock(
-    target_path: str,
-    lease_seconds: float = DEFAULT_LEASE_SECONDS,
-    wait_seconds: float = 0.0,
-    poll_seconds: float = 0.05,
-    external: bool = False,
-):
+def writer_lock(target_path: str, wait_seconds: float = 0.0):
     """Exclusive writer lease on a versioned table root.
 
     Acquisition is an atomic ``O_CREAT|O_EXCL`` create of
@@ -191,23 +197,11 @@ def writer_lock(
     ``wait_seconds=0`` (default) raises :class:`WriterLockError`
     immediately when the lease is held — concurrent writers are
     EXCLUDED, not queued; pass a wait to serialize instead. A lease
-    older than ``lease_seconds`` is presumed crashed and stolen: the
-    stale file is renamed to a per-pid tombstone (only one stealer's
-    rename succeeds) and acquisition retries.
-
-    ``external=True`` places the lease BESIDE the table root
-    (``<root>.__WRITER_LOCK``) instead of inside it — required when
-    the protected write may replace the root directory itself (the
-    partitioned table's initial static overwrite)."""
-    if external:
-        base = os.path.dirname(os.path.abspath(target_path.rstrip("/")))
-        os.makedirs(base, exist_ok=True)
-        lock = target_path.rstrip("/") + ".__" + WRITER_LOCK
-        tomb_base = lock
-    else:
-        os.makedirs(target_path, exist_ok=True)
-        lock = os.path.join(target_path, WRITER_LOCK)
-        tomb_base = os.path.join(target_path, f".{WRITER_LOCK}")
+    older than :data:`LEASE_SECONDS` is presumed crashed and stolen:
+    the stale file is renamed to a per-pid tombstone (only one
+    stealer's rename succeeds) and acquisition retries."""
+    os.makedirs(target_path, exist_ok=True)
+    lock = os.path.join(target_path, WRITER_LOCK)
     deadline = time.monotonic() + wait_seconds
     while True:
         try:
@@ -222,8 +216,10 @@ def writer_lock(
                 age = time.time() - os.stat(lock).st_mtime
             except FileNotFoundError:
                 continue  # released between create and stat — retry now
-            if age > lease_seconds:
-                tomb = f"{tomb_base}.stale.{os.getpid()}"
+            if age > LEASE_SECONDS:
+                tomb = os.path.join(
+                    target_path, f".{WRITER_LOCK}.stale.{os.getpid()}"
+                )
                 try:
                     os.rename(lock, tomb)  # CAS: one stealer wins
                     os.unlink(tomb)
@@ -233,11 +229,10 @@ def writer_lock(
             if time.monotonic() >= deadline:
                 raise WriterLockError(
                     f"writer lease held on {target_path} "
-                    f"(age {age:.1f}s < lease {lease_seconds}s); "
-                    "single-writer contract — retry with wait_seconds "
-                    "or raise lease_seconds"
+                    f"(age {age:.1f}s < lease {LEASE_SECONDS}s); "
+                    "single-writer contract — retry with wait_seconds"
                 ) from None
-            time.sleep(poll_seconds)
+            time.sleep(_LEASE_POLL_SECONDS)
     try:
         yield
     finally:
@@ -247,10 +242,8 @@ def writer_lock(
             pass  # lease was stolen mid-write (we exceeded it)
 
 
-def _current_version(
-    target_path: str, pointer: str = CURRENT_POINTER
-) -> str | None:
-    f = os.path.join(target_path, pointer)
+def _current_version(target_path: str) -> str | None:
+    f = os.path.join(target_path, CURRENT_POINTER)
     if not os.path.exists(f):
         return None
     with open(f) as fh:
@@ -264,6 +257,19 @@ def table_data_path(target_path: str) -> str:
     a legacy flat-Parquet dir."""
     v = _current_version(target_path)
     return os.path.join(target_path, v) if v else target_path
+
+
+def _data_dir(target_path: str) -> str | None:
+    """:func:`table_data_path`, or ``None`` when the table holds no
+    data yet. A legacy flat-Parquet root holding data files counts as
+    data; version dirs staged before a first commit do not."""
+    data = table_data_path(target_path)
+    if data != target_path or any(
+        not (f.startswith((".", "_")) or _VERSION_RE.fullmatch(f))
+        for f in os.listdir(target_path)
+    ):
+        return data
+    return None
 
 
 def read_table(
@@ -340,24 +346,48 @@ def vacuum_table(target_path: str, keep: int = 1) -> list[str]:
     return removed
 
 
-def _write_version(target_path: str, df: DataFrame) -> str:
+def _write_version(
+    target_path: str, df: DataFrame, partition_col: str | None = None
+) -> str:
     """Write ``df`` into the next version dir — staged, not yet
-    current. Caller holds the writer lease."""
+    current — and return its name. The version is written
+    ``partitionBy(partition_col)``; with none given, it keeps the
+    partitioning of the current data dir (its ``col=value``
+    subdirectories). Caller holds the writer lease."""
     version = _next_version_name(target_path)
-    df.write.mode("overwrite").parquet(os.path.join(target_path, version))
+    if partition_col is not None:
+        parts = [partition_col]
+    else:
+        parts = sorted(
+            {
+                d.split("=", 1)[0]
+                for d in os.listdir(table_data_path(target_path))
+                if "=" in d
+            }
+        )
+    writer = df.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(os.path.join(target_path, version))
     return version
 
 
-def _publish(target_path: str, df: DataFrame, keep_versions: int) -> str:
-    """Commit ``df`` as the table's new current version and return its
-    name: write the version dir, run the pre-flip hook, flip the
-    pointer, vacuum to ``keep_versions``. Caller holds the writer
+def _commit(target_path: str, version: str, keep_versions: int) -> None:
+    """Make the staged ``version`` current: run the pre-flip hook, flip
+    the pointer, vacuum to ``keep_versions``. Caller holds the writer
     lease."""
-    version = _write_version(target_path, df)
     if _before_pointer_flip is not None:
         _before_pointer_flip()
     _commit_version(target_path, version)
     vacuum_table(target_path, keep=keep_versions)
+
+
+def _publish(target_path: str, df: DataFrame, keep_versions: int) -> str:
+    """Commit ``df`` as the table's new current version and return its
+    name (:func:`_write_version` then :func:`_commit`). Caller holds
+    the writer lease."""
+    version = _write_version(target_path, df)
+    _commit(target_path, version, keep_versions)
     return version
 
 
@@ -378,14 +408,8 @@ def rewrite_table(
     ``lock_wait=0`` raises :class:`WriterLockError` at once if another
     writer holds the lease; ``> 0`` serializes behind it."""
     with writer_lock(target_path, wait_seconds=lock_wait):
-        has_data = _current_version(target_path) is not None or any(
-            not f.startswith((".", "_")) for f in os.listdir(target_path)
-        )
-        current = (
-            spark.read.parquet(table_data_path(target_path))
-            if has_data
-            else None
-        )
+        data = _data_dir(target_path)
+        current = spark.read.parquet(data) if data is not None else None
         return _publish(target_path, fn(current), keep_versions)
 
 
@@ -445,22 +469,9 @@ def delete_keys(
     visible to readers, while prior versions remain until the
     retention window (``keep_versions``) vacuums them — after which
     the deletion is durable on disk. Returns the number of rows
-    removed.
-
-    Flat versioned-dir tables ONLY: partitioned tables
-    (:func:`write_upsert_partitioned`) serialize on an external
-    sibling lock and store flat partition dirs — this function's
-    internal lease would not exclude a concurrent partitioned writer,
-    and committing a version dir into the flat root would silently
-    change the table layout, so the mismatch is rejected up front."""
+    removed. A partitioned table stays partitioned (the new version
+    keeps the current version's partitioning)."""
     pks = _key_list(pk)
-    if os.path.isdir(target_path) and _current_version(target_path) is None:
-        raise ValueError(
-            f"delete_keys requires a flat versioned-dir table (no "
-            f"{CURRENT_POINTER} pointer found in {target_path}); for "
-            "partitioned tables delete via write_upsert_partitioned "
-            "with the surviving rows instead"
-        )
     with writer_lock(target_path, wait_seconds=lock_wait):
         target = spark.read.parquet(table_data_path(target_path))
         survivors = target.join(keys.select(*pks).distinct(), pks, "left_anti")
@@ -481,12 +492,13 @@ def write_upsert_partitioned(
     order_col: str | None = AUDIT_COLUMN,
     lock_wait: float = 0.0,
 ) -> list[str]:
-    """Partition-pruned MERGE into a ``partitionBy(partition_col)``
-    parquet table: only the partitions the batch touches are read,
-    merged, and rewritten — the rest of the table is never opened.
-    Runs under the same single-writer lease as :func:`write_upsert`
-    (two concurrent dynamic-overwrite writers on overlapping
-    partitions would interleave file replacements).
+    """Partition-pruned MERGE into a versioned table written
+    ``partitionBy(partition_col)``: only the partitions the batch
+    touches are read, merged, and rewritten — the rest of the table is
+    never opened. Commits a new version under the same writer lease
+    and atomic pointer flip as :func:`write_upsert`, so the commit is
+    all-or-nothing, crash-safe, and readable through
+    :func:`read_table` (time travel and :func:`delete_keys` included).
 
     This is the shape that matters at 100 TB: a daily increment
     touching 3 of 3,000 date partitions reads and rewrites 0.1% of the
@@ -495,61 +507,53 @@ def write_upsert_partitioned(
     so a key never migrates between partitions.
 
     Mechanics: collect the batch's distinct partition values (tiny —
-    it is the partition count, not the row count), read the target
-    with a pushed-down ``IN`` filter over those values (partition
-    pruning skips every other directory), merge, and write back with
-    dynamic partition overwrite so ONLY those directories are
-    replaced. Returns the list of rewritten partition values.
+    it is the partition count, not the row count), read the current
+    version with a pushed-down ``IN`` filter over those values
+    (partition pruning skips every other directory), merge, and write
+    the merged rows into the next version dir. Every partition dir of
+    the current version that the new version lacks is then hard-linked
+    file by file into it, so untouched partitions are never rewritten.
+    Returns the list of rewritten partition values.
     """
     keys = _key_list(pk)
     parts = [
         str(r[0])
         for r in batch.select(partition_col).distinct().collect()
     ]
-    # external lease: the initial static overwrite replaces the root
-    # directory itself, which would delete an in-root lock file
-    with writer_lock(target_path, wait_seconds=lock_wait, external=True):
-        has_data = os.path.exists(target_path) and any(
-            not f.startswith((".", "_")) for f in os.listdir(target_path)
-        )
-        if not has_data:
+    with writer_lock(target_path, wait_seconds=lock_wait):
+        current = _data_dir(target_path)
+        if current is None:
             out = batch
             if order_col is not None and order_col in batch.columns:
                 out = keep_latest(out, keys, order_col)
-            # repartition on the partition column first: partitionBy
-            # from an arbitrarily-partitioned frame writes
-            # tasks x directories small files (the round-13
-            # partition-evolution lesson); clustered, each directory
-            # gets one file
-            out.repartition(F.col(partition_col)).write.mode(
-                "overwrite"
-            ).partitionBy(partition_col).parquet(target_path)
-            return parts
-
-        target = spark.read.parquet(target_path)
-        # partition-column type inference (string dirs → date/int) must
-        # not read as schema drift: align the batch to the target's type
-        batch = batch.withColumn(
-            partition_col,
-            F.col(partition_col).cast(target.schema[partition_col].dataType),
+        else:
+            target = spark.read.parquet(current)
+            # partition-column type inference (string dirs → date/int)
+            # must not read as schema drift: align the batch to the
+            # target's type
+            batch = batch.withColumn(
+                partition_col,
+                F.col(partition_col).cast(target.schema[partition_col].dataType),
+            )
+            affected = target.filter(F.col(partition_col).isin(parts))
+            out = merge_upsert(affected, batch, keys, order_col=order_col)
+        # repartition on the partition column first: partitionBy from
+        # an arbitrarily-partitioned frame writes tasks x directories
+        # small files (the round-13 partition-evolution lesson);
+        # clustered, each directory gets one file
+        version = _write_version(
+            target_path, out.repartition(F.col(partition_col)), partition_col
         )
-        affected = target.filter(F.col(partition_col).isin(parts))
-        merged = merge_upsert(affected, batch, keys, order_col=order_col)
-
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # dynamic mode: "overwrite" replaces only partitions present
-            # in `merged` — untouched directories are left as-is.
-            # repartition on the partition column first (small-files
-            # discipline, same as the initial write)
-            merged.repartition(F.col(partition_col)).write.mode(
-                "overwrite"
-            ).partitionBy(partition_col).parquet(target_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        new = os.path.join(target_path, version)
+        for d in os.listdir(current) if current is not None else []:
+            # an untouched partition: hard-link its files (.crc included)
+            if "=" in d and not os.path.exists(os.path.join(new, d)):
+                shutil.copytree(
+                    os.path.join(current, d),
+                    os.path.join(new, d),
+                    copy_function=os.link,
+                )
+        _commit(target_path, version, keep_versions=1)
         return parts
 
 
@@ -736,8 +740,10 @@ def write_audit_publish(
     audit the staged files, and only then publish. If the audit finds
     rows matching ``bad_predicate``, they are written to a quarantine
     sidecar (``<root>/_quarantine/<staged_version>``) and a CLEANED
-    version is published instead — the staged version stays on disk
-    for debugging until ``vacuum_table`` retires it.
+    version is published instead. Either way the publish is the shared
+    commit tail (pre-flip hook, pointer flip, vacuum to one version),
+    so the staged and previous versions are retired; the quarantine
+    sidecar is not a version and stays.
 
     Returns {staged_version, published_version, n_staged, n_bad,
     n_published, audit_passed}.
@@ -758,7 +764,7 @@ def write_audit_publish(
         bad = staged.filter(f"({bad_predicate}) IS NOT FALSE")
         n_bad = bad.count()
         if n_bad == 0:
-            _commit_version(target_path, staged_v)
+            _commit(target_path, staged_v, keep_versions=1)
             return {
                 "staged_version": staged_v,
                 "published_version": staged_v,
@@ -775,7 +781,7 @@ def write_audit_publish(
         n_published = spark.read.parquet(
             os.path.join(target_path, clean_v)
         ).count()
-        _commit_version(target_path, clean_v)
+        _commit(target_path, clean_v, keep_versions=1)
         return {
             "staged_version": staged_v,
             "published_version": clean_v,
@@ -793,33 +799,28 @@ def write_audit_publish(
 # (Hudi MOR / Iceberg v2 delete files / Delta DVs): writes append tiny
 # DELTA LOGS and the READER merges them against the base — O(delta)
 # ingest, merge cost deferred to scan time, reclaimed by compaction.
-# Layout:  <root>/base/*.parquet
+# Layout:  <root>/_CURRENT, <root>/vNNNNNNNN/   (the base: a versioned table)
 #          <root>/deltas/delta-<seq>.parquet   (op: 'U' upsert / 'D' delete)
 # Delta appends take the same writer lease as the COW path; the seq
 # number orders deltas and is embedded in the file name, so readers
 # need no manifest — latest-op-wins per pk across (base < deltas by seq),
 # and within one delta batch the LAST row wins (``__pos``, frozen at
 # write time, breaks intra-batch ties deterministically).
-# The base lives in versioned dirs (``base-<n>``) behind an atomic
-# ``_BASE`` pointer file, flipped by the same ``_commit_version``
-# (fsync + os.replace) as the COW ``_CURRENT`` pointer — so compaction is crash-safe at EVERY point: the pointer is
-# either old (deltas intact) or new (deltas re-apply idempotently);
-# orphan base dirs from a crash are swept at the next compaction.
+# The base commits through the same `_publish` as every other table, so
+# compaction is crash-safe at EVERY point: the pointer is either old
+# (deltas intact) or new (deltas re-apply idempotently), and the
+# post-flip vacuum retires the old base and any orphan of a crash.
 # ---------------------------------------------------------------------------
 
-_MOR_PTR = "_BASE"
-
-
-def _mor_base_dir(root: str) -> str:
-    # "base": the pre-pointer layout
-    return os.path.join(root, _current_version(root, _MOR_PTR) or "base")
+MOR_OP_COL = "__op"
+# compact once the delta logs outgrow this fraction of the base's bytes
+MOR_MAX_DELTA_FRAC = 0.10
 
 
 def write_mor_base(df: DataFrame, root: str) -> None:
     """Initialize a merge-on-read table: base data, empty delta log."""
-    os.makedirs(root, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(root, "base-1"))
-    _commit_version(root, "base-1", _MOR_PTR)
+    with writer_lock(root):
+        _publish(root, df, keep_versions=1)
     os.makedirs(os.path.join(root, "deltas"), exist_ok=True)
 
 
@@ -832,10 +833,9 @@ def _next_delta_seq(root: str) -> int:
     return max(seqs, default=0) + 1
 
 
-def append_mor_delta(
-    spark: SparkSession, root: str, batch: DataFrame, op_col: str = "__op"
-) -> int:
-    """Append one delta log (rows carry ``op_col``: 'U' or 'D').
+def append_mor_delta(spark: SparkSession, root: str, batch: DataFrame) -> int:
+    """Append one delta log (rows carry :data:`MOR_OP_COL`: 'U' or
+    'D').
 
     Scale notes (100 TB): cost is O(batch) — one parquet write of the
     delta, no read or rewrite of the base; the writer lease serializes
@@ -858,9 +858,7 @@ def append_mor_delta(
         return seq
 
 
-def read_mor(
-    spark: SparkSession, root: str, pk: str, op_col: str = "__op"
-) -> DataFrame:
+def read_mor(spark: SparkSession, root: str, pk: str) -> DataFrame:
     """Merge-on-read scan: latest-op-wins per pk over (base, deltas).
 
     Scale notes (100 TB): the base is scanned ONCE with no rewrite
@@ -872,7 +870,7 @@ def read_mor(
     lesson) — the touched set is built through a shuffle, so AQE sizes
     the join from real stats and broadcasts exactly when it is small.
     ``compact_mor`` folds the logs back when they grow."""
-    base = spark.read.parquet(_mor_base_dir(root))
+    base = read_table(spark, root)
     delta_files = glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
     if not delta_files:
         return base
@@ -888,7 +886,7 @@ def read_mor(
     )
     touched = latest.select(pk)
     survivors = base.join(touched, pk, "left_anti")
-    upserts = latest.filter(F.col(op_col) == "U").drop(op_col)
+    upserts = latest.filter(F.col(MOR_OP_COL) == "U").drop(MOR_OP_COL)
     return survivors.unionByName(upserts)
 
 
@@ -896,43 +894,26 @@ def compact_mor(spark: SparkSession, root: str, pk: str) -> int:
     """Fold every delta into a new base (the MOR maintenance job);
     returns the number of delta files folded.
 
-    Crash-safe at EVERY point via the atomic ``_BASE`` pointer (the
-    COW ``_CURRENT`` pattern): the merged base is written to a fresh
-    ``base-<n+1>`` dir, the pointer flips in one ``os.replace``, and
-    only then are the consumed deltas and the old base removed. A
-    crash before the flip leaves the old pointer + intact deltas
-    (consistent); a crash after the flip leaves deltas that re-apply
-    idempotently (latest-op-wins is stable under replay: 'U' rewrites
-    the identical row, 'D' anti-joins nothing). Orphan ``base-*`` dirs
-    from either crash are swept here, under the writer lease."""
+    Under the writer lease, the merged view commits as the next base
+    version through :func:`_publish`, and only then are the consumed
+    deltas removed. A crash before the pointer flip leaves the old base
+    + intact deltas (consistent); a crash after it leaves deltas that
+    re-apply idempotently (latest-op-wins is stable under replay: 'U'
+    rewrites the identical row, 'D' anti-joins nothing). The post-flip
+    vacuum retires the old base and any orphan version of a crash."""
     with writer_lock(root):
         delta_files = sorted(
             glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
         )
         if not delta_files:
             return 0
-        current = _mor_base_dir(root)
-        # sweep orphans from a previous crash (never the live base)
-        for d in glob.glob(os.path.join(root, "base-*")):
-            if os.path.abspath(d) != os.path.abspath(current):
-                shutil.rmtree(d)
-        m = re.search(r"base-(\d+)$", current)
-        nxt = f"base-{int(m.group(1)) + 1 if m else 1}"
-        merged = read_mor(spark, root, pk).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(os.path.join(root, nxt))
-        _commit_version(root, nxt, _MOR_PTR)
+        _publish(root, read_mor(spark, root, pk), keep_versions=1)
         for p in delta_files:
             os.remove(p)
-        if os.path.abspath(current) != os.path.abspath(
-            os.path.join(root, nxt)
-        ):
-            shutil.rmtree(current)
         return len(delta_files)
 
 
-def mor_should_compact(
-    root: str, max_files: int = 64, max_bytes_frac: float = 0.10
-) -> bool:
+def mor_should_compact(root: str, max_files: int = 64) -> bool:
     """Compaction-cadence policy, pinned by the round-13 probe
     (scripts/probe_r13_mor.md): read_mor degrades LINEARLY with the
     accumulated delta count (~15 ms per delta file at sf0.1 — file
@@ -940,23 +921,23 @@ def mor_should_compact(
     compaction costs one merged read + base write and resets the scan
     to base-only (0.31 s vs 2.96 s at 128 logs). Compact when either
     the delta FILE COUNT reaches ``max_files`` (task/listing overhead)
-    or the delta BYTES exceed ``max_bytes_frac`` of the base (window +
-    anti-join work, and the broadcast-size risk read_mor avoids by
-    letting AQE size the join). Pure filesystem metadata — no Spark
-    job."""
+    or the delta BYTES exceed :data:`MOR_MAX_DELTA_FRAC` of the base
+    (window + anti-join work, and the broadcast-size risk read_mor
+    avoids by letting AQE size the join). Pure filesystem metadata —
+    no Spark job."""
     files = glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
     if not files:
         return False
     if len(files) >= max_files:
         return True
     delta_bytes = sum(os.path.getsize(p) for p in files)
+    base = table_data_path(root)
     base_bytes = sum(
-        os.path.getsize(os.path.join(d, f))
-        for d in [_mor_base_dir(root)]
-        for f in os.listdir(d)
+        os.path.getsize(os.path.join(base, f))
+        for f in os.listdir(base)
         if f.endswith(".parquet")
     )
-    return delta_bytes > max_bytes_frac * max(base_bytes, 1)
+    return delta_bytes > MOR_MAX_DELTA_FRAC * max(base_bytes, 1)
 
 
 # --- table branches (Nessie-style refs over the versioned layout) ----------
