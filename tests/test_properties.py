@@ -175,9 +175,11 @@ def test_interval_merge_islands_match_bruteforce_union(spark, iv):
         .orderBy("s_us", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    # both windows must share one total order, or a tie on s_us is
+    # flagged in one order and numbered in the other
     w_cum = (
         Window.partitionBy("user_id")
-        .orderBy("s_us", "e_us")
+        .orderBy("s_us", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     flagged = df.withColumn("__pmax", F.max("e_us").over(w_prev)).withColumn(

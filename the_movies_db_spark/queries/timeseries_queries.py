@@ -1776,7 +1776,7 @@ def events_inactivity_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
                + (300 + (event_id % 10) * 60) * 1000000 AS e_us
       FROM events WHERE event_type = 'view'
     ), flagged AS (
-      SELECT user_id, s_us, e_us,
+      SELECT user_id, event_id, s_us, e_us,
              CASE WHEN max(e_us) OVER (PARTITION BY user_id
                                        ORDER BY s_us, event_id
                                        ROWS BETWEEN UNBOUNDED PRECEDING
@@ -1790,7 +1790,7 @@ def events_inactivity_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), islands AS (
       SELECT user_id, s_us, e_us,
              sum(new_span) OVER (PARTITION BY user_id
-                                 ORDER BY s_us, e_us
+                                 ORDER BY s_us, event_id
                                  ROWS BETWEEN UNBOUNDED PRECEDING
                                  AND CURRENT ROW) AS span_id
       FROM flagged
@@ -1843,9 +1843,11 @@ def events_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__pmax").isNull() | (F.col("s_us") > F.col("__pmax")), 1
         ).otherwise(0),
     )
+    # same total order as w_prev: a tie on s_us must be flagged and
+    # numbered in one order, or the islands split wrongly
     w_cum = (
         Window.partitionBy("user_id")
-        .orderBy("s_us", "e_us")
+        .orderBy("s_us", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     islands = flagged.withColumn("span_id", F.sum("new_span").over(w_cum))
