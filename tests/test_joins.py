@@ -80,7 +80,11 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_compact_table(spark, sf_dir, tmp_path):
+    import glob
+    import os
+
     from the_movies_db_spark.io import compact_table, load_table
+    from the_movies_db_spark.upsert import read_table, table_data_path
 
     path = str(tmp_path / "frag")
     # simulate small-file accretion: 64 tiny files
@@ -92,7 +96,9 @@ def test_compact_table(spark, sf_dir, tmp_path):
     )
     assert files_before >= 64
     assert files_after < files_before and files_after <= 2
-    assert spark.read.parquet(path).count() == before_rows
+    data_files = glob.glob(os.path.join(table_data_path(path), "*.parquet"))
+    assert len(data_files) == files_after
+    assert read_table(spark, path).count() == before_rows
 
 
 def test_json_ingest_roundtrip(spark, sf_dir, tmp_path):

@@ -5,6 +5,10 @@ and the no-drift identity case."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -112,3 +116,26 @@ def test_apply_drift_renames_without_touching_values(spark):
     out = apply_drift(batch, DEST)
     assert "vote_count_double" in out.columns and "vote_count" not in out.columns
     assert out.filter(F.col("vote_count_double") == 1.5).count() == 1
+
+
+def test_drift_and_evolution_need_no_spark_session():
+    """check_schema_drift + evolve_schema are pure metadata: a type
+    change evolves in a process that never starts a SparkContext."""
+    code = """
+from pyspark import SparkContext
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from the_movies_db_spark.schema_evolution import check_schema_drift, evolve_schema
+dest = StructType([StructField("id", LongType()), StructField("v", LongType())])
+inc = StructType([StructField("id", LongType()), StructField("v", DoubleType())])
+evolved = evolve_schema(dest, check_schema_drift(inc, dest))
+assert evolved["v"].dataType == LongType()
+assert evolved["v_double"].dataType == DoubleType()
+assert SparkContext._active_spark_context is None
+"""
+    subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        check=True,
+        capture_output=True,
+        timeout=120,
+    )

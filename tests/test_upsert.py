@@ -275,6 +275,22 @@ def test_scd2_upsert_versions(spark):
     assert again.count() == 4
 
 
+def test_scd2_upsert_without_data_columns(spark):
+    """A history table of keys alone (pk, valid_from, valid_to): an
+    unseen pk is inserted as current, a seen pk is a no-op."""
+    from datetime import datetime
+
+    from the_movies_db_spark.upsert import scd2_upsert
+
+    ts0, ts1 = datetime(2024, 1, 1), datetime(2024, 2, 1)
+    target = spark.createDataFrame(
+        [(1, ts0, None)], "pk long, valid_from timestamp, valid_to timestamp"
+    )
+    batch = spark.createDataFrame([(1, ts1), (2, ts1)], "pk long, ts timestamp")
+    out = scd2_upsert(target, batch, "pk", "ts")
+    assert sorted(map(tuple, out.collect())) == [(1, ts0, None), (2, ts1, None)]
+
+
 def test_write_upsert_crash_before_commit_keeps_old_version(spark, tmp_path):
     """Manifest-guarded swap: a crash after the new version dir is fully
     written but BEFORE the pointer flip must leave the previous version
@@ -716,3 +732,72 @@ def test_flat_parquet_root_upgrades_on_first_upsert(spark, tmp_path):
     got = {k: v.val for k, v in _as_map(U.read_table(spark, root)).items()}
     assert got == {1: "a", 2: "B", 3: "c"}
     assert U._current_version(root) in U.list_versions(root)
+    # the superseded flat files are gone: a plain read of the root
+    # cannot serve the stale pre-upgrade rows
+    assert _flat_leftovers(root) == []
+
+
+def _flat_leftovers(root):
+    """Root-level entries of a flat-Parquet layout: data files, their
+    .crc / _SUCCESS siblings, col=value dirs."""
+    import os
+
+    return sorted(
+        f for f in os.listdir(root)
+        if "=" in f or f.endswith((".parquet", ".crc")) or f == "_SUCCESS"
+    )
+
+
+def test_flat_partitioned_root_upgrades_on_first_partitioned_upsert(
+    spark, tmp_path
+):
+    """A flat root written partitionBy(day) upgrades on its first
+    write_upsert_partitioned: untouched partitions carry over into the
+    version, and the root keeps no col=value dir of the old layout."""
+    import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import write_table
+
+    root = str(tmp_path / "flatp")
+    schema = "pk long, v string, day string"
+    write_table(
+        spark.createDataFrame(
+            [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")], schema
+        ),
+        root,
+        partition_by=["day"],
+    )
+    batch = spark.createDataFrame([(1, "A", "2024-01-01")], schema)
+    U.write_upsert_partitioned(spark, root, batch, "pk", "day", order_col=None)
+    got = {r.pk: (r.v, str(r.day)) for r in U.read_table(spark, root).collect()}
+    assert got == {1: ("A", "2024-01-01"), 2: ("b", "2024-01-02")}
+    assert _flat_leftovers(root) == []
+
+
+def test_compact_flat_dir_crash_before_flip_keeps_rows(spark, tmp_path):
+    """Compacting a plain flat dir commits through the versioned commit
+    path: a crash before the pointer flip leaves the original rows
+    readable through read_table, and a retry upgrades the dir."""
+    import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import compact_table, write_table
+
+    root = str(tmp_path / "flat")
+    write_table(_df(spark, [(1, "a", T0), (2, "b", T0)]).repartition(2), root)
+
+    def crash():
+        raise RuntimeError("simulated crash before pointer flip")
+
+    U._before_pointer_flip = crash
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            compact_table(spark, root)
+    finally:
+        U._before_pointer_flip = None
+
+    def rows():
+        return sorted((r.id, r.val) for r in U.read_table(spark, root).collect())
+
+    assert rows() == [(1, "a"), (2, "b")]
+    compact_table(spark, root)
+    assert rows() == [(1, "a"), (2, "b")]
+    assert _flat_leftovers(root) == []
+    assert U.list_versions(root) == [U._current_version(root)]

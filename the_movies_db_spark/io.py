@@ -372,23 +372,21 @@ def compact_table(
     Streaming sinks and frequent small upserts accrete thousands of
     tiny files; at 100 TB, file-listing and per-file open overhead
     dominate scans long before data volume does. Returns
-    (files_before, files_after). For a versioned table root (one with a
-    ``_CURRENT`` pointer, see ``upsert.write_upsert``) the rewrite
-    commits as a new version through ``upsert.rewrite_table`` — under
-    the writer lease, so it raises ``upsert.WriterLockError`` instead
-    of racing a concurrent upsert, and crash-safe via the atomic
-    pointer flip; for a plain flat dir it falls back to rename-swap.
+    (files_before, files_after). The rewrite commits as a new version
+    through ``upsert.rewrite_table`` — under the writer lease, so it
+    raises ``upsert.WriterLockError`` instead of racing a concurrent
+    upsert, and crash-safe via the atomic pointer flip. A plain flat
+    dir is upgraded to the versioned layout by its first compaction;
+    read it back with ``upsert.read_table``.
     """
     import glob
-    import shutil
-    import tempfile
 
     from the_movies_db_spark.upsert import rewrite_table, table_data_path
 
     files_before = 0
 
     def rewrite(df: DataFrame) -> DataFrame:
-        # sized from the data dir read under the lease (versioned case)
+        # sized from the data dir read under the lease
         nonlocal files_before
         files = glob.glob(
             os.path.join(table_data_path(path), "**", "*.parquet"),
@@ -402,20 +400,7 @@ def compact_table(
             out = out.sortWithinPartitions(*sort_within_by)
         return out
 
-    if table_data_path(path) != path:
-        final_dir = os.path.join(path, rewrite_table(spark, path, rewrite))
-    else:
-        out = rewrite(spark.read.parquet(path))
-        staging = tempfile.mkdtemp(
-            prefix=os.path.basename(path) + "_compact_",
-            dir=os.path.dirname(path) or ".",
-        )
-        out.write.mode("overwrite").parquet(staging)
-        old = path + ".old"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
-        final_dir = path
+    final_dir = os.path.join(path, rewrite_table(spark, path, rewrite))
     files_after = len(
         glob.glob(os.path.join(final_dir, "**", "*.parquet"), recursive=True)
     )

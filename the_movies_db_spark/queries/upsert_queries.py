@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 from the_movies_db_spark.io import load_table
 from the_movies_db_spark.queries import register
 from the_movies_db_spark.schema_evolution import reconcile
-from the_movies_db_spark.upsert import keep_latest, merge_upsert
+from the_movies_db_spark.upsert import (
+    changed_predicate,
+    keep_latest,
+    merge_preview,
+    merge_upsert,
+)
 
 # Scenario for upsert_merge (all arithmetic mirrored in the oracle SQL):
 #   target = orders with o_orderkey % 4 != 0        (pk, price, status, audit=o_orderdate)
@@ -214,21 +219,16 @@ def schema_drift_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def upsert_change_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _target(spark, sf_dir).drop("record_loaded_at").alias("t")
-    b = _batch(spark, sf_dir).drop("record_loaded_at").alias("b")
-    changed = ~(
-        F.col("t.price").eqNullSafe(F.col("b.price"))
-        & F.col("t.status").eqNullSafe(F.col("b.status"))
-    )
-    action = (
-        F.when(F.col("t.o_orderkey").isNull(), "insert")
-        .when(F.col("b.o_orderkey").isNull(), "untouched")
-        .when(changed, "update")
-        .otherwise("noop")
+    preview = merge_preview(
+        _target(spark, sf_dir),
+        _batch(spark, sf_dir),
+        "o_orderkey",
+        matched_update=changed_predicate("t", "b", ["price", "status"]),
     )
     return (
-        t.join(b, F.col("t.o_orderkey") == F.col("b.o_orderkey"), "full_outer")
-        .select(action.alias("action"))
+        preview.replace(
+            {"noop_matched": "noop", "keep_target": "untouched"}, subset="action"
+        )
         .groupBy("action")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -352,38 +352,21 @@ def upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, tbl, _batch(spark, sf_dir), "o_orderkey",
         keep_versions=2,
     )
-    versions = list_versions(tbl)
-    v1 = read_table(spark, tbl, version=versions[0]).select(
-        F.col("o_orderkey"),
-        F.col("price").alias("__p1"),
-        F.col("status").alias("__s1"),
-    )
-    cur = read_table(spark, tbl).select(
+    # the diff of the first version against current is a MERGE
+    # preview of one into the other
+    diff = merge_preview(
+        read_table(spark, tbl, version=list_versions(tbl)[0]),
+        read_table(spark, tbl),
         "o_orderkey",
-        F.col("price").alias("__p2"),
-        F.col("status").alias("__s2"),
+        matched_update=changed_predicate("t", "b", ["price", "status"]),
     )
-    # membership by key presence (a left join flag), not value
-    # nullability — status legitimately holds NULLs after the merge
-    jm = cur.alias("c").join(
-        v1.alias("o"), "o_orderkey", "left_outer"
-    ).select(
-        "o_orderkey",
-        F.col("__p2"), F.col("__s2"), F.col("__p1"), F.col("__s1"),
-        F.col("o.o_orderkey").isNotNull().alias("__in_v1"),
-    )
-    changed = (~F.col("__p2").eqNullSafe(F.col("__p1"))) | (
-        ~F.col("__s2").eqNullSafe(F.col("__s1"))
-    )
-    return (
-        jm.agg(
-            F.sum(F.when(F.col("__in_v1"), 0).otherwise(1)).cast("bigint").alias("n_inserted"),
-            F.sum(F.when(F.col("__in_v1") & changed, 1).otherwise(0)).cast("bigint").alias("n_updated"),
-            F.sum(F.when(F.col("__in_v1") & ~changed, 1).otherwise(0)).cast("bigint").alias("n_unchanged"),
-            F.count(F.lit(1)).cast("bigint").alias("n_current"),
-        )
-        .crossJoin(v1.agg(F.count(F.lit(1)).cast("bigint").alias("n_v1")))
-        .select("n_v1", "n_current", "n_inserted", "n_updated", "n_unchanged")
+    action = F.col("action")
+    return diff.agg(
+        F.count_if(action != "insert").alias("n_v1"),
+        F.count_if(action != "keep_target").alias("n_current"),
+        F.count_if(action == "insert").alias("n_inserted"),
+        F.count_if(action == "update").alias("n_updated"),
+        F.count_if(action == "noop_matched").alias("n_unchanged"),
     )
 
 
@@ -971,8 +954,6 @@ def upsert_merge_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
     key full-outer join, broadcast when the batch is a delta); the
     preview aggregate collapses to |actions| rows, and nothing is
     written."""
-    from the_movies_db_spark.upsert import merge_preview
-
     o = load_table(spark, sf_dir, "orders")
     t = o.filter(F.expr("o_orderkey % 3 != 0")).select(
         "o_orderkey",

@@ -16,11 +16,12 @@ Two reference bugs are fixed by design (SURVEY §2.13.2–3): no
 columns are handled (the reference ``return``-ed inside the loop and
 only processed the first).
 
-Scale notes: drift handling is pure metadata (``StructType`` diffing)
-plus column renames — zero data movement. The write path relies on
-Parquet ``mergeSchema`` / ``unionByName(allowMissingColumns=True)``,
-both of which are scan-time concerns, so evolving a 100 TB table costs
-nothing beyond the normal write.
+Scale notes: drift handling is pure metadata (``StructType`` diffing,
+no Spark session) plus one projection per side — zero data movement.
+The write path relies on Parquet ``mergeSchema`` /
+``unionByName(allowMissingColumns=True)``, both of which are scan-time
+concerns, so evolving a 100 TB table costs nothing beyond the normal
+write.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DataType, StructField, StructType
 
 
 @dataclass(frozen=True)
@@ -38,6 +39,7 @@ class ModifiedColumn:
     dest_type: str  # simpleString of the destination's type
     incoming_type: str  # simpleString of the incoming type
     renamed_to: str  # {name}_{incoming_type}, spaces → "_"
+    incoming_data_type: DataType  # the incoming type itself
 
 
 @dataclass
@@ -75,6 +77,7 @@ def check_schema_drift(incoming: StructType, dest: StructType) -> SchemaDrift:
                     dest_type=dest_by_name[f.name].dataType.simpleString(),
                     incoming_type=f.dataType.simpleString(),
                     renamed_to=_suffixed_name(f.name, f.dataType.simpleString()),
+                    incoming_data_type=f.dataType,
                 )
             )
     return drift
@@ -86,20 +89,11 @@ def evolve_schema(dest: StructType, drift: SchemaDrift) -> StructType:
     drift-born columns are nullable — history rows lack them)."""
     fields = list(dest.fields)
     fields.extend(StructField(f.name, f.dataType, True) for f in drift.columns_to_add)
-    for m in drift.modified_cols:
-        # incoming type looked up from the add-list? No — suffixed col
-        # carries the incoming type; find it via name in columns_to_add
-        # is not possible (it's a type change), so re-parse from the
-        # simpleString via the batch at apply time. Here we only need
-        # the name slot; apply_batch aligns actual types.
-        fields.append(StructField(m.renamed_to, _parse_type(m.incoming_type), True))
+    fields.extend(
+        StructField(m.renamed_to, m.incoming_data_type, True)
+        for m in drift.modified_cols
+    )
     return StructType(fields)
-
-
-def _parse_type(simple_string: str):
-    from pyspark.sql.types import _parse_datatype_string
-
-    return _parse_datatype_string(simple_string)
 
 
 def apply_drift(batch: DataFrame, dest: StructType) -> DataFrame:
@@ -109,28 +103,43 @@ def apply_drift(batch: DataFrame, dest: StructType) -> DataFrame:
     added columns pass through; unchanged columns untouched.
     """
     drift = check_schema_drift(batch.schema, dest)
-    out = batch
-    for m in drift.modified_cols:
-        out = out.withColumnRenamed(m.name, m.renamed_to)
-    return out
+    renamed = {m.name: m.renamed_to for m in drift.modified_cols}
+    return batch.select(*[F.col(c).alias(renamed.get(c, c)) for c in batch.columns])
+
+
+def _project(df: DataFrame, evolved: StructType, source: dict[str, str]) -> DataFrame:
+    """``df`` as one ``select`` onto ``evolved`` (none when that is the
+    identity): field ``n`` reads column ``source[n]``, else typed NULL."""
+    if list(source.items()) == [(n, n) for n in evolved.names]:
+        return df
+
+    def col(f: StructField):
+        src = source.get(f.name)
+        if src is None:
+            return F.lit(None).cast(f.dataType).alias(f.name)
+        return src if src == f.name else F.col(src).alias(f.name)
+
+    return df.select(*[col(f) for f in evolved.fields])
 
 
 def align_to(df: DataFrame, evolved: StructType) -> DataFrame:
     """Project ``df`` onto the evolved schema, filling missing columns
     with typed NULLs — the engine-side analog of ``ALTER TABLE ADD
     COLUMN`` on existing data (etl.py:285-290)."""
-    have = {f.name for f in df.schema.fields}
-    cols = [
-        F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in evolved.fields
-    ]
-    return df.select(*cols)
+    return _project(df, evolved, {c: c for c in df.columns})
 
 
 def reconcile(target: DataFrame, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full drift pipeline: detect drift of ``batch`` vs ``target``,
     evolve the target schema, and return both sides projected onto the
-    evolved schema (ready for union/merge)."""
-    drift = check_schema_drift(batch.schema, target.schema)
-    evolved = evolve_schema(target.schema, drift)
-    return align_to(target, evolved), align_to(apply_drift(batch, target.schema), evolved)
+    evolved schema (ready for union/merge): one drift computation and
+    one ``select`` per side, type-changed batch columns aliased to
+    their ``{col}_{type}`` slots."""
+    dest, incoming = target.schema, batch.schema
+    drift = check_schema_drift(incoming, dest)
+    evolved = evolve_schema(dest, drift)
+    renamed = {m.name: m.renamed_to for m in drift.modified_cols}
+    return (
+        align_to(target, evolved),
+        _project(batch, evolved, {renamed.get(c, c): c for c in incoming.names}),
+    )

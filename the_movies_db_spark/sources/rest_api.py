@@ -18,8 +18,8 @@ as engine parameters:
   DataFrame driver-side (fine for ≤10k rows/endpoint — the reference's
   actual scale); ``fetch_pages_distributed`` parallelizes page fetches
   across executors via ``mapInArrow`` over a page-id DataFrame — the
-  shape you'd use for millions of pages, with per-executor politeness
-  sleeps standing in for a token bucket (D2).
+  shape you'd use for millions of pages, throttled by a per-task token
+  bucket (D2).
 
 Arrow-native ingest: both paths turn fetched records into Arrow with
 one builder, ``_records_table``. It first runs Spark's own row
@@ -235,7 +235,6 @@ def fetch_pages_distributed(
     url: str,
     num_pages: int,
     schema: StructType = MOVIE_SCHEMA,
-    politeness_s: float = 0.0,
     partitions: int | None = None,
     requests_per_sec: float | None = None,
 ) -> DataFrame:
@@ -252,8 +251,7 @@ def fetch_pages_distributed(
     many executors fetch at once (tasks never coordinate — the
     division is the coordination, and it stays correct as executors
     scale because the scheduler caps concurrent tasks at the partition
-    count). ``politeness_s`` is the legacy fixed sleep, kept for
-    parity with the reference's behavior."""
+    count)."""
     pages = spark.range(1, num_pages + 1).withColumnRenamed("id", "page")
     if partitions:
         pages = pages.repartition(partitions)
@@ -274,8 +272,6 @@ def fetch_pages_distributed(
                     bucket.acquire()
                 payload = transport(url, {"page": page})
                 out.extend(payload.get("results", []))
-                if politeness_s:
-                    time.sleep(politeness_s)
             yield from _records_table(out, schema).to_batches()
 
     return pages.mapInArrow(fetch, schema)

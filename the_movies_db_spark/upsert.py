@@ -8,12 +8,16 @@ execute → drop, /root/reference/utilities/etl.py:88-183):
   ``drop_duplicates`` at etl.py:143 can't break pk ties; we order by
   ``order_col`` — SURVEY §7 M3);
 - **null-safe change detection** (K3): a matched row is replaced only
-  if some non-audit column differs under ``eqNullSafe`` — parity with
+  if some non-audit column differs null-safely (``<=>``) — parity with
   the ``update_cond`` OR-chain built at etl.py:160-162 / used at
   queries.py:41, which skips no-op updates (so an unchanged row keeps
   its original audit timestamp);
 - **insert of unmatched batch rows**, **retention of unmatched target
   rows** — the two MERGE branches at queries.py:42-46.
+
+One MERGE core: every variant joins through ``_keyed_join`` and, but
+for the additive merge, takes each row's action from ``_classify``,
+with ``changed_predicate`` as the one change test.
 
 Physical shape at 100 TB: one shuffle of each side on ``pk`` for the
 full-outer join (AQE handles skew). Spark cannot broadcast either side
@@ -80,6 +84,27 @@ def _keyed_join(
     )
 
 
+def _classify(
+    batch_matched: Column,
+    target_matched: Column,
+    matched_delete: Column | None,
+    matched_update: Column | None,
+) -> tuple[Column, Column, Column, Column]:
+    """THE MERGE action of a :func:`_keyed_join` row, as the flags
+    ``(insert, delete, update, matched)``: a batch row with no target
+    row inserts; a matched row deletes when ``matched_delete`` holds,
+    else updates when ``matched_update`` holds (always when ``None``),
+    else keeps the target row."""
+    matched = batch_matched & target_matched
+    delete = (
+        matched & matched_delete if matched_delete is not None else F.lit(False)
+    )
+    update = matched & ~delete
+    if matched_update is not None:
+        update = update & matched_update
+    return batch_matched & ~target_matched, delete, update, matched
+
+
 def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataFrame:
     """Keyed dedup keeping the most recent row per key — row_number
     over (pk ORDER BY order_col DESC). This is THE scale-safe dedup:
@@ -93,13 +118,23 @@ def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataF
     )
 
 
+def _dedup(
+    batch: DataFrame, pk: str | Sequence[str], order_col: str | None
+) -> DataFrame:
+    """:func:`keep_latest` when the batch has an ``order_col``."""
+    if order_col is not None and order_col in batch.columns:
+        return keep_latest(batch, pk, order_col)
+    return batch
+
+
 def changed_predicate(
-    left: str, right: str, columns: Sequence[str], audit_col: str = AUDIT_COLUMN
+    left: str, right: str, columns: Sequence[str], audit_col: str | None = AUDIT_COLUMN
 ) -> Column:
     """OR-chain of null-safe inequality over non-audit columns — the
     Spark form of the reference's ``update_cond`` (etl.py:160-162):
     ``t1.c != t2.c OR (t1.c IS NULL) != (t2.c IS NULL)`` per column
-    collapses to ``NOT (t1.c <=> t2.c)``."""
+    collapses to ``NOT (t1.c <=> t2.c)``. ``audit_col=None`` compares
+    every column; with no column to compare, nothing changed."""
     cols = [c for c in columns if c != audit_col]
     preds = [~F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols]
     return reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
@@ -113,7 +148,8 @@ def merge_upsert(
     audit_col: str = AUDIT_COLUMN,
     evolve: bool = True,
 ) -> DataFrame:
-    """SCD-type-1 MERGE as a single lazy plan.
+    """SCD-type-1 MERGE as a single lazy plan: :func:`conditional_merge`
+    whose update clause is :func:`changed_predicate`.
 
     WHEN MATCHED AND <any non-audit col changed (null-safe)> THEN take
     the batch row; WHEN MATCHED (no change) THEN keep the target row —
@@ -123,8 +159,7 @@ def merge_upsert(
     keys = _key_list(pk)
     if evolve:
         target, batch = reconcile(target, batch)
-    if order_col is not None and order_col in batch.columns:
-        batch = keep_latest(batch, keys, order_col)
+    batch = _dedup(batch, keys, order_col)
     non_key_cols = [c for c in target.columns if c not in keys]
     return conditional_merge(
         target,
@@ -372,13 +407,28 @@ def _write_version(
     return version
 
 
+def _drop_flat_data(target_path: str) -> None:
+    """Remove the data files, ``.crc``/``_SUCCESS`` siblings and
+    ``col=value`` dirs a flat-Parquet root held before its first version."""
+    for f in os.listdir(target_path):
+        p = os.path.join(target_path, f)
+        name = f[1:-4] if f.startswith(".") and f.endswith(".crc") else f
+        if os.path.isdir(p):
+            if "=" in f:
+                shutil.rmtree(p)
+        elif name == "_SUCCESS" or not name.startswith((".", "_")):
+            os.remove(p)
+
+
 def _commit(target_path: str, version: str, keep_versions: int) -> None:
     """Make the staged ``version`` current: run the pre-flip hook, flip
-    the pointer, vacuum to ``keep_versions``. Caller holds the writer
-    lease."""
+    the pointer, drop superseded flat data (after every flip, so a crash
+    right after a first flip is mended by the next), vacuum to
+    ``keep_versions``. Caller holds the writer lease."""
     if _before_pointer_flip is not None:
         _before_pointer_flip()
     _commit_version(target_path, version)
+    _drop_flat_data(target_path)
     vacuum_table(target_path, keep=keep_versions)
 
 
@@ -443,9 +493,7 @@ def write_upsert(
     def merge(current: DataFrame | None) -> DataFrame:
         if current is not None:
             return merge_upsert(current, batch, pk, order_col=order_col)
-        if order_col is not None and order_col in batch.columns:
-            return keep_latest(batch, pk, order_col)
-        return batch
+        return _dedup(batch, pk, order_col)
 
     rewrite_table(spark, target_path, merge, keep_versions, lock_wait)
 
@@ -523,9 +571,7 @@ def write_upsert_partitioned(
     with writer_lock(target_path, wait_seconds=lock_wait):
         current = _data_dir(target_path)
         if current is None:
-            out = batch
-            if order_col is not None and order_col in batch.columns:
-                out = keep_latest(out, keys, order_col)
+            out = _dedup(batch, keys, order_col)
         else:
             target = spark.read.parquet(current)
             # partition-column type inference (string dirs → date/int)
@@ -620,9 +666,11 @@ def scd2_upsert(
     current = target.filter(F.col(valid_to).isNull())
 
     joined, batch_matched, target_matched = _keyed_join(current, batch, keys)
-    changed = (target_matched & batch_matched) & reduce(
-        lambda a, c: a | c,
-        [~F.col(f"t.{c}").eqNullSafe(F.col(f"b.{c}")) for c in data_cols],
+    insert, _, changed, _ = _classify(
+        batch_matched,
+        target_matched,
+        None,
+        changed_predicate("t", "b", data_cols, audit_col=None),
     )
 
     # surviving current rows: unchanged target rows, or closed-out versions
@@ -633,9 +681,7 @@ def scd2_upsert(
         F.when(changed, F.col(f"b.{ts_col}")).otherwise(None).alias(valid_to),
     )
     # new versions: brand-new pks, or the changed rows' replacements
-    new_current = joined.filter(
-        (batch_matched & ~target_matched) | changed
-    ).select(
+    new_current = joined.filter(insert | changed).select(
         *[F.col(f"b.{k}").alias(k) for k in keys],
         *[F.col(f"b.{c}").alias(c) for c in data_cols],
         F.col(f"b.{ts_col}").alias(valid_from),
@@ -664,23 +710,14 @@ def conditional_merge(
     the Delta/Iceberg conditional-clause MERGE surface expressed as a
     full-outer join + one select, so Catalyst plans it like any other
     join (broadcast/shuffle by key, AQE-eligible)."""
-    joined, batch_matched, target_matched = _keyed_join(
-        target, batch, _key_list(pk)
-    )
-    both = batch_matched & target_matched
-    delete_row = (
-        both & matched_delete if matched_delete is not None else F.lit(False)
-    )
-    update_row = both & (
-        matched_update if matched_update is not None else F.lit(True)
-    )
-    insert_row = batch_matched & ~target_matched
-    take_batch = insert_row | (update_row & ~delete_row)
+    joined, *sides = _keyed_join(target, batch, _key_list(pk))
+    insert, delete, update, _ = _classify(*sides, matched_delete, matched_update)
+    take_batch = insert | update
     out_cols = [
         F.when(take_batch, F.col(f"b.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
         for c in target.columns
     ]
-    return joined.filter(~delete_row).select(*out_cols)
+    return joined.filter(~delete).select(*out_cols)
 
 
 def merge_preview(
@@ -703,23 +740,13 @@ def merge_preview(
     Both sides' columns come back under ``t_``/``b_`` prefixes so the
     caller can aggregate deltas. Same single full-outer join as the
     real MERGE — previewing costs exactly one merge plan, no writes."""
-    joined, batch_matched, target_matched = _keyed_join(
-        target, batch, _key_list(pk)
-    )
-    both = batch_matched & target_matched
-    delete_row = (
-        both & matched_delete if matched_delete is not None else F.lit(False)
-    )
-    update_row = (
-        both
-        & ~delete_row
-        & (matched_update if matched_update is not None else F.lit(True))
-    )
+    joined, *sides = _keyed_join(target, batch, _key_list(pk))
+    insert, delete, update, matched = _classify(*sides, matched_delete, matched_update)
     action = (
-        F.when(batch_matched & ~target_matched, F.lit("insert"))
-        .when(delete_row, F.lit("delete"))
-        .when(update_row, F.lit("update"))
-        .when(both, F.lit("noop_matched"))
+        F.when(insert, F.lit("insert"))
+        .when(delete, F.lit("delete"))
+        .when(update, F.lit("update"))
+        .when(matched, F.lit("noop_matched"))
         .otherwise(F.lit("keep_target"))
     )
     cols = [action.alias("action")]
@@ -875,10 +902,7 @@ def read_mor(spark: SparkSession, root: str, pk: str) -> DataFrame:
     if not delta_files:
         return base
     deltas = spark.read.parquet(*sorted(delta_files))
-    order = [F.desc("__seq")]
-    if "__pos" in deltas.columns:  # pre-__pos delta files lack it
-        order.append(F.desc("__pos"))
-    w = Window.partitionBy(pk).orderBy(*order)
+    w = Window.partitionBy(pk).orderBy(F.desc("__seq"), F.desc("__pos"))
     latest = (
         deltas.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -1064,17 +1088,15 @@ def merge_branch(
         ours = read_table(spark, target_path)
         theirs = read_branch(spark, target_path, name)
         non_keys = [c for c in base.columns if c not in keys]
+        changed = changed_predicate("t", "b", non_keys)
 
         def changed_rows(side: DataFrame) -> DataFrame:
-            cond = None
-            for k in keys:
-                c = F.col(f"s.{k}").eqNullSafe(F.col(f"a.{k}"))
-                cond = c if cond is None else (cond & c)
-            j = side.alias("s").join(base.alias("a"), cond, "left_outer")
-            is_new = F.col(f"a.{keys[0]}").isNull()
-            return j.filter(
-                is_new | changed_predicate("a", "s", non_keys)
-            ).select(*[F.col(f"s.{c}").alias(c) for c in side.columns])
+            # the side's rows a MERGE into base would insert or update
+            joined, *sides = _keyed_join(base, side, keys)
+            insert, _, update, _ = _classify(*sides, None, changed)
+            return joined.filter(insert | update).select(
+                *[F.col(f"b.{c}").alias(c) for c in side.columns]
+            )
 
         th_ch = changed_rows(theirs).localCheckpoint(eager=False)
         our_ch = changed_rows(ours)
