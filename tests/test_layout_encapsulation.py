@@ -22,6 +22,7 @@ LAYOUT_NAMES = {
     "_write_version",
     "_commit",
     "_publish",
+    "_SCHEMA_RECORD",
 }
 
 

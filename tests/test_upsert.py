@@ -801,3 +801,213 @@ def test_compact_flat_dir_crash_before_flip_keeps_rows(spark, tmp_path):
     assert rows() == [(1, "a"), (2, "b")]
     assert _flat_leftovers(root) == []
     assert U.list_versions(root) == [U._current_version(root)]
+
+
+# ------------------------------------------------- NULL keys and predicates
+
+NK = "id long, val string, n long"
+
+
+def test_merge_upsert_null_key_matches_null_key(spark):
+    """A NULL key is a key: the batch's NULL-key row replaces the
+    target's NULL-key row (the join is null-safe, so is presence)."""
+    target = spark.createDataFrame([(None, "nk", 5), (1, "a", 1)], NK)
+    batch = spark.createDataFrame([(None, "nk2", 7)], NK)
+    out = merge_upsert(target, batch, "id", order_col=None)
+    assert sorted(map(tuple, out.collect()), key=str) == [
+        (1, "a", 1), (None, "nk2", 7),
+    ]
+
+
+def test_merge_upsert_inserts_unmatched_null_key_row(spark):
+    target = spark.createDataFrame([(1, "a", 1)], NK)
+    batch = spark.createDataFrame([(None, "x", 8)], NK)
+    out = merge_upsert(target, batch, "id", order_col=None)
+    assert sorted(map(tuple, out.collect()), key=str) == [
+        (1, "a", 1), (None, "x", 8),
+    ]
+
+
+def test_branch_upsert_writes_null_first_key_row(spark, tmp_path):
+    from the_movies_db_spark import upsert as U
+
+    root = str(tmp_path / "t")
+    schema = "pk long, pk2 string, v string"
+    U.write_upsert(
+        spark, root, spark.createDataFrame([(1, "a", "x")], schema),
+        ["pk", "pk2"], order_col=None,
+    )
+    U.branch_create(root, "dev")
+    U.write_upsert_branch(
+        spark, root, "dev", spark.createDataFrame([(None, "q", "new")], schema),
+        ["pk", "pk2"],
+    )
+    got = sorted(map(tuple, U.read_branch(spark, root, "dev").collect()), key=str)
+    assert got == [(1, "a", "x"), (None, "q", "new")]
+
+
+def test_null_delete_predicate_keeps_row_in_merge_and_preview(spark):
+    """A clause fires only when its predicate is TRUE: a NULL
+    ``matched_delete`` neither deletes nor updates, in the MERGE and in
+    its dry run alike."""
+    from pyspark.sql import functions as F
+
+    from the_movies_db_spark.upsert import conditional_merge, merge_preview
+
+    target = spark.createDataFrame([(3, "x"), (4, "y")], "id long, val string")
+    batch = spark.createDataFrame([(3, None), (4, "D")], "id long, val string")
+    delete = F.col("b.val") == "D"
+    out = conditional_merge(target, batch, "id", matched_delete=delete)
+    assert [tuple(r) for r in out.collect()] == [(3, "x")]
+    preview = merge_preview(target, batch, "id", matched_delete=delete)
+    assert {r.t_id: r.action for r in preview.collect()} == {
+        3: "noop_matched", 4: "delete",
+    }
+
+
+# ------------------------------------------------------ plan-building cost
+
+
+def _py4j_commands(monkeypatch, fn) -> int:
+    """Py4J commands ``fn`` sends, object releases (whose number depends
+    on Python garbage collection) excluded."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(release):
+            sent.append(command)
+        return real(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return len(sent)
+
+
+def _movies_table(spark, root):
+    """A one-version movies table as the CDC workload keeps it."""
+    from pyspark.sql.types import DateType, StructField, StructType, TimestampType
+
+    from the_movies_db_spark.sources.rest_api import MOVIE_SCHEMA
+    from the_movies_db_spark.upsert import read_table
+
+    schema = StructType([
+        *(StructField(f.name, DateType()) if f.name == "release_date" else f
+          for f in MOVIE_SCHEMA.fields),
+        StructField("record_loaded_at", TimestampType()),
+    ])
+    rows = [
+        (i, f"t{i}", f"o{i}", "en", "...", dt.date(2020, 1, 1), [1, 2],
+         1.5, 7.0, i, False, False, "/p", "/b", T0)
+        for i in range(1, 41)
+    ]
+    write_upsert(spark, root, spark.createDataFrame(rows, schema), "id")
+    return read_table(spark, root), schema, rows
+
+
+@pytest.mark.parametrize("shape", ["cdc", "etl_drift"])
+def test_merge_plan_takes_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch, shape):
+    """``merge_upsert`` + its optimised plan is one SQL statement, not
+    an expression-by-expression build: under 100 Py4J commands on a
+    CDC-shaped batch and on one with an added and a type-changed column."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    target, schema, rows = _movies_table(spark, str(tmp_path / "movies"))
+    batch_rows = [(*r[:-1], T1) for r in rows[:10]]
+    if shape == "etl_drift":
+        schema = StructType([
+            StructField(f.name, StringType()) if f.name == "vote_count" else f
+            for f in schema.fields
+        ] + [StructField("keywords", ArrayType(StringType()))])
+        batch_rows = [
+            (*r[:9], str(r[9]), *r[10:], ["k"]) for r in batch_rows
+        ]
+    batch = spark.createDataFrame(batch_rows, schema)
+
+    def build():
+        merge_upsert(target, batch, "id")._jdf.queryExecution().optimizedPlan()
+
+    assert _py4j_commands(monkeypatch, build) < 100
+
+
+# ------------------------------------------------------- schema records
+
+
+def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
+    """A version read through its schema record has exactly the schema
+    (nullability included) that inferring it from the files gives, runs
+    no Spark job, and a drift-evolved version keeps that property."""
+    import os
+
+    from pyspark.sql.types import (
+        ArrayType, DateType, IntegerType, LongType, MapType, StringType,
+        StructField, StructType, TimestampNTZType, TimestampType,
+    )
+
+    from the_movies_db_spark import upsert as U
+
+    schema = StructType([
+        StructField("k1", LongType(), False),
+        StructField("k2", StringType(), False),
+        StructField("tags", ArrayType(IntegerType(), False), False),
+        StructField("d", DateType()),
+        StructField("ts", TimestampType()),
+        StructField("ntz", TimestampNTZType()),
+        StructField("s", StructType([
+            StructField("a", IntegerType(), False),
+            StructField("b", ArrayType(StringType())),
+        ])),
+    ])
+    row = (1, "x", [1, 2], dt.date(2024, 1, 1), T0, T0, (1, ["z"]))
+    root = str(tmp_path / "t")
+
+    def assert_recorded(root):
+        data = U.table_data_path(root)
+        assert os.path.exists(os.path.join(data, U._SCHEMA_RECORD))
+        sc = spark.sparkContext
+        sc.setJobGroup("read_table_schema", "read through the record")
+        try:
+            got = U.read_table(spark, root).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("read_table_schema") == []
+        assert got == spark.read.parquet(data).schema
+
+    U.write_upsert(
+        spark, root, spark.createDataFrame([row], schema), ["k1", "k2"],
+        order_col=None,
+    )
+    assert_recorded(root)
+    # drift: an added column and a type-changed one
+    drifted = StructType([
+        StructField("d", StringType()) if f.name == "d" else f
+        for f in U.read_table(spark, root).schema
+    ] + [StructField("extra", ArrayType(StringType()))])
+    U.write_upsert(
+        spark, root,
+        spark.createDataFrame([(2, "y", [3], "2024-02-01", T1, T1, None, ["e"])],
+                              drifted),
+        ["k1", "k2"], order_col=None,
+    )
+    assert_recorded(root)
+    assert {"extra", "d_string"} <= set(U.read_table(spark, root).columns)
+    assert U.read_table(spark, root).count() == 2
+    # a map with non-null values (maps cannot be merged: no <=> on them)
+    maps = str(tmp_path / "maps")
+    U.write_upsert(
+        spark, maps,
+        spark.createDataFrame(
+            [(1, {"a": 1})],
+            StructType([
+                StructField("id", LongType(), False),
+                StructField("m", MapType(StringType(), LongType(), False)),
+            ]),
+        ),
+        "id",
+    )
+    assert_recorded(maps)

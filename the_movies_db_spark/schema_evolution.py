@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructField, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 @dataclass(frozen=True)
@@ -107,19 +107,53 @@ def apply_drift(batch: DataFrame, dest: StructType) -> DataFrame:
     return batch.select(*[F.col(c).alias(renamed.get(c, c)) for c in batch.columns])
 
 
-def _project(df: DataFrame, evolved: StructType, source: dict[str, str]) -> DataFrame:
-    """``df`` as one ``select`` onto ``evolved`` (none when that is the
-    identity): field ``n`` reads column ``source[n]``, else typed NULL."""
-    if list(source.items()) == [(n, n) for n in evolved.names]:
-        return df
+def sql_name(name: str) -> str:
+    """``name`` as a backquoted SQL identifier, braces doubled for the
+    ``spark.sql`` formatter."""
+    name = name.replace("`", "``").replace("{", "{{").replace("}", "}}")
+    return f"`{name}`"
 
-    def col(f: StructField):
+
+def _sql_type(dt: DataType) -> str:
+    """``dt`` in SQL type syntax (struct field names backquoted)."""
+    if isinstance(dt, StructType):
+        fields = ", ".join(f"{sql_name(f.name)}: {_sql_type(f.dataType)}" for f in dt)
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def null_sql(dt: DataType) -> str:
+    """A NULL of type ``dt`` as SQL text."""
+    return f"CAST(NULL AS {_sql_type(dt)})"
+
+
+def projection_sql(evolved: StructType, source: dict[str, str]) -> str:
+    """SELECT list onto ``evolved`` (``*`` for the identity): field
+    ``n`` reads column ``source[n]``, else a typed NULL."""
+    if list(source.items()) == [(n, n) for n in evolved.names]:
+        return "*"
+
+    def col(f: StructField) -> str:
         src = source.get(f.name)
         if src is None:
-            return F.lit(None).cast(f.dataType).alias(f.name)
-        return src if src == f.name else F.col(src).alias(f.name)
+            return f"{null_sql(f.dataType)} AS {sql_name(f.name)}"
+        name = sql_name(f.name)
+        return name if src == f.name else f"{sql_name(src)} AS {name}"
 
-    return df.select(*[col(f) for f in evolved.fields])
+    return ", ".join(col(f) for f in evolved.fields)
+
+
+def _project(df: DataFrame, evolved: StructType, source: dict[str, str]) -> DataFrame:
+    """``df`` as one projection onto ``evolved`` (:func:`projection_sql`;
+    none when that is the identity)."""
+    select = projection_sql(evolved, source)
+    if select == "*":
+        return df
+    return df.sparkSession.sql(f"SELECT {select} FROM {{df}}", df=df)
 
 
 def align_to(df: DataFrame, evolved: StructType) -> DataFrame:
@@ -129,17 +163,26 @@ def align_to(df: DataFrame, evolved: StructType) -> DataFrame:
     return _project(df, evolved, {c: c for c in df.columns})
 
 
+def drift_sources(
+    dest: StructType, incoming: StructType
+) -> tuple[StructType, dict[str, str], dict[str, str]]:
+    """The drift of ``incoming`` vs ``dest`` as the evolved schema plus,
+    per side, the column each evolved field reads (a field absent from
+    a side's map reads a typed NULL); type-changed incoming columns
+    feed their ``{col}_{type}`` slots."""
+    drift = check_schema_drift(incoming, dest)
+    renamed = {m.name: m.renamed_to for m in drift.modified_cols}
+    return (
+        evolve_schema(dest, drift),
+        {c: c for c in dest.names},
+        {renamed.get(c, c): c for c in incoming.names},
+    )
+
+
 def reconcile(target: DataFrame, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full drift pipeline: detect drift of ``batch`` vs ``target``,
     evolve the target schema, and return both sides projected onto the
-    evolved schema (ready for union/merge): one drift computation and
-    one ``select`` per side, type-changed batch columns aliased to
-    their ``{col}_{type}`` slots."""
-    dest, incoming = target.schema, batch.schema
-    drift = check_schema_drift(incoming, dest)
-    evolved = evolve_schema(dest, drift)
-    renamed = {m.name: m.renamed_to for m in drift.modified_cols}
-    return (
-        align_to(target, evolved),
-        _project(batch, evolved, {renamed.get(c, c): c for c in incoming.names}),
-    )
+    evolved schema (ready for union/merge): one drift computation
+    (:func:`drift_sources`) and one projection per side."""
+    evolved, target_src, batch_src = drift_sources(target.schema, batch.schema)
+    return _project(target, evolved, target_src), _project(batch, evolved, batch_src)

@@ -15,9 +15,14 @@ execute → drop, /root/reference/utilities/etl.py:88-183):
 - **insert of unmatched batch rows**, **retention of unmatched target
   rows** — the two MERGE branches at queries.py:42-46.
 
-One MERGE core: every variant joins through ``_keyed_join`` and, but
-for the additive merge, takes each row's action from ``_classify``,
-with ``changed_predicate`` as the one change test.
+One MERGE core: every variant is ONE SQL statement from ``_merge`` —
+the keep-latest ``row_number()`` dedup, a ``TRUE`` presence marker per
+side, the null-safe full-outer join, the action flags as lateral
+aliases and a ``CASE WHEN`` per output column — passed to
+``spark.sql(text, t=target, b=batch)``, so the plan costs a handful of
+JVM calls whatever the column count. A clause fires only when its
+predicate is TRUE, as in SQL MERGE. ``changed_predicate`` (and its SQL
+twin ``_changed_sql``) is the one change test.
 
 Physical shape at 100 TB: one shuffle of each side on ``pk`` for the
 full-outer join (AQE handles skew). Spark cannot broadcast either side
@@ -40,6 +45,7 @@ replacing those functions.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 import shutil
@@ -50,8 +56,14 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from the_movies_db_spark.schema_evolution import reconcile
+from the_movies_db_spark.schema_evolution import (
+    drift_sources,
+    null_sql,
+    projection_sql,
+)
+from the_movies_db_spark.schema_evolution import sql_name as _q
 
 AUDIT_COLUMN = "record_loaded_at"  # parity: etl.py:32,95
 
@@ -65,44 +77,83 @@ def _key_list(pk: str | Sequence[str]) -> list[str]:
     return [pk] if isinstance(pk, str) else list(pk)
 
 
-def _keyed_join(
-    target: DataFrame, batch: DataFrame, keys: Sequence[str]
-) -> tuple[DataFrame, Column, Column]:
-    """Null-safe full-outer join of ``target`` (alias ``t``) and
-    ``batch`` (alias ``b``) on ``keys`` — the shared prelude of every
-    MERGE variant. Returns ``(joined, batch_matched, target_matched)``:
-    the flags say which side supplied a row for the key."""
-    cond = reduce(
-        lambda a, c: a & c,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
+def _merge(
+    target: DataFrame,
+    batch: DataFrame,
+    keys: Sequence[str],
+    *outputs: tuple[str, str | None],
+    update: str | Column | None = None,
+    delete: Column | None = None,
+    order_col: str | None = None,
+    projections: tuple[str, str] = ("*", "*"),
+) -> DataFrame:
+    """THE MERGE core, as one SQL statement: the null-safe full-outer
+    join of ``target`` (``t``, projected by ``projections[0]``) and
+    ``batch`` (``b``, projected by ``projections[1]``, then deduped
+    keep-latest by ``order_col`` when given) on ``keys``. Each side
+    carries a ``TRUE`` presence marker, so a NULL key never reads as an
+    absent side. The action flags, as lateral aliases: ``__tgt`` /
+    ``__src`` (that side supplied a row); ``__ins`` (batch row only);
+    ``__del`` (matched and ``delete`` TRUE); ``__upd`` (matched and
+    ``NOT delete AND update`` TRUE, an absent predicate dropping out);
+    ``__take`` (``__ins OR __upd``: the batch row wins).
+
+    ``outputs`` are ``(select list, filter)`` pairs over ``t.<col>``,
+    ``b.<col>`` and the flags, UNION ALL-ed. ``update`` is SQL text or
+    a Column, ``delete`` a Column, over ``t``/``b``. ``spark.sql`` takes
+    no expressions as arguments, so Column predicates are evaluated in
+    one ``select`` over the join (sides as ``t``/``b`` structs), which a
+    second statement classifies."""
+    spark = target.sparkSession
+    on = " AND ".join(f"t.{k} <=> b.{k}" for k in map(_q, keys))
+    side_b = "{b}" if projections[1] == "*" else f"(SELECT {projections[1]} FROM {{b}})"
+    if order_col is not None:
+        side_b = (
+            "(SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() OVER "
+            f"(PARTITION BY {', '.join(map(_q, keys))} ORDER BY {_q(order_col)} DESC)"
+            f" AS __rn FROM {side_b}) WHERE __rn = 1)"
+        )
+    source = (
+        f"(SELECT {projections[0]}, TRUE AS __t FROM {{t}}) t FULL OUTER JOIN "
+        f"(SELECT *, TRUE AS __b FROM {side_b}) b ON {on}"
     )
-    joined = target.alias("t").join(batch.alias("b"), cond, "full_outer")
-    return (
-        joined,
-        F.col(f"b.{keys[0]}").isNotNull(),
-        F.col(f"t.{keys[0]}").isNotNull(),
+    args = {"t": target, "b": batch}
+    preds = {
+        n: c for n, c in (("__d", delete), ("__u", update)) if isinstance(c, Column)
+    }
+    if preds:
+        pairs = spark.sql(
+            f"SELECT struct(t.*) AS t, struct(b.*) AS b FROM {source}", **args
+        )
+        source = "{p}"
+        args = {"p": pairs.select("*", *(c.alias(n) for n, c in preds.items()))}
+        delete = "__d" if delete is not None else None
+        update = "__u" if "__u" in preds else update
+    delete_if = delete or "FALSE"
+    update_if = f"NOT {delete_if} AND ({update or 'TRUE'})"
+    flags = ", ".join([
+        "t.__t IS NOT NULL AS __tgt",
+        "b.__b IS NOT NULL AS __src",
+        "__src AND NOT __tgt AS __ins",
+        f"__tgt AND __src AND ({delete_if}) IS TRUE AS __del",
+        f"__tgt AND __src AND ({update_if}) IS TRUE AS __upd",
+        "__ins OR __upd AS __take",
+    ])
+    text = " UNION ALL ".join(
+        "SELECT * EXCEPT (__tgt, __src, __ins, __del, __upd, __take) "
+        f"FROM (SELECT {flags}, {select} FROM {source})"
+        + (f" WHERE {where}" if where else "")
+        for select, where in outputs
     )
+    return spark.sql(text, **args)
 
 
-def _classify(
-    batch_matched: Column,
-    target_matched: Column,
-    matched_delete: Column | None,
-    matched_update: Column | None,
-) -> tuple[Column, Column, Column, Column]:
-    """THE MERGE action of a :func:`_keyed_join` row, as the flags
-    ``(insert, delete, update, matched)``: a batch row with no target
-    row inserts; a matched row deletes when ``matched_delete`` holds,
-    else updates when ``matched_update`` holds (always when ``None``),
-    else keeps the target row."""
-    matched = batch_matched & target_matched
-    delete = (
-        matched & matched_delete if matched_delete is not None else F.lit(False)
+def _take_batch_sql(columns: Sequence[str]) -> str:
+    """Output select list of a MERGE: the batch's value where ``__take``,
+    else the target's."""
+    return ", ".join(
+        f"CASE WHEN __take THEN b.{c} ELSE t.{c} END AS {c}" for c in map(_q, columns)
     )
-    update = matched & ~delete
-    if matched_update is not None:
-        update = update & matched_update
-    return batch_matched & ~target_matched, delete, update, matched
 
 
 def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataFrame:
@@ -118,15 +169,6 @@ def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataF
     )
 
 
-def _dedup(
-    batch: DataFrame, pk: str | Sequence[str], order_col: str | None
-) -> DataFrame:
-    """:func:`keep_latest` when the batch has an ``order_col``."""
-    if order_col is not None and order_col in batch.columns:
-        return keep_latest(batch, pk, order_col)
-    return batch
-
-
 def changed_predicate(
     left: str, right: str, columns: Sequence[str], audit_col: str | None = AUDIT_COLUMN
 ) -> Column:
@@ -140,6 +182,13 @@ def changed_predicate(
     return reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
 
 
+def _changed_sql(columns: Sequence[str], audit_col: str | None = AUDIT_COLUMN) -> str:
+    """:func:`changed_predicate` over the ``t``/``b`` sides as SQL text."""
+    cols = [_q(c) for c in columns if c != audit_col]
+    preds = [f"NOT (t.{c} <=> b.{c})" for c in cols]
+    return " OR ".join(preds) or "FALSE"
+
+
 def merge_upsert(
     target: DataFrame,
     batch: DataFrame,
@@ -148,24 +197,35 @@ def merge_upsert(
     audit_col: str = AUDIT_COLUMN,
     evolve: bool = True,
 ) -> DataFrame:
-    """SCD-type-1 MERGE as a single lazy plan: :func:`conditional_merge`
-    whose update clause is :func:`changed_predicate`.
+    """SCD-type-1 MERGE as one SQL statement (:func:`_merge`) whose
+    update clause is :func:`changed_predicate`; with ``evolve`` the
+    batch's schema drift (``schema_evolution.drift_sources``) is
+    projected in the same statement.
 
     WHEN MATCHED AND <any non-audit col changed (null-safe)> THEN take
     the batch row; WHEN MATCHED (no change) THEN keep the target row —
     including its audit timestamp; WHEN NOT MATCHED THEN insert the
-    batch row; unmatched target rows persist.
+    batch row; unmatched target rows persist. A batch with
+    ``order_col`` keeps its latest row per key first.
     """
     keys = _key_list(pk)
     if evolve:
-        target, batch = reconcile(target, batch)
-    batch = _dedup(batch, keys, order_col)
-    non_key_cols = [c for c in target.columns if c not in keys]
-    return conditional_merge(
+        evolved, target_src, batch_src = drift_sources(target.schema, batch.schema)
+        columns = batch_cols = evolved.names
+        projections = (
+            projection_sql(evolved, target_src), projection_sql(evolved, batch_src)
+        )
+    else:
+        columns, batch_cols, projections = target.columns, batch.columns, ("*", "*")
+    non_keys = [c for c in columns if c not in keys]
+    return _merge(
         target,
         batch,
         keys,
-        matched_update=changed_predicate("t", "b", non_key_cols, audit_col),
+        (_take_batch_sql(columns), None),
+        update=_changed_sql(non_keys, audit_col),
+        order_col=order_col if order_col in batch_cols else None,
+        projections=projections,
     )
 
 
@@ -194,6 +254,8 @@ def merge_upsert(
 # pointer file.
 
 CURRENT_POINTER = "_CURRENT"
+# an unpartitioned version's schema (Spark's JSON), read instead of inferred
+_SCHEMA_RECORD = "_SCHEMA"
 _VERSION_RE = re.compile(r"v\d{8}$")
 
 # test hook: called after the new version dir is fully written but
@@ -324,8 +386,21 @@ def read_table(
                 f"version {version!r} not present under {target_path} "
                 f"(retained: {list_versions(target_path)})"
             )
-        return spark.read.parquet(path)
-    return spark.read.parquet(table_data_path(target_path))
+        return _read_version(spark, path)
+    return _read_version(spark, table_data_path(target_path))
+
+
+def _read_version(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Read a table's data dir: through the version's schema record
+    when it has one (no footer-inference job), else by inference (flat
+    roots, partitioned versions — inferred partition types can differ
+    from the written ones — and versions written without a record)."""
+    try:
+        with open(os.path.join(data_dir, _SCHEMA_RECORD)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return spark.read.parquet(data_dir)
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 def list_versions(target_path: str) -> list[str]:
@@ -388,7 +463,9 @@ def _write_version(
     current — and return its name. The version is written
     ``partitionBy(partition_col)``; with none given, it keeps the
     partitioning of the current data dir (its ``col=value``
-    subdirectories). Caller holds the writer lease."""
+    subdirectories). An unpartitioned version also gets its schema
+    record, which :func:`_read_version` reads instead of inferring the
+    schema from the footers. Caller holds the writer lease."""
     version = _next_version_name(target_path)
     if partition_col is not None:
         parts = [partition_col]
@@ -400,10 +477,15 @@ def _write_version(
                 if "=" in d
             }
         )
+    path = os.path.join(target_path, version)
     writer = df.write.mode("overwrite")
     if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(os.path.join(target_path, version))
+        writer.partitionBy(*parts).parquet(path)
+        return version
+    writer.parquet(path)
+    with open(os.path.join(path, _SCHEMA_RECORD), "w") as fh:
+        # made nullable as a Parquet read returns it
+        fh.write(df._jdf.schema().asNullable().json())
     return version
 
 
@@ -459,7 +541,7 @@ def rewrite_table(
     writer holds the lease; ``> 0`` serializes behind it."""
     with writer_lock(target_path, wait_seconds=lock_wait):
         data = _data_dir(target_path)
-        current = spark.read.parquet(data) if data is not None else None
+        current = _read_version(spark, data) if data is not None else None
         return _publish(target_path, fn(current), keep_versions)
 
 
@@ -493,7 +575,9 @@ def write_upsert(
     def merge(current: DataFrame | None) -> DataFrame:
         if current is not None:
             return merge_upsert(current, batch, pk, order_col=order_col)
-        return _dedup(batch, pk, order_col)
+        if order_col in batch.columns:
+            return keep_latest(batch, pk, order_col)
+        return batch
 
     rewrite_table(spark, target_path, merge, keep_versions, lock_wait)
 
@@ -521,14 +605,12 @@ def delete_keys(
     keeps the current version's partitioning)."""
     pks = _key_list(pk)
     with writer_lock(target_path, wait_seconds=lock_wait):
-        target = spark.read.parquet(table_data_path(target_path))
-        survivors = target.join(keys.select(*pks).distinct(), pks, "left_anti")
-        n_before = target.count()
-        version = _publish(target_path, survivors, keep_versions)
-        n_after = spark.read.parquet(
-            os.path.join(target_path, version)
-        ).count()
-    return n_before - n_after
+        target = _read_version(spark, table_data_path(target_path))
+        doomed = keys.select(*pks).distinct()
+        # the rows the anti-join drops, counted by the same equi-join
+        n_removed = target.join(doomed, pks, "left_semi").count()
+        _publish(target_path, target.join(doomed, pks, "left_anti"), keep_versions)
+    return n_removed
 
 
 def write_upsert_partitioned(
@@ -571,9 +653,11 @@ def write_upsert_partitioned(
     with writer_lock(target_path, wait_seconds=lock_wait):
         current = _data_dir(target_path)
         if current is None:
-            out = _dedup(batch, keys, order_col)
+            out = batch
+            if order_col in batch.columns:
+                out = keep_latest(batch, keys, order_col)
         else:
-            target = spark.read.parquet(current)
+            target = _read_version(spark, current)
             # partition-column type inference (string dirs → date/int)
             # must not read as schema drift: align the batch to the
             # target's type
@@ -617,20 +701,14 @@ def additive_upsert(
     This is the maintenance step of an incremental materialized view:
     each micro-batch is aggregated to the rollup grain (tiny) and then
     merged here — the full fact history is never re-read. One shuffle
-    of two already-aggregated sides on the rollup keys.
+    of two already-aggregated sides on the rollup keys (:func:`_merge`'s
+    join; no action flag is read).
     """
-    joined, _, _ = _keyed_join(target, delta, keys)
-    key_cols = [
-        F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k) for k in keys
+    keys_sql = [f"coalesce(t.{k}, b.{k}) AS {k}" for k in map(_q, keys)]
+    sums_sql = [
+        f"coalesce(t.{c}, 0) + coalesce(b.{c}, 0) AS {c}" for c in map(_q, sum_cols)
     ]
-    measure_cols = [
-        (
-            F.coalesce(F.col(f"t.{c}"), F.lit(0))
-            + F.coalesce(F.col(f"b.{c}"), F.lit(0))
-        ).alias(c)
-        for c in sum_cols
-    ]
-    return joined.select(*key_cols, *measure_cols)
+    return _merge(target, delta, keys, (", ".join(keys_sql + sums_sql), None))
 
 
 def scd2_upsert(
@@ -657,37 +735,28 @@ def scd2_upsert(
     the deduped batch. Two shuffles total regardless of history depth.
     """
     keys = _key_list(pk)
-    data_cols = [
-        c for c in target.columns if c not in (*keys, valid_from, valid_to)
+    schema = target.schema
+    data_cols = [c for c in schema.names if c not in (*keys, valid_from, valid_to)]
+    row = [_q(c) for c in (*keys, *data_cols)]
+    vf, vt, ts = map(_q, (valid_from, valid_to, ts_col))
+    kept = [f"t.{c} AS {c}" for c in row] + [
+        f"t.{vf} AS {vf}", f"CASE WHEN __upd THEN b.{ts} END AS {vt}"
     ]
-    batch = keep_latest(batch, keys, ts_col)
-
-    closed = target.filter(F.col(valid_to).isNotNull())
-    current = target.filter(F.col(valid_to).isNull())
-
-    joined, batch_matched, target_matched = _keyed_join(current, batch, keys)
-    insert, _, changed, _ = _classify(
-        batch_matched,
-        target_matched,
-        None,
-        changed_predicate("t", "b", data_cols, audit_col=None),
+    new = [f"b.{c} AS {c}" for c in row] + [
+        f"b.{ts} AS {vf}", f"{null_sql(schema[valid_to].dataType)} AS {vt}"
+    ]
+    merged = _merge(
+        target.filter(F.col(valid_to).isNull()),
+        batch,
+        keys,
+        # surviving current rows: unchanged target rows, or closed-out versions
+        (", ".join(kept), "__tgt"),
+        # new versions: brand-new pks, or the changed rows' replacements
+        (", ".join(new), "__take"),
+        update=_changed_sql(data_cols, audit_col=None),
+        order_col=ts_col,
     )
-
-    # surviving current rows: unchanged target rows, or closed-out versions
-    kept_current = joined.filter(target_matched).select(
-        *[F.col(f"t.{k}").alias(k) for k in keys],
-        *[F.col(f"t.{c}").alias(c) for c in data_cols],
-        F.col(f"t.{valid_from}").alias(valid_from),
-        F.when(changed, F.col(f"b.{ts_col}")).otherwise(None).alias(valid_to),
-    )
-    # new versions: brand-new pks, or the changed rows' replacements
-    new_current = joined.filter(insert | changed).select(
-        *[F.col(f"b.{k}").alias(k) for k in keys],
-        *[F.col(f"b.{c}").alias(c) for c in data_cols],
-        F.col(f"b.{ts_col}").alias(valid_from),
-        F.lit(None).cast(target.schema[valid_to].dataType).alias(valid_to),
-    )
-    return closed.unionByName(kept_current).unionByName(new_current)
+    return target.filter(F.col(valid_to).isNotNull()).unionByName(merged)
 
 
 def conditional_merge(
@@ -706,18 +775,20 @@ def conditional_merge(
     - unmatched target rows persist (no NOT MATCHED BY SOURCE clause).
 
     Predicates are Columns over the ``t``/``b`` aliases (e.g.
-    ``F.col("b.status") == 'F'``), evaluated ONLY on matched pairs —
-    the Delta/Iceberg conditional-clause MERGE surface expressed as a
-    full-outer join + one select, so Catalyst plans it like any other
-    join (broadcast/shuffle by key, AQE-eligible)."""
-    joined, *sides = _keyed_join(target, batch, _key_list(pk))
-    insert, delete, update, _ = _classify(*sides, matched_delete, matched_update)
-    take_batch = insert | update
-    out_cols = [
-        F.when(take_batch, F.col(f"b.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in target.columns
-    ]
-    return joined.filter(~delete).select(*out_cols)
+    ``F.col("b.status") == 'F'``), evaluated ONLY on matched pairs; a
+    clause fires only when its predicate is TRUE (a NULL
+    ``matched_delete`` neither deletes nor updates) — the Delta/Iceberg
+    conditional-clause MERGE surface expressed as :func:`_merge`'s
+    full-outer join, the predicates in one select over it, so Catalyst
+    plans it like any other join (shuffle by key, AQE-eligible)."""
+    return _merge(
+        target,
+        batch,
+        _key_list(pk),
+        (_take_batch_sql(target.columns), "NOT __del"),
+        update=matched_update,
+        delete=matched_delete,
+    )
 
 
 def merge_preview(
@@ -738,21 +809,24 @@ def merge_preview(
     'update' (matched + update pred, not deleted), 'noop_matched'
     (matched, neither clause fires), 'keep_target' (target-only).
     Both sides' columns come back under ``t_``/``b_`` prefixes so the
-    caller can aggregate deltas. Same single full-outer join as the
-    real MERGE — previewing costs exactly one merge plan, no writes."""
-    joined, *sides = _keyed_join(target, batch, _key_list(pk))
-    insert, delete, update, matched = _classify(*sides, matched_delete, matched_update)
+    caller can aggregate deltas. Same :func:`_merge` statement and flags
+    as the real MERGE, so the two cannot disagree — previewing costs
+    exactly one merge plan, no writes."""
     action = (
-        F.when(insert, F.lit("insert"))
-        .when(delete, F.lit("delete"))
-        .when(update, F.lit("update"))
-        .when(matched, F.lit("noop_matched"))
-        .otherwise(F.lit("keep_target"))
+        "CASE WHEN __ins THEN 'insert' WHEN __del THEN 'delete'"
+        " WHEN __upd THEN 'update' WHEN __tgt AND __src THEN 'noop_matched'"
+        " ELSE 'keep_target' END AS action"
     )
-    cols = [action.alias("action")]
-    cols += [F.col(f"t.{c}").alias(f"t_{c}") for c in target.columns]
-    cols += [F.col(f"b.{c}").alias(f"b_{c}") for c in batch.columns]
-    return joined.select(*cols)
+    cols = [f"t.{_q(c)} AS {_q('t_' + c)}" for c in target.columns]
+    cols += [f"b.{_q(c)} AS {_q('b_' + c)}" for c in batch.columns]
+    return _merge(
+        target,
+        batch,
+        _key_list(pk),
+        (", ".join([action, *cols]), None),
+        update=matched_update,
+        delete=matched_delete,
+    )
 
 
 def write_audit_publish(
@@ -782,7 +856,7 @@ def write_audit_publish(
     any table size."""
     with writer_lock(target_path):
         staged_v = _write_version(target_path, df)
-        staged = spark.read.parquet(os.path.join(target_path, staged_v))
+        staged = _read_version(spark, os.path.join(target_path, staged_v))
         n_staged = staged.count()
         # A NULL audit predicate is treated as BAD (quarantined), never
         # silently dropped: the quarantine side takes `pred IS NOT FALSE`
@@ -805,9 +879,7 @@ def write_audit_publish(
         clean_v = _write_version(
             target_path, staged.filter(f"({bad_predicate}) IS FALSE")
         )
-        n_published = spark.read.parquet(
-            os.path.join(target_path, clean_v)
-        ).count()
+        n_published = _read_version(spark, os.path.join(target_path, clean_v)).count()
         _commit(target_path, clean_v, keep_versions=1)
         return {
             "staged_version": staged_v,
@@ -1037,7 +1109,7 @@ def read_branch(spark: SparkSession, target_path: str, name: str) -> DataFrame:
     version BY REFERENCE before one."""
     broot = _branch_root(target_path, name)
     if _current_version(broot) is not None:
-        return spark.read.parquet(table_data_path(broot))
+        return _read_version(spark, table_data_path(broot))
     return read_table(spark, target_path, version=_branch_fork(target_path, name))
 
 
@@ -1071,8 +1143,9 @@ def merge_branch(
     """Three-way merge of branch ``name`` back into main.
 
     base = the fork version, ours = main head, theirs = branch head.
-    A row CHANGED on a side iff it is new or differs null-safely from
-    base. Conflicts (changed on both sides) resolve branch-wins
+    A row CHANGED on a side iff a MERGE of it into base would insert or
+    update it (:func:`_merge`): it is new or differs null-safely from
+    base, NULL keys included. Conflicts (changed on both sides) resolve branch-wins
     (``on_conflict='theirs'``) or raise (``'error'``). Non-conflicting
     changes from both sides land; the merged state commits as a new
     main version under the main writer lease and the branch ref is
@@ -1087,16 +1160,12 @@ def merge_branch(
         base = read_table(spark, target_path, version=fork)
         ours = read_table(spark, target_path)
         theirs = read_branch(spark, target_path, name)
-        non_keys = [c for c in base.columns if c not in keys]
-        changed = changed_predicate("t", "b", non_keys)
+        changed = _changed_sql([c for c in base.columns if c not in keys])
 
         def changed_rows(side: DataFrame) -> DataFrame:
             # the side's rows a MERGE into base would insert or update
-            joined, *sides = _keyed_join(base, side, keys)
-            insert, _, update, _ = _classify(*sides, None, changed)
-            return joined.filter(insert | update).select(
-                *[F.col(f"b.{c}").alias(c) for c in side.columns]
-            )
+            cols = ", ".join(f"b.{c} AS {c}" for c in map(_q, side.columns))
+            return _merge(base, side, keys, (cols, "__take"), update=changed)
 
         th_ch = changed_rows(theirs).localCheckpoint(eager=False)
         our_ch = changed_rows(ours)
