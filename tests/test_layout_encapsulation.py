@@ -23,6 +23,8 @@ LAYOUT_NAMES = {
     "_commit",
     "_publish",
     "_SCHEMA_RECORD",
+    "_DELTAS",
+    "_BRANCH_BASE",
 }
 
 

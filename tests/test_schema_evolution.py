@@ -139,3 +139,24 @@ assert SparkContext._active_spark_context is None
         capture_output=True,
         timeout=120,
     )
+
+
+def test_nested_nullability_is_not_drift():
+    """Non-null array elements, map values and struct fields match their
+    nullable twins: a read returns every level nullable."""
+    from pyspark.sql.types import ArrayType, IntegerType, MapType
+
+    strict = StructType([
+        StructField("tags", ArrayType(IntegerType(), False)),
+        StructField("m", MapType(StringType(), ArrayType(IntegerType(), False), False)),
+        StructField("s", StructType([StructField("a", IntegerType(), False)])),
+    ])
+    loose = StructType([
+        StructField("tags", ArrayType(IntegerType())),
+        StructField("m", MapType(StringType(), ArrayType(IntegerType()))),
+        StructField("s", StructType([StructField("a", IntegerType())])),
+    ])
+    assert not check_schema_drift(strict, loose).has_drift
+    assert not check_schema_drift(loose, strict).has_drift
+    changed = StructType([StructField("tags", ArrayType(LongType(), False))])
+    assert [m.name for m in check_schema_drift(changed, loose).modified_cols] == ["tags"]

@@ -601,12 +601,14 @@ def test_merge_on_read_lifecycle(spark, tmp_path):
     append_mor_delta(spark, root, d2)
     expected = {(1, "a2"), (2, "b2"), (3, "c")}
     assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == expected
-    # compaction folds both logs; the merged view is unchanged
+    # compaction folds both logs into a version without any; the merged
+    # view is unchanged
     assert compact_mor(spark, root, "pk") == 2
-    import glob as g
     import os
 
-    assert not g.glob(os.path.join(root, "deltas", "delta-*.parquet"))
+    import the_movies_db_spark.upsert as U
+
+    assert not os.path.exists(os.path.join(U.table_data_path(root), U._DELTAS))
     assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == expected
 
 
@@ -614,9 +616,10 @@ def test_merge_on_read_lifecycle(spark, tmp_path):
 
 
 def test_branch_lifecycle_three_way_merge(spark, tmp_path):
-    """Planted lifecycle: fork-by-reference read, vacuum protection of
-    the fork version, divergent writes, branch-wins three-way merge
-    with exact hand-computed final state and stats, branch consumed."""
+    """Planted lifecycle: the branch's first version hard-links main's
+    fork version, main vacuums the fork while the branch still reads
+    it, divergent writes, branch-wins three-way merge with exact
+    hand-computed final state and stats, branch consumed."""
     import os
 
     from the_movies_db_spark import upsert as U
@@ -627,9 +630,20 @@ def test_branch_lifecycle_three_way_merge(spark, tmp_path):
     )
     U.write_upsert(spark, root, df, "pk", order_col=None)
     fork = U.branch_create(root, "dev")
-    # by-reference: no version dirs under the branch root yet
+    # the branch's first version is main's fork version, hard-linked:
+    # every file shares its inode
     broot = os.path.join(root, "_branches", "dev")
-    assert U.list_versions(broot) == []
+    first = U.table_data_path(broot)
+    main_dir = os.path.join(root, fork)
+    names = [
+        os.path.relpath(os.path.join(d, f), first)
+        for d, _, fs in os.walk(first) for f in fs
+    ]
+    assert names
+    for n in names:
+        assert os.stat(os.path.join(first, n)).st_ino == os.stat(
+            os.path.join(main_dir, n)
+        ).st_ino
     assert sorted(
         (r.pk, r.s, r.v) for r in U.read_branch(spark, root, "dev").collect()
     ) == [(1, "a", 10), (2, "b", 20), (3, "c", 30)]
@@ -640,8 +654,12 @@ def test_branch_lifecycle_three_way_merge(spark, tmp_path):
                               "pk long, s string, v long"),
         "pk", order_col=None,
     )
-    # vacuum (keep=1) ran, but the fork version must survive
-    assert fork in U.list_versions(root)
+    # main's vacuum (keep=1) retired the fork version; the branch's
+    # links keep its rows readable
+    assert fork not in U.list_versions(root)
+    assert sorted(
+        (r.pk, r.s, r.v) for r in U.read_branch(spark, root, "dev").collect()
+    ) == [(1, "a", 10), (2, "b", 20), (3, "c", 30)]
     # branch diverges: update pk=1 (conflict) + pk=2, insert pk=5
     U.write_upsert_branch(
         spark, root, "dev",
@@ -664,13 +682,7 @@ def test_branch_lifecycle_three_way_merge(spark, tmp_path):
         (5, "e", 50),   # branch insert
     ]
     assert U.list_branches(root) == []  # consumed
-    # fork no longer referenced: the next write's vacuum removes it
-    U.write_upsert(
-        spark, root,
-        spark.createDataFrame([(6, "f", 60)], "pk long, s string, v long"),
-        "pk", order_col=None,
-    )
-    assert fork not in U.list_versions(root)
+    assert not os.path.exists(broot)  # with its files
 
 
 def test_branch_merge_error_policy(spark, tmp_path):
@@ -941,7 +953,9 @@ def test_merge_plan_takes_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch, s
 def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
     """A version read through its schema record has exactly the schema
     (nullability included) that inferring it from the files gives, runs
-    no Spark job, and a drift-evolved version keeps that property."""
+    no Spark job, and a drift-evolved version keeps that property; so do
+    a partitioned version, a merge-on-read version after an append
+    (its base) and a branch head."""
     import os
 
     from pyspark.sql.types import (
@@ -997,7 +1011,7 @@ def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
     assert_recorded(root)
     assert {"extra", "d_string"} <= set(U.read_table(spark, root).columns)
     assert U.read_table(spark, root).count() == 2
-    # a map with non-null values (maps cannot be merged: no <=> on them)
+    # a map with non-null values
     maps = str(tmp_path / "maps")
     U.write_upsert(
         spark, maps,
@@ -1011,3 +1025,95 @@ def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
         "id",
     )
     assert_recorded(maps)
+    # a partitioned version
+    parted = str(tmp_path / "parted")
+    U.write_upsert_partitioned(
+        spark, parted,
+        spark.createDataFrame([(1, "a", 3), (2, "b", 4)], "pk long, v string, p int"),
+        "pk", "p", order_col=None,
+    )
+    assert_recorded(parted)
+    # a merge-on-read version after one append: its base
+    mor = str(tmp_path / "mor")
+    U.write_mor_base(spark.createDataFrame([(1, "a")], "pk long, v string"), mor)
+    U.append_mor_delta(
+        spark, mor, spark.createDataFrame([(1, "U", "b")], "pk long, __op string, v string")
+    )
+    assert os.path.isdir(os.path.join(U.table_data_path(mor), U._DELTAS))
+    assert_recorded(mor)
+    # a branch head
+    U.branch_create(root, "dev")
+    assert_recorded(os.path.join(root, "_branches", "dev"))
+
+
+# ------------------------------------------------- partitions, drift, maps
+
+
+def test_partitioned_upsert_keeps_string_partition_values(spark, tmp_path):
+    """A zero-padded string partition value reads back as the string it
+    was written as, not as the int inferred from its directory name, so
+    the next partitioned upsert replaces its row instead of writing a
+    second copy beside it."""
+    from pyspark.sql.types import StringType
+
+    from the_movies_db_spark import upsert as U
+
+    root = str(tmp_path / "ptbl")
+    schema = "pk long, v string, month string"
+    for rows in ([(1, "a", "01"), (2, "b", "06")], [(1, "A", "01")]):
+        U.write_upsert_partitioned(
+            spark, root, spark.createDataFrame(rows, schema), "pk", "month",
+            order_col=None,
+        )
+    got = U.read_table(spark, root)
+    assert sorted(map(tuple, got.collect())) == [(1, "A", "01"), (2, "b", "06")]
+    assert got.schema["month"].dataType == StringType()
+
+
+def test_upsert_with_nested_non_null_types_adds_no_drift_columns(spark, tmp_path):
+    """A batch built with the schema the table was written from merges
+    into the original columns: non-null array elements and struct
+    fields are not a type change against the all-nullable read."""
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, LongType, StructField, StructType, TimestampType,
+    )
+
+    from the_movies_db_spark.upsert import read_table
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("tags", ArrayType(IntegerType(), False)),
+        StructField("s", StructType([StructField("a", IntegerType(), False)])),
+        StructField("record_loaded_at", TimestampType()),
+    ])
+    root = str(tmp_path / "t")
+    write_upsert(
+        spark, root, spark.createDataFrame([(1, [1], (1,), T0), (2, [2], (2,), T0)], schema),
+        "id",
+    )
+    write_upsert(spark, root, spark.createDataFrame([(1, [1, 9], (5,), T1)], schema), "id")
+    out = read_table(spark, root)
+    assert out.columns == ["id", "tags", "s", "record_loaded_at"]
+    assert sorted((r.id, r.tags, r.s.a, r.record_loaded_at) for r in out.collect()) == [
+        (1, [1, 9], 5, T1), (2, [2], 2, T0),
+    ]
+
+
+def test_upsert_merges_map_column(spark, tmp_path):
+    """A map column merges: a changed map updates its row; an equal map
+    with its keys in another order is a no-op, so the row keeps its
+    audit timestamp."""
+    from the_movies_db_spark.upsert import read_table
+
+    root = str(tmp_path / "t")
+
+    def batch(ts, m1, m2):
+        # SQL map literals fix each map's key order
+        return spark.createDataFrame(
+            [(1, ts), (2, ts)], "id long, record_loaded_at timestamp"
+        ).selectExpr("id", f"CASE id WHEN 1 THEN {m1} ELSE {m2} END AS m", "record_loaded_at")
+
+    write_upsert(spark, root, batch(T0, "map('a', 1L, 'b', 2L)", "map('x', 1L)"), "id")
+    write_upsert(spark, root, batch(T1, "map('b', 2L, 'a', 1L)", "map('x', 5L)"), "id")
+    got = {r.id: (r.m, r.record_loaded_at) for r in read_table(spark, root).collect()}
+    assert got == {1: ({"a": 1, "b": 2}, T0), 2: ({"x": 5}, T1)}

@@ -889,7 +889,7 @@ def upsert_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         F.lit("online").alias("channel"),
     )
-    merged = merge_upsert(t, b, "o_orderkey", order_col=None, evolve=True)
+    merged = merge_upsert(t, b, "o_orderkey", order_col=None)
     return (
         merged.groupBy(
             F.coalesce("channel", F.lit("<null>")).alias("channel")
@@ -1113,11 +1113,11 @@ def upsert_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Merge-on-read table (Hudi MOR / Iceberg v2 delete-file shape "
         "— the OTHER lakehouse point on the write/read trade-off from "
         "the copy-on-write versioned tables): the base is written "
-        "once, two delta logs append O(batch) upserts and deletes "
-        "(one resurrecting previously deleted keys, pinning "
+        "once, two delta logs append O(batch) upserts and deletes as "
+        "new versions (one resurrecting previously deleted keys, pinning "
         "latest-op-wins across logs), and the READER merges the "
-        "base's current version — one window over the delta grain, one "
-        "anti-join of the base, one union. The oracle replays the identical merge in "
+        "current version's base and logs — one window over the delta "
+        "grain, one anti-join of the base, one union. The oracle replays the identical merge in "
         "SQL, so the hash verifies insert/update/delete/resurrect "
         "semantics end to end."
     ),
@@ -1125,13 +1125,13 @@ def upsert_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOR write-path (base + delta logs) and read-path merge.
 
-    Scale notes (100 TB): ingest cost is O(delta file) with no base
-    rewrite; the scan pays one window over deltas (tiny between
-    compactions) and an anti-join AQE broadcasts when the touched set
-    is small; compact_mor commits the merged view as the base's next
-    version when the delta share grows. The base is an ordinary
-    versioned table, the ingest-heavy complement to write_upsert's
-    read-optimized COW versions."""
+    Scale notes (100 TB): ingest cost is O(delta file) plus one hard
+    link per file, with no base rewrite; the scan pays one window over
+    deltas (tiny between compactions) and an anti-join AQE broadcasts
+    when the touched set is small; compact_mor commits the merged view
+    as the next version when the delta share grows. Base and logs are
+    one ordinary versioned table, the ingest-heavy complement to
+    write_upsert's read-optimized COW versions."""
     from the_movies_db_spark.io import scratch_dir
     from the_movies_db_spark.upsert import (
         append_mor_delta,
@@ -1486,9 +1486,9 @@ def upsert_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Nessie-style table branches over the versioned-dir layout: "
-        "branch_create records the fork version (read BY REFERENCE — "
-        "no copy — until the first branch write; vacuum protects the "
-        "fork), main and branch then diverge (updates + inserts on "
+        "branch_create hard-links main's current version as the "
+        "branch's first version and fork snapshot (no data copy), "
+        "main and branch then diverge (updates + inserts on "
         "each side, including deliberate conflicts pk%15==0), and "
         "merge_branch runs a THREE-WAY merge (changed-vs-base on each "
         "side, branch-wins conflicts, both sides' non-conflicting "
@@ -1500,12 +1500,11 @@ def upsert_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_table_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """branch -> diverge -> three-way merge lifecycle census.
 
-    Scale notes (100 TB): branching is O(1) metadata (a fork pointer);
-    branch reads before the first write serve main's version dir by
-    reference; the merge's changed-sets are keyed left-joins against
-    the base version (no full-table diff materialization beyond the
-    changed rows, which are lazily checkpointed for the stats +
-    merge branches)."""
+    Scale notes (100 TB): branching is O(files) hard links (no data is
+    copied) — the branch's first version and its fork snapshot; the
+    merge's changed-sets are keyed left-joins against the fork snapshot
+    (no full-table diff materialization beyond the changed rows, which
+    are lazily checkpointed for the stats + merge branches)."""
     from the_movies_db_spark.io import scratch_dir
     from the_movies_db_spark.upsert import (
         branch_create,

@@ -57,20 +57,34 @@ def _suffixed_name(col: str, incoming_type: str) -> str:
     return f"{col}_{incoming_type}".replace(" ", "_")
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every ``nullable``, ``containsNull`` and
+    ``valueContainsNull`` set, at any depth."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
 def check_schema_drift(incoming: StructType, dest: StructType) -> SchemaDrift:
     """Diff an incoming batch schema against the destination schema.
 
     Returns the columns the destination must gain (new names) and the
     same-name columns whose types differ (structural comparison on
     Spark ``DataType``, not string names — nested/array types compare
-    correctly).
+    correctly). Nullability is not a type: a read returns every level
+    nullable, so a batch whose array elements or struct fields are
+    non-null matches the table it was written to.
     """
     dest_by_name = {f.name: f for f in dest.fields}
     drift = SchemaDrift()
     for f in incoming.fields:
         if f.name not in dest_by_name:
             drift.columns_to_add.append(f)
-        elif f.dataType != dest_by_name[f.name].dataType:
+        elif _nullable(f.dataType) != _nullable(dest_by_name[f.name].dataType):
             drift.modified_cols.append(
                 ModifiedColumn(
                     name=f.name,
@@ -154,13 +168,6 @@ def _project(df: DataFrame, evolved: StructType, source: dict[str, str]) -> Data
     if select == "*":
         return df
     return df.sparkSession.sql(f"SELECT {select} FROM {{df}}", df=df)
-
-
-def align_to(df: DataFrame, evolved: StructType) -> DataFrame:
-    """Project ``df`` onto the evolved schema, filling missing columns
-    with typed NULLs — the engine-side analog of ``ALTER TABLE ADD
-    COLUMN`` on existing data (etl.py:285-290)."""
-    return _project(df, evolved, {c: c for c in df.columns})
 
 
 def drift_sources(

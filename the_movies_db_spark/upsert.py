@@ -30,16 +30,20 @@ of a full outer join, so the whole target is exchanged even when the
 batch is small (the common daily-increment case). With a transactional
 table format (Delta/Iceberg) this maps to native ``MERGE INTO``.
 
-On plain Parquet every table this module writes — copy-on-write,
-partitioned, the merge-on-read base, write-audit-publish — has ONE
-layout: complete ``vNNNNNNNN`` version directories behind an atomic
-``_CURRENT`` pointer. Every writer commits through ``rewrite_table``
-(or, when it holds the writer lease itself, ``_write_version`` +
+On plain Parquet every table state this module writes — copy-on-write,
+partitioned, merge-on-read (base and delta logs), write-audit-publish,
+and every branch — is ONE layout: complete ``vNNNNNNNN`` version
+directories behind an atomic ``_CURRENT`` pointer, each carrying its
+schema record. Every writer commits through ``rewrite_table`` (or,
+when it holds the writer lease itself, ``_write_version`` +
 ``_commit``): write the new version directory, then flip the pointer
 (manifest-guarded swap — a crash at any point leaves the previous
-version readable; see the versioned-table section below). The layout
-is private to this module, so swapping in a transactional format means
-replacing those functions.
+version readable; see the versioned-table section below). Files a new
+version shares with the previous one are carried over by one idiom, a
+hard-linked copy (``shutil.copytree(src, dst, copy_function=os.link)``):
+untouched partitions, the MOR base under a new delta log, a branch's
+fork. The layout is private to this module, so swapping in a
+transactional format means replacing those functions.
 """
 
 from __future__ import annotations
@@ -56,7 +60,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import MapType, StructField, StructType
 
 from the_movies_db_spark.schema_evolution import (
     drift_sources,
@@ -182,10 +186,22 @@ def changed_predicate(
     return reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
 
 
-def _changed_sql(columns: Sequence[str], audit_col: str | None = AUDIT_COLUMN) -> str:
-    """:func:`changed_predicate` over the ``t``/``b`` sides as SQL text."""
-    cols = [_q(c) for c in columns if c != audit_col]
-    preds = [f"NOT (t.{c} <=> b.{c})" for c in cols]
+def _changed_sql(
+    fields: Sequence[StructField], audit_col: str | None = AUDIT_COLUMN
+) -> str:
+    """:func:`changed_predicate` over the ``t``/``b`` sides as SQL text,
+    for the columns ``fields`` describe. A top-level map has no ``<=>``
+    (maps are unordered), so it compares its entries sorted — equal maps
+    match whatever their key order; a map nested in another type stays
+    unsupported (Spark rejects the comparison)."""
+
+    def side(s: str, f: StructField) -> str:
+        c = f"{s}.{_q(f.name)}"
+        return f"array_sort(map_entries({c}))" if isinstance(f.dataType, MapType) else c
+
+    preds = [
+        f"NOT ({side('t', f)} <=> {side('b', f)})" for f in fields if f.name != audit_col
+    ]
     return " OR ".join(preds) or "FALSE"
 
 
@@ -195,12 +211,11 @@ def merge_upsert(
     pk: str | Sequence[str],
     order_col: str | None = AUDIT_COLUMN,
     audit_col: str = AUDIT_COLUMN,
-    evolve: bool = True,
 ) -> DataFrame:
     """SCD-type-1 MERGE as one SQL statement (:func:`_merge`) whose
-    update clause is :func:`changed_predicate`; with ``evolve`` the
-    batch's schema drift (``schema_evolution.drift_sources``) is
-    projected in the same statement.
+    update clause is :func:`changed_predicate`; the batch's schema drift
+    (``schema_evolution.drift_sources``) is projected in the same
+    statement.
 
     WHEN MATCHED AND <any non-audit col changed (null-safe)> THEN take
     the batch row; WHEN MATCHED (no change) THEN keep the target row —
@@ -209,23 +224,17 @@ def merge_upsert(
     ``order_col`` keeps its latest row per key first.
     """
     keys = _key_list(pk)
-    if evolve:
-        evolved, target_src, batch_src = drift_sources(target.schema, batch.schema)
-        columns = batch_cols = evolved.names
-        projections = (
-            projection_sql(evolved, target_src), projection_sql(evolved, batch_src)
-        )
-    else:
-        columns, batch_cols, projections = target.columns, batch.columns, ("*", "*")
-    non_keys = [c for c in columns if c not in keys]
+    evolved, target_src, batch_src = drift_sources(target.schema, batch.schema)
     return _merge(
         target,
         batch,
         keys,
-        (_take_batch_sql(columns), None),
-        update=_changed_sql(non_keys, audit_col),
-        order_col=order_col if order_col in batch_cols else None,
-        projections=projections,
+        (_take_batch_sql(evolved.names), None),
+        update=_changed_sql([f for f in evolved if f.name not in keys], audit_col),
+        order_col=order_col if order_col in evolved.names else None,
+        projections=(
+            projection_sql(evolved, target_src), projection_sql(evolved, batch_src)
+        ),
     )
 
 
@@ -242,6 +251,9 @@ def merge_upsert(
 # A partitioned table is the same layout with `col=value` directories
 # inside each version dir; `_write_version` reads the partitioning off
 # the current version, so every writer keeps it without being told.
+# Every version records its schema (`_SCHEMA`), partitioned ones
+# included, so a partition value reads back with the type it was
+# written with (a string "01" stays "01", not the inferred int 1).
 #
 # The commit protocol lives ONLY here. `rewrite_table` (take the lease,
 # read current, transform, publish) is the public commit path; writers
@@ -254,7 +266,7 @@ def merge_upsert(
 # pointer file.
 
 CURRENT_POINTER = "_CURRENT"
-# an unpartitioned version's schema (Spark's JSON), read instead of inferred
+# a version's schema (Spark's JSON), read instead of inferred
 _SCHEMA_RECORD = "_SCHEMA"
 _VERSION_RE = re.compile(r"v\d{8}$")
 
@@ -392,9 +404,9 @@ def read_table(
 
 def _read_version(spark: SparkSession, data_dir: str) -> DataFrame:
     """Read a table's data dir: through the version's schema record
-    when it has one (no footer-inference job), else by inference (flat
-    roots, partitioned versions — inferred partition types can differ
-    from the written ones — and versions written without a record)."""
+    when it has one (no footer-inference job, partition types as
+    written), else by inference (flat roots and versions written before
+    the record)."""
     try:
         with open(os.path.join(data_dir, _SCHEMA_RECORD)) as fh:
             schema = StructType.fromJson(json.load(fh))
@@ -417,31 +429,27 @@ def _next_version_name(target_path: str) -> str:
     return f"v{n:08d}"
 
 
-def _commit_version(
-    target_path: str, version_name: str, pointer: str = CURRENT_POINTER
-) -> None:
-    """Atomically point ``pointer`` (``_CURRENT`` by default) at
-    ``version_name``: write a temp pointer, fsync, and os.replace it
-    over the live pointer (atomic on POSIX — readers see either the old
-    or the new version, never a torn state)."""
-    tmp = os.path.join(target_path, f".{pointer}.tmp")
+def _commit_version(target_path: str, version_name: str) -> None:
+    """Atomically point ``_CURRENT`` at ``version_name``: write a temp
+    pointer, fsync, and os.replace it over the live pointer (atomic on
+    POSIX — readers see either the old or the new version, never a torn
+    state)."""
+    tmp = os.path.join(target_path, f".{CURRENT_POINTER}.tmp")
     with open(tmp, "w") as fh:
         fh.write(version_name)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(target_path, pointer))
+    os.replace(tmp, os.path.join(target_path, CURRENT_POINTER))
 
 
 def vacuum_table(target_path: str, keep: int = 1) -> list[str]:
     """Remove version dirs older than the ``keep`` most recent at or
     below the current pointer (never the current one, never newer
-    in-flight writes, never a version some live branch forked from —
-    the branch still reads it until its first own write and needs it
-    as the merge base). Returns removed names."""
+    in-flight writes). A file another version or a branch shares is a
+    hard link, so it outlives the removed dir. Returns removed names."""
     current = _current_version(target_path)
     if current is None:
         return []
-    protected = _branch_forks(target_path)
     versions = sorted(
         d for d in os.listdir(target_path)
         if _VERSION_RE.fullmatch(d) and d <= current
@@ -449,7 +457,7 @@ def vacuum_table(target_path: str, keep: int = 1) -> list[str]:
     doomed = versions[:-keep] if keep > 0 else versions[:-1]
     removed = []
     for v in doomed:
-        if v == current or v in protected:
+        if v == current:
             continue
         shutil.rmtree(os.path.join(target_path, v), ignore_errors=True)
         removed.append(v)
@@ -463,9 +471,9 @@ def _write_version(
     current — and return its name. The version is written
     ``partitionBy(partition_col)``; with none given, it keeps the
     partitioning of the current data dir (its ``col=value``
-    subdirectories). An unpartitioned version also gets its schema
-    record, which :func:`_read_version` reads instead of inferring the
-    schema from the footers. Caller holds the writer lease."""
+    subdirectories). The version also gets its schema record, which
+    :func:`_read_version` reads instead of inferring the schema from
+    the footers and partition dirs. Caller holds the writer lease."""
     version = _next_version_name(target_path)
     if partition_col is not None:
         parts = [partition_col]
@@ -478,11 +486,7 @@ def _write_version(
             }
         )
     path = os.path.join(target_path, version)
-    writer = df.write.mode("overwrite")
-    if parts:
-        writer.partitionBy(*parts).parquet(path)
-        return version
-    writer.parquet(path)
+    df.write.mode("overwrite").partitionBy(*parts).parquet(path)
     with open(os.path.join(path, _SCHEMA_RECORD), "w") as fh:
         # made nullable as a Parquet read returns it
         fh.write(df._jdf.schema().asNullable().json())
@@ -588,7 +592,6 @@ def delete_keys(
     keys: DataFrame,
     pk: str | Sequence[str],
     keep_versions: int = 1,
-    lock_wait: float = 0.0,
 ) -> int:
     """MERGE ... WHEN MATCHED THEN DELETE for the versioned table —
     the K2-family operation the reference's upsert surface lacks and
@@ -604,7 +607,7 @@ def delete_keys(
     removed. A partitioned table stays partitioned (the new version
     keeps the current version's partitioning)."""
     pks = _key_list(pk)
-    with writer_lock(target_path, wait_seconds=lock_wait):
+    with writer_lock(target_path):
         target = _read_version(spark, table_data_path(target_path))
         doomed = keys.select(*pks).distinct()
         # the rows the anti-join drops, counted by the same equi-join
@@ -620,7 +623,6 @@ def write_upsert_partitioned(
     pk: str | Sequence[str],
     partition_col: str,
     order_col: str | None = AUDIT_COLUMN,
-    lock_wait: float = 0.0,
 ) -> list[str]:
     """Partition-pruned MERGE into a versioned table written
     ``partitionBy(partition_col)``: only the partitions the batch
@@ -650,7 +652,7 @@ def write_upsert_partitioned(
         str(r[0])
         for r in batch.select(partition_col).distinct().collect()
     ]
-    with writer_lock(target_path, wait_seconds=lock_wait):
+    with writer_lock(target_path):
         current = _data_dir(target_path)
         if current is None:
             out = batch
@@ -658,9 +660,9 @@ def write_upsert_partitioned(
                 out = keep_latest(batch, keys, order_col)
         else:
             target = _read_version(spark, current)
-            # partition-column type inference (string dirs → date/int)
-            # must not read as schema drift: align the batch to the
-            # target's type
+            # a flat partitioned root is read by inference (string dirs
+            # → date/int), which must not read as schema drift: align
+            # the batch to the target's type
             batch = batch.withColumn(
                 partition_col,
                 F.col(partition_col).cast(target.schema[partition_col].dataType),
@@ -753,7 +755,7 @@ def scd2_upsert(
         (", ".join(kept), "__tgt"),
         # new versions: brand-new pks, or the changed rows' replacements
         (", ".join(new), "__take"),
-        update=_changed_sql(data_cols, audit_col=None),
+        update=_changed_sql([schema[c] for c in data_cols], audit_col=None),
         order_col=ts_col,
     )
     return target.filter(F.col(valid_to).isNotNull()).unionByName(merged)
@@ -898,82 +900,89 @@ def write_audit_publish(
 # (Hudi MOR / Iceberg v2 delete files / Delta DVs): writes append tiny
 # DELTA LOGS and the READER merges them against the base — O(delta)
 # ingest, merge cost deferred to scan time, reclaimed by compaction.
-# Layout:  <root>/_CURRENT, <root>/vNNNNNNNN/   (the base: a versioned table)
-#          <root>/deltas/delta-<seq>.parquet   (op: 'U' upsert / 'D' delete)
-# Delta appends take the same writer lease as the COW path; the seq
-# number orders deltas and is embedded in the file name, so readers
-# need no manifest — latest-op-wins per pk across (base < deltas by seq),
-# and within one delta batch the LAST row wins (``__pos``, frozen at
-# write time, breaks intra-batch ties deterministically).
-# The base commits through the same `_publish` as every other table, so
-# compaction is crash-safe at EVERY point: the pointer is either old
-# (deltas intact) or new (deltas re-apply idempotently), and the
-# post-flip vacuum retires the old base and any orphan of a crash.
+# A MOR table is a versioned table like any other; a version holds its
+# base files and its delta logs:
+#     <root>/_CURRENT, <root>/vNNNNNNNN/part-*.parquet    (the base)
+#     <root>/vNNNNNNNN/_deltas/__seq=<n>/part-*.parquet   (op: 'U' / 'D')
+# An append commits a NEW version: the current one hard-linked plus one
+# log. A base read skips `_deltas` (Spark lists no `_`-prefixed dir);
+# the logs read as one table whose partition column `__seq` orders
+# them — latest-op-wins per pk across (base < logs by seq), and within
+# one log the LAST row wins (``__pos``, frozen at write time, breaks
+# intra-batch ties deterministically). Compaction publishes the merged
+# view as a version without logs. Appends and compactions commit
+# through `_commit`, so each is crash-safe at every point: the pointer
+# names the old version or the new one, both complete, and the
+# post-flip vacuum retires the old one and any orphan of a crash.
 # ---------------------------------------------------------------------------
 
 MOR_OP_COL = "__op"
+# a MOR version's delta logs, one `__seq=<n>` dir per append (n zero-padded,
+# so the logs sort alike whether `__seq` is inferred as a number or not)
+_DELTAS = "_deltas"
 # compact once the delta logs outgrow this fraction of the base's bytes
 MOR_MAX_DELTA_FRAC = 0.10
 
 
 def write_mor_base(df: DataFrame, root: str) -> None:
-    """Initialize a merge-on-read table: base data, empty delta log."""
+    """Initialize a merge-on-read table: a base version with no logs."""
     with writer_lock(root):
         _publish(root, df, keep_versions=1)
-    os.makedirs(os.path.join(root, "deltas"), exist_ok=True)
 
 
-def _next_delta_seq(root: str) -> int:
-    seqs = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-        if (m := re.search(r"delta-(\d+)\.parquet$", p))
-    ]
-    return max(seqs, default=0) + 1
+def _delta_logs(data_dir: str) -> list[str]:
+    """The delta-log dirs of the version in ``data_dir``."""
+    return glob.glob(os.path.join(data_dir, _DELTAS, "__seq=*"))
 
 
 def append_mor_delta(spark: SparkSession, root: str, batch: DataFrame) -> int:
     """Append one delta log (rows carry :data:`MOR_OP_COL`: 'U' or
-    'D').
+    'D') as the table's next version; returns the log's seq number.
 
-    Scale notes (100 TB): cost is O(batch) — one parquet write of the
-    delta, no read or rewrite of the base; the writer lease serializes
-    concurrent appenders so seq numbers never collide. Two rows for
-    the same pk WITHIN one batch resolve last-row-wins: ``__pos`` is
-    assigned in row order over the single coalesced partition and
-    frozen in the file, so every later read breaks the tie the same
-    way."""
+    Under the writer lease, the current version is hard-linked into the
+    next version dir, the batch is written there as the newest log
+    ``_deltas/__seq=<n>``, and the version commits through
+    :func:`_commit`.
+
+    Scale notes (100 TB): cost is O(batch) written plus one link per
+    file of the current version — no read or rewrite of the base. Two
+    rows for the same pk WITHIN one batch resolve last-row-wins:
+    ``__pos`` is assigned in row order over the single coalesced
+    partition and frozen in the file, so every later read breaks the
+    tie the same way."""
     with writer_lock(root):
-        seq = _next_delta_seq(root)
-        staging = os.path.join(root, "deltas", f"__stage-{seq}")
+        if _current_version(root) is None:
+            raise FileNotFoundError(f"no merge-on-read base under {root}")
+        version = _next_version_name(root)
+        new = os.path.join(root, version)
+        shutil.copytree(table_data_path(root), new, copy_function=os.link)
+        seq = len(_delta_logs(new)) + 1
         batch.coalesce(1).withColumn(
             "__pos", F.monotonically_increasing_id()
-        ).withColumn("__seq", F.lit(seq)).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(root, "deltas", f"delta-{seq}.parquet"))
-        shutil.rmtree(staging)
+        ).write.parquet(os.path.join(new, _DELTAS, f"__seq={seq:08d}"))
+        _commit(root, version, keep_versions=1)
         return seq
 
 
 def read_mor(spark: SparkSession, root: str, pk: str) -> DataFrame:
-    """Merge-on-read scan: latest-op-wins per pk over (base, deltas).
+    """Merge-on-read scan: latest-op-wins per pk over the base and the
+    delta logs of ONE version (the pointer is resolved once).
 
-    Scale notes (100 TB): the base is scanned ONCE with no rewrite
-    history; the merge is one window over the DELTAS (delta-grain, not
-    base-grain) + one pk anti-join of base against touched pks + a
-    union. The anti-join is NOT force-broadcast: between compactions
-    the delta log is unbounded, and a forced broadcast of a large
-    touched-pk set risks the driver/maxResultSize blowup (round-12
-    lesson) — the touched set is built through a shuffle, so AQE sizes
-    the join from real stats and broadcasts exactly when it is small.
-    ``compact_mor`` folds the logs back when they grow."""
-    base = read_table(spark, root)
-    delta_files = glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-    if not delta_files:
+    Scale notes (100 TB): the base is scanned ONCE (through its schema
+    record) with no rewrite history; the merge is one window over the
+    DELTAS (delta-grain, not base-grain) + one pk anti-join of base
+    against touched pks + a union. The anti-join is NOT force-broadcast:
+    between compactions the delta log is unbounded, and a forced
+    broadcast of a large touched-pk set risks the driver/maxResultSize
+    blowup (round-12 lesson) — the touched set is built through a
+    shuffle, so AQE sizes the join from real stats and broadcasts
+    exactly when it is small. ``compact_mor`` folds the logs back when
+    they grow."""
+    data = table_data_path(root)
+    base = _read_version(spark, data)
+    if not _delta_logs(data):
         return base
-    deltas = spark.read.parquet(*sorted(delta_files))
+    deltas = spark.read.parquet(os.path.join(data, _DELTAS))
     w = Window.partitionBy(pk).orderBy(F.desc("__seq"), F.desc("__pos"))
     latest = (
         deltas.withColumn("__rn", F.row_number().over(w))
@@ -987,47 +996,44 @@ def read_mor(spark: SparkSession, root: str, pk: str) -> DataFrame:
 
 
 def compact_mor(spark: SparkSession, root: str, pk: str) -> int:
-    """Fold every delta into a new base (the MOR maintenance job);
-    returns the number of delta files folded.
+    """Fold every delta log into a new base (the MOR maintenance job);
+    returns the number of logs folded.
 
-    Under the writer lease, the merged view commits as the next base
-    version through :func:`_publish`, and only then are the consumed
-    deltas removed. A crash before the pointer flip leaves the old base
-    + intact deltas (consistent); a crash after it leaves deltas that
-    re-apply idempotently (latest-op-wins is stable under replay: 'U'
-    rewrites the identical row, 'D' anti-joins nothing). The post-flip
-    vacuum retires the old base and any orphan version of a crash."""
+    Under the writer lease, the merged view commits through
+    :func:`_publish` as the next version, which has no ``_deltas``. A
+    crash before the pointer flip leaves the old version (base + logs)
+    current and consistent; the post-flip vacuum retires the old
+    version and any orphan version of a crash."""
     with writer_lock(root):
-        delta_files = sorted(
-            glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-        )
-        if not delta_files:
-            return 0
-        _publish(root, read_mor(spark, root, pk), keep_versions=1)
-        for p in delta_files:
-            os.remove(p)
-        return len(delta_files)
+        n = len(_delta_logs(table_data_path(root)))
+        if n:
+            _publish(root, read_mor(spark, root, pk), keep_versions=1)
+        return n
 
 
 def mor_should_compact(root: str, max_files: int = 64) -> bool:
     """Compaction-cadence policy, pinned by the round-13 probe
     (scripts/probe_r13_mor.md): read_mor degrades LINEARLY with the
-    accumulated delta count (~15 ms per delta file at sf0.1 — file
+    accumulated delta count (~15 ms per delta log at sf0.1 — file
     listing + one task per log + delta-grain window rows), while
     compaction costs one merged read + base write and resets the scan
     to base-only (0.31 s vs 2.96 s at 128 logs). Compact when either
-    the delta FILE COUNT reaches ``max_files`` (task/listing overhead)
-    or the delta BYTES exceed :data:`MOR_MAX_DELTA_FRAC` of the base
-    (window + anti-join work, and the broadcast-size risk read_mor
-    avoids by letting AQE size the join). Pure filesystem metadata —
-    no Spark job."""
-    files = glob.glob(os.path.join(root, "deltas", "delta-*.parquet"))
-    if not files:
-        return False
-    if len(files) >= max_files:
-        return True
-    delta_bytes = sum(os.path.getsize(p) for p in files)
+    the current version's LOG COUNT reaches ``max_files`` (one file per
+    log: task/listing overhead) or the delta BYTES exceed
+    :data:`MOR_MAX_DELTA_FRAC` of the base (window + anti-join work,
+    and the broadcast-size risk read_mor avoids by letting AQE size the
+    join). Pure filesystem metadata — no Spark job."""
     base = table_data_path(root)
+    logs = _delta_logs(base)
+    if not logs:
+        return False
+    if len(logs) >= max_files:
+        return True
+    delta_bytes = sum(
+        os.path.getsize(p)
+        for log in logs
+        for p in glob.glob(os.path.join(log, "*.parquet"))
+    )
     base_bytes = sum(
         os.path.getsize(os.path.join(base, f))
         for f in os.listdir(base)
@@ -1038,18 +1044,18 @@ def mor_should_compact(root: str, max_files: int = 64) -> bool:
 
 # --- table branches (Nessie-style refs over the versioned layout) ----------
 #
-# A branch is a named ref under ``<root>/_branches/<name>``: a ``_FORK``
-# file recording the main version it forked from, plus (after its first
-# write) its OWN versioned layout — the branch root is itself a
-# ``_CURRENT``-pointed table, so every existing primitive (writer lease,
-# atomic pointer commit, vacuum) applies unchanged. Until the first
-# branch write, reads serve the fork version by reference (no copy).
-# ``vacuum_table`` on main never removes a version some live branch
-# forked from. Deletion semantics are out of scope (upsert-only
-# branches), matching ``write_upsert``.
+# A branch is a named ref under ``<root>/_branches/<name>``, itself a
+# versioned table (``_CURRENT``-pointed version dirs), so every
+# primitive (writer lease, commit, vacuum) applies unchanged, plus
+# ``_BASE``: the fork snapshot the three-way merge diffs against. Both
+# start as hard-linked copies of main's current version, so the branch
+# holds its own links to the fork's files and main vacuums without
+# knowing about branches. Deletion semantics are out of scope
+# (upsert-only branches), matching ``write_upsert``.
 
 _BRANCH_DIR = "_branches"
-_FORK_FILE = "_FORK"
+# a branch's fork snapshot: main's version at creation, hard-linked
+_BRANCH_BASE = "_BASE"
 
 
 def _branch_root(target_path: str, name: str) -> str:
@@ -1058,59 +1064,45 @@ def _branch_root(target_path: str, name: str) -> str:
     return os.path.join(target_path, _BRANCH_DIR, name)
 
 
-def _branch_forks(target_path: str) -> set[str]:
-    """Fork versions referenced by live branches (vacuum protection)."""
-    bdir = os.path.join(target_path, _BRANCH_DIR)
-    forks: set[str] = set()
-    if os.path.isdir(bdir):
-        for n in os.listdir(bdir):
-            try:
-                with open(os.path.join(bdir, n, _FORK_FILE)) as fh:
-                    forks.add(fh.read().strip())
-            except OSError:
-                pass
-    return forks
-
-
-def _branch_fork(target_path: str, name: str) -> str:
-    with open(os.path.join(_branch_root(target_path, name), _FORK_FILE)) as fh:
-        return fh.read().strip()
-
-
 def list_branches(target_path: str) -> list[str]:
     bdir = os.path.join(target_path, _BRANCH_DIR)
     if not os.path.isdir(bdir):
         return []
     return sorted(
         n for n in os.listdir(bdir)
-        if os.path.exists(os.path.join(bdir, n, _FORK_FILE))
+        if _current_version(os.path.join(bdir, n)) is not None
     )
 
 
-def branch_create(target_path: str, name: str, lock_wait: float = 0.0) -> str:
+def branch_create(target_path: str, name: str) -> str:
     """Create branch ``name`` at the current main version and return
-    that fork version. Runs under the MAIN writer lease so the fork
-    pointer can never reference a version a concurrent writer's
-    vacuum is removing."""
-    with writer_lock(target_path, wait_seconds=lock_wait):
+    that fork version. Under the MAIN writer lease (so the fork cannot
+    be vacuumed mid-copy), main's current version is hard-linked into
+    the branch root twice: as ``_BASE`` and as the branch's first
+    version, which commits through the branch's pointer. Creation costs
+    one link per file of the version (O(files), not an O(1) pointer);
+    in return the fork's files live as long as the branch does."""
+    with writer_lock(target_path):
         fork = _current_version(target_path)
         if fork is None:
             raise ValueError(f"cannot branch empty table {target_path}")
         broot = _branch_root(target_path, name)
         if os.path.exists(broot):
             raise ValueError(f"branch already exists: {name}")
-        os.makedirs(broot)
-        _commit_version(broot, fork, _FORK_FILE)
+        first = _next_version_name(broot)
+        for d in (_BRANCH_BASE, first):
+            shutil.copytree(
+                os.path.join(target_path, fork),
+                os.path.join(broot, d),
+                copy_function=os.link,
+            )
+        _commit_version(broot, first)
     return fork
 
 
 def read_branch(spark: SparkSession, target_path: str, name: str) -> DataFrame:
-    """Branch head: its own current version after a write, the fork
-    version BY REFERENCE before one."""
-    broot = _branch_root(target_path, name)
-    if _current_version(broot) is not None:
-        return _read_version(spark, table_data_path(broot))
-    return read_table(spark, target_path, version=_branch_fork(target_path, name))
+    """Branch head: :func:`read_table` of the branch root."""
+    return read_table(spark, _branch_root(target_path, name))
 
 
 def write_upsert_branch(
@@ -1120,16 +1112,13 @@ def write_upsert_branch(
     batch: DataFrame,
     pk: str | Sequence[str],
     order_col: str | None = None,
-    lock_wait: float = 0.0,
 ) -> None:
     """Upsert ``batch`` into the branch head (never touches main):
-    read branch head -> merge -> commit a new version under the
-    BRANCH root's own writer lease."""
-    broot = _branch_root(target_path, name)
-    with writer_lock(broot, wait_seconds=lock_wait):
-        cur = read_branch(spark, target_path, name)
-        out = merge_upsert(cur, batch, pk, order_col=order_col)
-        _publish(broot, out, keep_versions=1)
+    :func:`write_upsert` of the branch root, under its own writer
+    lease."""
+    if name not in list_branches(target_path):
+        raise ValueError(f"no branch {name!r} on {target_path}")
+    write_upsert(spark, _branch_root(target_path, name), batch, pk, order_col)
 
 
 def merge_branch(
@@ -1138,11 +1127,11 @@ def merge_branch(
     name: str,
     pk: str | Sequence[str],
     on_conflict: str = "theirs",
-    lock_wait: float = 0.0,
 ) -> dict:
     """Three-way merge of branch ``name`` back into main.
 
-    base = the fork version, ours = main head, theirs = branch head.
+    base = the branch's ``_BASE`` (the fork snapshot), ours = main
+    head, theirs = branch head.
     A row CHANGED on a side iff a MERGE of it into base would insert or
     update it (:func:`_merge`): it is new or differs null-safely from
     base, NULL keys included. Conflicts (changed on both sides) resolve branch-wins
@@ -1155,12 +1144,12 @@ def merge_branch(
     if on_conflict not in ("theirs", "error"):
         raise ValueError(f"unknown on_conflict policy: {on_conflict!r}")
     keys = _key_list(pk)
-    with writer_lock(target_path, wait_seconds=lock_wait):
-        fork = _branch_fork(target_path, name)
-        base = read_table(spark, target_path, version=fork)
+    broot = _branch_root(target_path, name)
+    with writer_lock(target_path):
+        base = _read_version(spark, os.path.join(broot, _BRANCH_BASE))
         ours = read_table(spark, target_path)
-        theirs = read_branch(spark, target_path, name)
-        changed = _changed_sql([c for c in base.columns if c not in keys])
+        theirs = read_table(spark, broot)
+        changed = _changed_sql([f for f in base.schema if f.name not in keys])
 
         def changed_rows(side: DataFrame) -> DataFrame:
             # the side's rows a MERGE into base would insert or update
@@ -1178,9 +1167,7 @@ def merge_branch(
             )
         merged = merge_upsert(ours, th_ch, pk, order_col=None)
         version = _publish(target_path, merged, keep_versions=1)
-        shutil.rmtree(_branch_root(target_path, name), ignore_errors=True)
-        # the consumed branch no longer protects its fork version
-        vacuum_table(target_path, keep=1)
+        shutil.rmtree(broot, ignore_errors=True)
         return {
             "n_branch_changes": n_theirs,
             "n_main_changes": n_ours,
