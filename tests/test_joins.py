@@ -84,12 +84,13 @@ def test_compact_table(spark, sf_dir, tmp_path):
     import os
 
     from the_movies_db_spark.io import compact_table, load_table
-    from the_movies_db_spark.upsert import read_table, table_data_path
+    from the_movies_db_spark.upsert import read_table, rewrite_table, table_data_path
 
     path = str(tmp_path / "frag")
     # simulate small-file accretion: 64 tiny files
-    load_table(spark, sf_dir, "orders").repartition(64).write.parquet(path)
-    before_rows = spark.read.parquet(path).count()
+    df = load_table(spark, sf_dir, "orders")
+    rewrite_table(spark, path, lambda _: df.repartition(64))
+    before_rows = read_table(spark, path).count()
 
     files_before, files_after = compact_table(
         spark, path, target_file_mb=128, sort_within_by=["o_orderdate"]

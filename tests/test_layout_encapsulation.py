@@ -24,6 +24,7 @@ LAYOUT_NAMES = {
     "_publish",
     "_SCHEMA_RECORD",
     "_DELTAS",
+    "_KEYS_RECORD",
     "_BRANCH_BASE",
 }
 

@@ -122,12 +122,12 @@ def test_tar_datasource_partitions_and_unnamed_shards(spark, tmp_path):
 
 
 def test_mor_read_after_compact_equals_cow_merge(spark, tmp_path):
-    """Property: for any (base, delta) pair, read_mor == merge_upsert
+    """Property: for any (base, delta) pair, read_table == merge_upsert
     restricted to the same op semantics (U rows upsert, D rows
     delete)."""
     from the_movies_db_spark.upsert import (
         append_mor_delta,
-        read_mor,
+        read_table,
         write_mor_base,
     )
 
@@ -140,8 +140,8 @@ def test_mor_read_after_compact_equals_cow_merge(spark, tmp_path):
         [(i, "D" if i % 3 == 0 else "U", f"u{i}") for i in range(0, 30, 2)],
         "pk long, __op string, v string",
     )
-    append_mor_delta(spark, root, delta)
-    got = {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()}
+    append_mor_delta(spark, root, delta, "pk")
+    got = {(r.pk, r.v) for r in read_table(spark, root).collect()}
     expect = {(i, f"v{i}") for i in range(20)}
     for i in range(0, 30, 2):
         if i % 3 == 0:
@@ -265,7 +265,7 @@ def test_mor_intra_batch_ties_resolve_last_row_wins(spark, tmp_path):
     nondeterministic."""
     from the_movies_db_spark.upsert import (
         append_mor_delta,
-        read_mor,
+        read_table,
         write_mor_base,
     )
 
@@ -278,14 +278,14 @@ def test_mor_intra_batch_ties_resolve_last_row_wins(spark, tmp_path):
          (1, "U", "last")],
         "pk long, __op string, v string",
     ).coalesce(1)
-    append_mor_delta(spark, root, dup)
+    append_mor_delta(spark, root, dup, "pk")
     for _ in range(5):  # stable across repeated reads
-        got = [(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()]
+        got = [(r.pk, r.v) for r in read_table(spark, root).collect()]
         assert got == [(1, "last")]
 
 
 def test_mor_compact_crash_safety_via_pointer(spark, tmp_path, monkeypatch):
-    """compact_mor is crash-safe at every point (round-12 advice: the
+    """Compacting a MOR table (io.compact_table) is crash-safe at every point (round-12 advice: the
     old base-dir rename pair could strand the table with NO base).
     Compaction is one commit, so its one crash window is the pointer
     flip: a crash AFTER the new version is written but BEFORE the flip
@@ -296,11 +296,11 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path, monkeypatch):
     import pytest
 
     import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import compact_table
     from the_movies_db_spark.upsert import (
         append_mor_delta,
-        compact_mor,
         list_versions,
-        read_mor,
+        read_table,
         write_mor_base,
     )
 
@@ -315,7 +315,7 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path, monkeypatch):
         [(0, "D", ""), (1, "U", "u1"), (9, "U", "u9")],
         "pk long, __op string, v string",
     )
-    append_mor_delta(spark, root, delta)
+    append_mor_delta(spark, root, delta, "pk")
     expect = {(1, "u1"), (9, "u9")} | {(i, f"v{i}") for i in range(2, 6)}
 
     class Crash(RuntimeError):
@@ -329,13 +329,12 @@ def test_mor_compact_crash_safety_via_pointer(spark, tmp_path, monkeypatch):
     base = U._current_version(root)
     with monkeypatch.context() as m, pytest.raises(Crash):
         m.setattr(U, "_before_pointer_flip", crash)
-        compact_mor(spark, root, "pk")
+        compact_table(spark, root)
     assert U._current_version(root) == base
     assert len(list_versions(root)) == 2
-    assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
+    assert {(r.pk, r.v) for r in read_table(spark, root).collect()} == expect
     # recovery = just run compaction again: retires the orphan, folds
-    n = compact_mor(spark, root, "pk")
-    assert n == 1
-    assert {(r.pk, r.v) for r in read_mor(spark, root, "pk").collect()} == expect
+    compact_table(spark, root)
+    assert {(r.pk, r.v) for r in read_table(spark, root).collect()} == expect
     assert not os.path.exists(os.path.join(U.table_data_path(root), U._DELTAS))
     assert list_versions(root) == [U._current_version(root)]

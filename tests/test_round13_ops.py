@@ -112,13 +112,13 @@ def test_mor_should_compact_policy(spark, tmp_path):
     )
     assert not mor_should_compact(root)  # no deltas
     small = spark.createDataFrame([(1, "U", "y")], "pk long, __op string, v string")
-    append_mor_delta(spark, root, small)
+    append_mor_delta(spark, root, small, "pk")
     assert not mor_should_compact(root)  # one tiny log
     assert mor_should_compact(root, max_files=1)  # file-count trigger
     big = spark.createDataFrame(
         [(i, "U", "z" * 200) for i in range(2000)], "pk long, __op string, v string"
     )
-    append_mor_delta(spark, root, big)
+    append_mor_delta(spark, root, big, "pk")
     assert mor_should_compact(root)  # byte-fraction trigger
 
 

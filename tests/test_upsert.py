@@ -91,9 +91,27 @@ def test_changed_predicate_excludes_audit(spark):
     b = _df(spark, [(1, "a", T1)]).alias("b")
     joined = t.join(b, "id")
     n = joined.filter(
-        changed_predicate("t", "b", ["val", "record_loaded_at"])
+        changed_predicate([f for f in t.schema if f.name != "id"])
     ).count()
     assert n == 0
+
+
+def test_conditional_merge_with_changed_predicate_on_map_column(spark):
+    """The public change test is the SQL one, so a conditional MERGE
+    over a MAP column updates the changed row and keeps the equal one
+    (a null-safe ``<=>`` on a map fails analysis)."""
+    from the_movies_db_spark.upsert import conditional_merge
+
+    schema = "id long, m map<string,bigint>"
+    target = spark.createDataFrame([(1, {"a": 1}), (2, {"x": 1})], schema)
+    batch = spark.createDataFrame([(1, {"a": 1}), (2, {"x": 5})], schema)
+    out = conditional_merge(
+        target, batch, "id",
+        matched_update=changed_predicate([target.schema["m"]]),
+    )
+    assert sorted((r.id, r.m) for r in out.collect()) == [
+        (1, {"a": 1}), (2, {"x": 5}),
+    ]
 
 
 def test_with_audit_column(spark):
@@ -570,46 +588,104 @@ def test_write_audit_publish_vacuums_to_published_version(spark, tmp_path):
 def test_merge_on_read_lifecycle(spark, tmp_path):
     """MOR: O(delta) appends, latest-op-wins reads (delete, update,
     insert, resurrect), compaction folds logs and preserves the view."""
+    import os
+
+    import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import compact_table
     from the_movies_db_spark.upsert import (
         append_mor_delta,
-        compact_mor,
-        read_mor,
+        read_table,
         write_mor_base,
     )
+
+    def rows():
+        return {tuple(r) for r in read_table(spark, root).collect()}
 
     root = str(tmp_path / "mor")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "pk long, v string"
     )
     write_mor_base(base, root)
-    assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == {
-        (1, "a"), (2, "b"), (3, "c"),
-    }
-    # delta 1: update 1, delete 2, insert 4
+    assert rows() == {(1, "a"), (2, "b"), (3, "c")}
+    # delta 1: update 1, delete 2, insert 4; deleting the absent 5
+    # inserts nothing
     d1 = spark.createDataFrame(
-        [(1, "U", "a2"), (2, "D", None), (4, "U", "d")],
+        [(1, "U", "a2"), (2, "D", None), (4, "U", "d"), (5, "D", None)],
         "pk long, __op string, v string",
     ).select("pk", "__op", "v")
-    append_mor_delta(spark, root, d1)
-    assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == {
-        (1, "a2"), (3, "c"), (4, "d"),
-    }
+    append_mor_delta(spark, root, d1, "pk")
+    assert rows() == {(1, "a2"), (3, "c"), (4, "d")}
     # delta 2: resurrect 2, delete 4 — latest seq wins over delta 1
     d2 = spark.createDataFrame(
         [(2, "U", "b2"), (4, "D", None)], "pk long, __op string, v string"
     )
-    append_mor_delta(spark, root, d2)
+    append_mor_delta(spark, root, d2, "pk")
     expected = {(1, "a2"), (2, "b2"), (3, "c")}
-    assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == expected
+    assert rows() == expected
+    # the logs fold on the key the first append recorded
+    with pytest.raises(ValueError, match="another key"):
+        append_mor_delta(spark, root, d2, "v")
+    assert rows() == expected
     # compaction folds both logs into a version without any; the merged
     # view is unchanged
-    assert compact_mor(spark, root, "pk") == 2
+    compact_table(spark, root)
+    assert not os.path.exists(os.path.join(U.table_data_path(root), U._DELTAS))
+    assert rows() == expected
+
+
+def test_merge_on_read_null_key_matches_null_key(spark, tmp_path):
+    """A NULL key is a key in a merge-on-read fold too: the log's
+    NULL-key row replaces the base's, as ``write_upsert`` would."""
+    from the_movies_db_spark.upsert import append_mor_delta, read_table, write_mor_base
+
+    root = str(tmp_path / "mor")
+    write_mor_base(
+        spark.createDataFrame([(None, "a"), (1, "x")], "pk long, v string"), root
+    )
+    append_mor_delta(
+        spark, root,
+        spark.createDataFrame([(None, "U", "b")], "pk long, __op string, v string"),
+        "pk",
+    )
+    got = [tuple(r) for r in read_table(spark, root).collect()]
+    assert sorted(got, key=str) == sorted([(1, "x"), (None, "b")], key=str)
+
+
+def test_copy_on_write_writers_keep_merge_on_read_logs(spark, tmp_path):
+    """A copy-on-write writer on a merge-on-read root rewrites the
+    merged view: ``delete_keys`` of an absent key keeps the logged row,
+    and ``io.compact_table`` folds the logs away with the rows intact."""
     import os
 
     import the_movies_db_spark.upsert as U
+    from the_movies_db_spark.io import compact_table
 
+    root = str(tmp_path / "mor")
+    U.write_mor_base(
+        spark.createDataFrame([(1, "a"), (2, "b")], "pk long, v string"), root
+    )
+    U.append_mor_delta(
+        spark, root,
+        spark.createDataFrame(
+            [(1, "U", "a1"), (2, "D", None)], "pk long, __op string, v string"
+        ),
+        "pk",
+    )
+
+    def rows():
+        return sorted(map(tuple, U.read_table(spark, root).collect()))
+
+    assert rows() == [(1, "a1")]
+    U.delete_keys(spark, root, spark.createDataFrame([(99,)], "pk long"), "pk")
+    assert rows() == [(1, "a1")]
+    U.append_mor_delta(
+        spark, root,
+        spark.createDataFrame([(3, "U", "c")], "pk long, __op string, v string"),
+        "pk",
+    )
+    compact_table(spark, root)
     assert not os.path.exists(os.path.join(U.table_data_path(root), U._DELTAS))
-    assert {tuple(r) for r in read_mor(spark, root, "pk").collect()} == expected
+    assert rows() == [(1, "a1"), (3, "c")]
 
 
 # ---------------------------------------------------------------- branches
@@ -728,91 +804,36 @@ def test_compact_table_takes_writer_lease(spark, tmp_path):
     assert _as_map(U.read_table(spark, root)).keys() == {1, 2}
 
 
-def test_flat_parquet_root_upgrades_on_first_upsert(spark, tmp_path):
-    """A flat-Parquet root (plain io.write_table output, no pointer)
-    holds data: the first upsert merges into it and leaves a versioned
-    table behind."""
+def test_flat_parquet_root_is_refused(spark, tmp_path):
+    """A flat-Parquet root (plain ``df.write.parquet`` output, no
+    pointer) is not a table: every reader and writer of the upsert
+    layer raises ``ValueError`` naming the root and leaves its files
+    in place."""
     import os
+    import re
 
     import the_movies_db_spark.upsert as U
-    from the_movies_db_spark.io import write_table
+    from the_movies_db_spark.io import compact_table
 
     root = str(tmp_path / "flat")
-    write_table(_df(spark, [(1, "a", T0), (2, "b", T0)]), root)
-    assert not os.path.exists(os.path.join(root, U.CURRENT_POINTER))
-    write_upsert(spark, root, _df(spark, [(2, "B", T1), (3, "c", T1)]), "id")
-    got = {k: v.val for k, v in _as_map(U.read_table(spark, root)).items()}
-    assert got == {1: "a", 2: "B", 3: "c"}
-    assert U._current_version(root) in U.list_versions(root)
-    # the superseded flat files are gone: a plain read of the root
-    # cannot serve the stale pre-upgrade rows
-    assert _flat_leftovers(root) == []
-
-
-def _flat_leftovers(root):
-    """Root-level entries of a flat-Parquet layout: data files, their
-    .crc / _SUCCESS siblings, col=value dirs."""
-    import os
-
-    return sorted(
-        f for f in os.listdir(root)
-        if "=" in f or f.endswith((".parquet", ".crc")) or f == "_SUCCESS"
+    df = spark.createDataFrame(
+        [(1, "a", "d1"), (2, "b", "d2")], "id long, val string, day string"
     )
-
-
-def test_flat_partitioned_root_upgrades_on_first_partitioned_upsert(
-    spark, tmp_path
-):
-    """A flat root written partitionBy(day) upgrades on its first
-    write_upsert_partitioned: untouched partitions carry over into the
-    version, and the root keeps no col=value dir of the old layout."""
-    import the_movies_db_spark.upsert as U
-    from the_movies_db_spark.io import write_table
-
-    root = str(tmp_path / "flatp")
-    schema = "pk long, v string, day string"
-    write_table(
-        spark.createDataFrame(
-            [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")], schema
+    df.write.parquet(root)
+    files = sorted(os.listdir(root))
+    calls = {
+        "write_upsert": lambda: U.write_upsert(spark, root, df, "id", order_col=None),
+        "write_upsert_partitioned": lambda: U.write_upsert_partitioned(
+            spark, root, df, "id", "day", order_col=None
         ),
-        root,
-        partition_by=["day"],
-    )
-    batch = spark.createDataFrame([(1, "A", "2024-01-01")], schema)
-    U.write_upsert_partitioned(spark, root, batch, "pk", "day", order_col=None)
-    got = {r.pk: (r.v, str(r.day)) for r in U.read_table(spark, root).collect()}
-    assert got == {1: ("A", "2024-01-01"), 2: ("b", "2024-01-02")}
-    assert _flat_leftovers(root) == []
-
-
-def test_compact_flat_dir_crash_before_flip_keeps_rows(spark, tmp_path):
-    """Compacting a plain flat dir commits through the versioned commit
-    path: a crash before the pointer flip leaves the original rows
-    readable through read_table, and a retry upgrades the dir."""
-    import the_movies_db_spark.upsert as U
-    from the_movies_db_spark.io import compact_table, write_table
-
-    root = str(tmp_path / "flat")
-    write_table(_df(spark, [(1, "a", T0), (2, "b", T0)]).repartition(2), root)
-
-    def crash():
-        raise RuntimeError("simulated crash before pointer flip")
-
-    U._before_pointer_flip = crash
-    try:
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            compact_table(spark, root)
-    finally:
-        U._before_pointer_flip = None
-
-    def rows():
-        return sorted((r.id, r.val) for r in U.read_table(spark, root).collect())
-
-    assert rows() == [(1, "a"), (2, "b")]
-    compact_table(spark, root)
-    assert rows() == [(1, "a"), (2, "b")]
-    assert _flat_leftovers(root) == []
-    assert U.list_versions(root) == [U._current_version(root)]
+        "delete_keys": lambda: U.delete_keys(spark, root, df, "id"),
+        "read_table": lambda: U.read_table(spark, root),
+        "compact_table": lambda: compact_table(spark, root),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=re.escape(root)):
+            call()
+        assert sorted(os.listdir(root)) == files, name
 
 
 # ------------------------------------------------- NULL keys and predicates
@@ -955,7 +976,7 @@ def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
     (nullability included) that inferring it from the files gives, runs
     no Spark job, and a drift-evolved version keeps that property; so do
     a partitioned version, a merge-on-read version after an append
-    (its base) and a branch head."""
+    (its merged view) and a branch head."""
     import os
 
     from pyspark.sql.types import (
@@ -1033,11 +1054,13 @@ def test_read_table_schema_equals_inferred_schema(spark, tmp_path):
         "pk", "p", order_col=None,
     )
     assert_recorded(parted)
-    # a merge-on-read version after one append: its base
+    # a merge-on-read version after one append: its merged view
     mor = str(tmp_path / "mor")
     U.write_mor_base(spark.createDataFrame([(1, "a")], "pk long, v string"), mor)
     U.append_mor_delta(
-        spark, mor, spark.createDataFrame([(1, "U", "b")], "pk long, __op string, v string")
+        spark, mor,
+        spark.createDataFrame([(1, "U", "b")], "pk long, __op string, v string"),
+        "pk",
     )
     assert os.path.isdir(os.path.join(U.table_data_path(mor), U._DELTAS))
     assert_recorded(mor)

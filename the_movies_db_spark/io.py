@@ -375,9 +375,9 @@ def compact_table(
     (files_before, files_after). The rewrite commits as a new version
     through ``upsert.rewrite_table`` — under the writer lease, so it
     raises ``upsert.WriterLockError`` instead of racing a concurrent
-    upsert, and crash-safe via the atomic pointer flip. A plain flat
-    dir is upgraded to the versioned layout by its first compaction;
-    read it back with ``upsert.read_table``.
+    upsert, and crash-safe via the atomic pointer flip. It rewrites the
+    merged view, so a merge-on-read table's delta logs fold into the
+    new version; a root that is not a versioned table is refused.
     """
     import glob
 

@@ -219,11 +219,14 @@ def schema_drift_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def upsert_change_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    target = _target(spark, sf_dir)
     preview = merge_preview(
-        _target(spark, sf_dir),
+        target,
         _batch(spark, sf_dir),
         "o_orderkey",
-        matched_update=changed_predicate("t", "b", ["price", "status"]),
+        matched_update=changed_predicate(
+            [f for f in target.schema if f.name != "o_orderkey"]
+        ),
     )
     return (
         preview.replace(
@@ -354,11 +357,14 @@ def upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the diff of the first version against current is a MERGE
     # preview of one into the other
+    first = read_table(spark, tbl, version=list_versions(tbl)[0])
     diff = merge_preview(
-        read_table(spark, tbl, version=list_versions(tbl)[0]),
+        first,
         read_table(spark, tbl),
         "o_orderkey",
-        matched_update=changed_predicate("t", "b", ["price", "status"]),
+        matched_update=changed_predicate(
+            [f for f in first.schema if f.name != "o_orderkey"]
+        ),
     )
     action = F.col("action")
     return diff.agg(
@@ -1115,9 +1121,9 @@ def upsert_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the copy-on-write versioned tables): the base is written "
         "once, two delta logs append O(batch) upserts and deletes as "
         "new versions (one resurrecting previously deleted keys, pinning "
-        "latest-op-wins across logs), and the READER merges the "
-        "current version's base and logs — one window over the delta "
-        "grain, one anti-join of the base, one union. The oracle replays the identical merge in "
+        "latest-op-wins across logs), and read_table folds the current "
+        "version's logs into its base through the one MERGE core (the "
+        "latest log row per key, a 'D' dropping it). The oracle replays the identical merge in "
         "SQL, so the hash verifies insert/update/delete/resurrect "
         "semantics end to end."
     ),
@@ -1126,16 +1132,16 @@ def upsert_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOR write-path (base + delta logs) and read-path merge.
 
     Scale notes (100 TB): ingest cost is O(delta file) plus one hard
-    link per file, with no base rewrite; the scan pays one window over
-    deltas (tiny between compactions) and an anti-join AQE broadcasts
-    when the touched set is small; compact_mor commits the merged view
-    as the next version when the delta share grows. Base and logs are
-    one ordinary versioned table, the ingest-heavy complement to
-    write_upsert's read-optimized COW versions."""
+    link per file, with no base rewrite; the scan pays one MERGE of the
+    deduped logs (tiny between compactions) into the base;
+    io.compact_table commits the merged view as the next version when
+    the delta share grows. Base and logs are one ordinary versioned
+    table, the ingest-heavy complement to write_upsert's read-optimized
+    COW versions."""
     from the_movies_db_spark.io import scratch_dir
     from the_movies_db_spark.upsert import (
         append_mor_delta,
-        read_mor,
+        read_table,
         write_mor_base,
     )
 
@@ -1152,15 +1158,15 @@ def upsert_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cents") + 500).alias("cents"),
         "status",
     )
-    append_mor_delta(spark, root, d1)
+    append_mor_delta(spark, root, d1, "pk")
     d2 = o.filter("pk % 14 = 0").select(
         "pk",
         F.lit("U").alias("__op"),
         (F.col("cents") + 900).alias("cents"),
         "status",
     )
-    append_mor_delta(spark, root, d2)
-    merged = read_mor(spark, root, "pk")
+    append_mor_delta(spark, root, d2, "pk")
+    merged = read_table(spark, root)
     return (
         merged.groupBy("status")
         .agg(

@@ -21,8 +21,9 @@ side, the null-safe full-outer join, the action flags as lateral
 aliases and a ``CASE WHEN`` per output column — passed to
 ``spark.sql(text, t=target, b=batch)``, so the plan costs a handful of
 JVM calls whatever the column count. A clause fires only when its
-predicate is TRUE, as in SQL MERGE. ``changed_predicate`` (and its SQL
-twin ``_changed_sql``) is the one change test.
+predicate is TRUE, as in SQL MERGE. ``changed_predicate`` (SQL text
+over ``t``/``b``) is the one change test, and ``_latest_sql`` the one
+keep-latest dedup.
 
 Physical shape at 100 TB: one shuffle of each side on ``pk`` for the
 full-outer join (AQE handles skew). Spark cannot broadcast either side
@@ -42,8 +43,13 @@ version readable; see the versioned-table section below). Files a new
 version shares with the previous one are carried over by one idiom, a
 hard-linked copy (``shutil.copytree(src, dst, copy_function=os.link)``):
 untouched partitions, the MOR base under a new delta log, a branch's
-fork. The layout is private to this module, so swapping in a
-transactional format means replacing those functions.
+fork. ``_read_version`` is the one reader of a version: it reads the
+base through the schema record and folds a merge-on-read version's
+delta logs into it with the same ``_merge``, so every reader and
+copy-on-write writer sees the merged view. A root is an empty dir or a
+versioned table; anything else (a flat-Parquet dir) is refused. The
+layout is private to this module, so swapping in a transactional
+format means replacing those functions.
 """
 
 from __future__ import annotations
@@ -56,11 +62,12 @@ import shutil
 import time
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType, LongType, MapType, StringType, StructField, StructType,
+)
 
 from the_movies_db_spark.schema_evolution import (
     drift_sources,
@@ -88,15 +95,15 @@ def _merge(
     *outputs: tuple[str, str | None],
     update: str | Column | None = None,
     delete: Column | None = None,
-    order_col: str | None = None,
+    order: Sequence[str] = (),
     projections: tuple[str, str] = ("*", "*"),
 ) -> DataFrame:
     """THE MERGE core, as one SQL statement: the null-safe full-outer
     join of ``target`` (``t``, projected by ``projections[0]``) and
     ``batch`` (``b``, projected by ``projections[1]``, then deduped
-    keep-latest by ``order_col`` when given) on ``keys``. Each side
-    carries a ``TRUE`` presence marker, so a NULL key never reads as an
-    absent side. The action flags, as lateral aliases: ``__tgt`` /
+    keep-latest by the ``order`` columns, each descending, when given:
+    :func:`_latest_sql`) on ``keys``. Each side carries a ``TRUE``
+    presence marker, so a NULL key never reads as an absent side. The action flags, as lateral aliases: ``__tgt`` /
     ``__src`` (that side supplied a row); ``__ins`` (batch row only);
     ``__del`` (matched and ``delete`` TRUE); ``__upd`` (matched and
     ``NOT delete AND update`` TRUE, an absent predicate dropping out);
@@ -111,12 +118,8 @@ def _merge(
     spark = target.sparkSession
     on = " AND ".join(f"t.{k} <=> b.{k}" for k in map(_q, keys))
     side_b = "{b}" if projections[1] == "*" else f"(SELECT {projections[1]} FROM {{b}})"
-    if order_col is not None:
-        side_b = (
-            "(SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() OVER "
-            f"(PARTITION BY {', '.join(map(_q, keys))} ORDER BY {_q(order_col)} DESC)"
-            f" AS __rn FROM {side_b}) WHERE __rn = 1)"
-        )
+    if order:
+        side_b = f"({_latest_sql(side_b, keys, order)})"
     source = (
         f"(SELECT {projections[0]}, TRUE AS __t FROM {{t}}) t FULL OUTER JOIN "
         f"(SELECT *, TRUE AS __b FROM {side_b}) b ON {on}"
@@ -160,40 +163,37 @@ def _take_batch_sql(columns: Sequence[str]) -> str:
     )
 
 
-def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataFrame:
-    """Keyed dedup keeping the most recent row per key — row_number
-    over (pk ORDER BY order_col DESC). This is THE scale-safe dedup:
-    one shuffle on pk, no full-row comparison."""
-    keys = _key_list(pk)
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+def _latest_sql(side: str, keys: Sequence[str], order: Sequence[str]) -> str:
+    """A SELECT keeping the latest row of ``side`` per key — row_number
+    over (keys ORDER BY ``order`` DESC). This is THE scale-safe dedup:
+    one shuffle on the keys, no full-row comparison."""
+    by = ", ".join(f"{_q(c)} DESC" for c in order)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        "SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() OVER "
+        f"(PARTITION BY {', '.join(map(_q, keys))} ORDER BY {by})"
+        f" AS __rn FROM {side}) WHERE __rn = 1"
     )
 
 
+def keep_latest(df: DataFrame, pk: str | Sequence[str], order_col: str) -> DataFrame:
+    """Keyed dedup keeping the most recent row per key by ``order_col``
+    (:func:`_latest_sql`, the dedup every MERGE runs on its batch)."""
+    return df.sparkSession.sql(_latest_sql("{df}", _key_list(pk), [order_col]), df=df)
+
+
 def changed_predicate(
-    left: str, right: str, columns: Sequence[str], audit_col: str | None = AUDIT_COLUMN
-) -> Column:
-    """OR-chain of null-safe inequality over non-audit columns — the
-    Spark form of the reference's ``update_cond`` (etl.py:160-162):
-    ``t1.c != t2.c OR (t1.c IS NULL) != (t2.c IS NULL)`` per column
-    collapses to ``NOT (t1.c <=> t2.c)``. ``audit_col=None`` compares
-    every column; with no column to compare, nothing changed."""
-    cols = [c for c in columns if c != audit_col]
-    preds = [~F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols]
-    return reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
-
-
-def _changed_sql(
     fields: Sequence[StructField], audit_col: str | None = AUDIT_COLUMN
 ) -> str:
-    """:func:`changed_predicate` over the ``t``/``b`` sides as SQL text,
-    for the columns ``fields`` describe. A top-level map has no ``<=>``
-    (maps are unordered), so it compares its entries sorted — equal maps
-    match whatever their key order; a map nested in another type stays
-    unsupported (Spark rejects the comparison)."""
+    """OR-chain of null-safe inequality over the non-audit columns
+    ``fields`` describe, as SQL text over the ``t``/``b`` sides — the
+    Spark form of the reference's ``update_cond`` (etl.py:160-162):
+    ``t1.c != t2.c OR (t1.c IS NULL) != (t2.c IS NULL)`` per column
+    collapses to ``NOT (t.c <=> b.c)``. ``audit_col=None`` compares
+    every column; with no column to compare, nothing changed. A
+    top-level map has no ``<=>`` (maps are unordered), so it compares
+    its entries sorted — equal maps match whatever their key order; a
+    map nested in another type stays unsupported (Spark rejects the
+    comparison)."""
 
     def side(s: str, f: StructField) -> str:
         c = f"{s}.{_q(f.name)}"
@@ -230,8 +230,8 @@ def merge_upsert(
         batch,
         keys,
         (_take_batch_sql(evolved.names), None),
-        update=_changed_sql([f for f in evolved if f.name not in keys], audit_col),
-        order_col=order_col if order_col in evolved.names else None,
+        update=changed_predicate([f for f in evolved if f.name not in keys], audit_col),
+        order=[order_col] if order_col in evolved.names else (),
         projections=(
             projection_sql(evolved, target_src), projection_sql(evolved, batch_src)
         ),
@@ -360,31 +360,30 @@ def _current_version(target_path: str) -> str | None:
     return name or None
 
 
-def table_data_path(target_path: str) -> str:
-    """Resolve a table root to the directory holding its current data:
-    the pointed version dir for a versioned table, the root itself for
-    a legacy flat-Parquet dir."""
+def table_data_path(target_path: str) -> str | None:
+    """Resolve a table root to its current version dir, or ``None``
+    when the table holds no data yet: the root is missing, empty, or
+    holds only version dirs staged before a first commit. Any other
+    root (a flat-Parquet dir, say) is refused with ``ValueError``."""
     v = _current_version(target_path)
-    return os.path.join(target_path, v) if v else target_path
-
-
-def _data_dir(target_path: str) -> str | None:
-    """:func:`table_data_path`, or ``None`` when the table holds no
-    data yet. A legacy flat-Parquet root holding data files counts as
-    data; version dirs staged before a first commit do not."""
-    data = table_data_path(target_path)
-    if data != target_path or any(
+    if v:
+        return os.path.join(target_path, v)
+    if os.path.isdir(target_path) and any(
         not (f.startswith((".", "_")) or _VERSION_RE.fullmatch(f))
         for f in os.listdir(target_path)
     ):
-        return data
+        raise ValueError(
+            f"{target_path} is not a versioned table (no {CURRENT_POINTER} "
+            "pointer); write its rows into a new root through write_upsert"
+        )
     return None
 
 
 def read_table(
     spark: SparkSession, target_path: str, version: str | None = None
 ) -> DataFrame:
-    """Read a table written by ``write_upsert`` (version-pointer aware).
+    """Read a table's current version (its merged view, for a
+    merge-on-read version: :func:`_read_version`).
 
     ``version`` time-travels to a specific retained version dir (a
     ``list_versions`` name) instead of the ``_CURRENT`` pointer — the plain-Parquet
@@ -399,20 +398,39 @@ def read_table(
                 f"(retained: {list_versions(target_path)})"
             )
         return _read_version(spark, path)
-    return _read_version(spark, table_data_path(target_path))
+    path = table_data_path(target_path)
+    if path is None:
+        raise FileNotFoundError(f"no table data under {target_path}")
+    return _read_version(spark, path)
 
 
 def _read_version(spark: SparkSession, data_dir: str) -> DataFrame:
-    """Read a table's data dir: through the version's schema record
-    when it has one (no footer-inference job, partition types as
-    written), else by inference (flat roots and versions written before
-    the record)."""
+    """THE reader of a table state: the version's base, read through its
+    schema record (no footer-inference job, partition types as written).
+    A merge-on-read version's delta logs, read through the same record,
+    fold into the base by ONE :func:`_merge` on the recorded keys: the
+    latest log row per key (by ``__seq``, then ``__pos``) wins, and the
+    filter on ``__op`` drops a matched ``'D'`` row, inserts no unmatched
+    one and keeps every untouched base row."""
+    with open(os.path.join(data_dir, _SCHEMA_RECORD)) as fh:
+        schema = StructType.fromJson(json.load(fh))
+    base = spark.read.schema(schema).parquet(data_dir)
     try:
-        with open(os.path.join(data_dir, _SCHEMA_RECORD)) as fh:
-            schema = StructType.fromJson(json.load(fh))
+        with open(os.path.join(data_dir, _DELTAS, _KEYS_RECORD)) as fh:
+            keys = json.load(fh)
     except FileNotFoundError:
-        return spark.read.parquet(data_dir)
-    return spark.read.schema(schema).parquet(data_dir)
+        return base
+    logs = spark.read.schema(StructType([
+        *schema,
+        StructField(MOR_OP_COL, StringType()),
+        StructField("__pos", LongType()),
+        StructField("__seq", IntegerType()),
+    ])).parquet(os.path.join(data_dir, _DELTAS))
+    latest = (
+        f"{_take_batch_sql(schema.names)}, b.{MOR_OP_COL}",
+        f"{MOR_OP_COL} IS DISTINCT FROM 'D'",
+    )
+    return _merge(base, logs, keys, latest, order=["__seq", "__pos"]).drop(MOR_OP_COL)
 
 
 def list_versions(target_path: str) -> list[str]:
@@ -470,21 +488,18 @@ def _write_version(
     """Write ``df`` into the next version dir — staged, not yet
     current — and return its name. The version is written
     ``partitionBy(partition_col)``; with none given, it keeps the
-    partitioning of the current data dir (its ``col=value``
-    subdirectories). The version also gets its schema record, which
-    :func:`_read_version` reads instead of inferring the schema from
-    the footers and partition dirs. Caller holds the writer lease."""
+    partitioning of the current version (its ``col=value``
+    subdirectories), none for an empty table. The version also gets its
+    schema record, which :func:`_read_version` reads instead of
+    inferring the schema from the footers and partition dirs. Caller
+    holds the writer lease."""
     version = _next_version_name(target_path)
     if partition_col is not None:
         parts = [partition_col]
     else:
-        parts = sorted(
-            {
-                d.split("=", 1)[0]
-                for d in os.listdir(table_data_path(target_path))
-                if "=" in d
-            }
-        )
+        current = table_data_path(target_path)
+        dirs = os.listdir(current) if current is not None else []
+        parts = sorted({d.split("=", 1)[0] for d in dirs if "=" in d})
     path = os.path.join(target_path, version)
     df.write.mode("overwrite").partitionBy(*parts).parquet(path)
     with open(os.path.join(path, _SCHEMA_RECORD), "w") as fh:
@@ -493,28 +508,13 @@ def _write_version(
     return version
 
 
-def _drop_flat_data(target_path: str) -> None:
-    """Remove the data files, ``.crc``/``_SUCCESS`` siblings and
-    ``col=value`` dirs a flat-Parquet root held before its first version."""
-    for f in os.listdir(target_path):
-        p = os.path.join(target_path, f)
-        name = f[1:-4] if f.startswith(".") and f.endswith(".crc") else f
-        if os.path.isdir(p):
-            if "=" in f:
-                shutil.rmtree(p)
-        elif name == "_SUCCESS" or not name.startswith((".", "_")):
-            os.remove(p)
-
-
 def _commit(target_path: str, version: str, keep_versions: int) -> None:
     """Make the staged ``version`` current: run the pre-flip hook, flip
-    the pointer, drop superseded flat data (after every flip, so a crash
-    right after a first flip is mended by the next), vacuum to
-    ``keep_versions``. Caller holds the writer lease."""
+    the pointer, vacuum to ``keep_versions``. Caller holds the writer
+    lease."""
     if _before_pointer_flip is not None:
         _before_pointer_flip()
     _commit_version(target_path, version)
-    _drop_flat_data(target_path)
     vacuum_table(target_path, keep=keep_versions)
 
 
@@ -535,16 +535,16 @@ def rewrite_table(
     lock_wait: float = 0.0,
 ) -> str:
     """THE commit path for a versioned table: under :func:`writer_lock`,
-    read the current table, commit ``fn(current)`` as a new version
-    (:func:`_publish`) and return its name. ``fn`` gets ``None`` when
-    the table has no data yet; a legacy flat-Parquet root holding data
-    files counts as data, so the first rewrite upgrades it in place to
-    the versioned layout.
+    read the current table (its merged view, :func:`_read_version`),
+    commit ``fn(current)`` as a new version (:func:`_publish`) and
+    return its name. ``fn`` gets ``None`` when the table has no data
+    yet; a root that is not a versioned table raises ``ValueError``
+    (:func:`table_data_path`).
 
     ``lock_wait=0`` raises :class:`WriterLockError` at once if another
     writer holds the lease; ``> 0`` serializes behind it."""
     with writer_lock(target_path, wait_seconds=lock_wait):
-        data = _data_dir(target_path)
+        data = table_data_path(target_path)
         current = _read_version(spark, data) if data is not None else None
         return _publish(target_path, fn(current), keep_versions)
 
@@ -558,12 +558,14 @@ def write_upsert(
     keep_versions: int = 1,
     lock_wait: float = 0.0,
 ) -> None:
-    """Materialized upsert against a Parquet table root: read current
-    version → merge → write a complete new version dir → atomic
-    pointer-file commit (manifest-guarded; a crash mid-upsert leaves
-    the previous version readable). With Delta/Iceberg this whole
-    function is a native MERGE INTO; the versioned layout is the
-    plain-Parquet stand-in for their transaction log.
+    """Materialized upsert against a table root (empty or versioned):
+    read the current version's merged view → merge → write a complete
+    new version dir → atomic pointer-file commit (manifest-guarded; a
+    crash mid-upsert leaves the previous version readable). Into an
+    empty root the batch is written deduped by :func:`keep_latest`.
+    With Delta/Iceberg this whole function is a native MERGE INTO; the
+    versioned layout is the plain-Parquet stand-in for their
+    transaction log.
 
     ``keep_versions`` is the retention window: how many committed
     versions survive the post-commit vacuum. 1 (default) keeps only
@@ -608,7 +610,7 @@ def delete_keys(
     keeps the current version's partitioning)."""
     pks = _key_list(pk)
     with writer_lock(target_path):
-        target = _read_version(spark, table_data_path(target_path))
+        target = read_table(spark, target_path)
         doomed = keys.select(*pks).distinct()
         # the rows the anti-join drops, counted by the same equi-join
         n_removed = target.join(doomed, pks, "left_semi").count()
@@ -653,20 +655,13 @@ def write_upsert_partitioned(
         for r in batch.select(partition_col).distinct().collect()
     ]
     with writer_lock(target_path):
-        current = _data_dir(target_path)
+        current = table_data_path(target_path)
         if current is None:
             out = batch
             if order_col in batch.columns:
                 out = keep_latest(batch, keys, order_col)
         else:
             target = _read_version(spark, current)
-            # a flat partitioned root is read by inference (string dirs
-            # → date/int), which must not read as schema drift: align
-            # the batch to the target's type
-            batch = batch.withColumn(
-                partition_col,
-                F.col(partition_col).cast(target.schema[partition_col].dataType),
-            )
             affected = target.filter(F.col(partition_col).isin(parts))
             out = merge_upsert(affected, batch, keys, order_col=order_col)
         # repartition on the partition column first: partitionBy from
@@ -755,8 +750,8 @@ def scd2_upsert(
         (", ".join(kept), "__tgt"),
         # new versions: brand-new pks, or the changed rows' replacements
         (", ".join(new), "__take"),
-        update=_changed_sql([schema[c] for c in data_cols], audit_col=None),
-        order_col=ts_col,
+        update=changed_predicate([schema[c] for c in data_cols], audit_col=None),
+        order=[ts_col],
     )
     return target.filter(F.col(valid_to).isNotNull()).unionByName(merged)
 
@@ -766,7 +761,7 @@ def conditional_merge(
     batch: DataFrame,
     pk: str | Sequence[str],
     matched_delete: Column | None = None,
-    matched_update: Column | None = None,
+    matched_update: str | Column | None = None,
 ) -> DataFrame:
     """MERGE with CONDITIONAL matched clauses, as one lazy plan:
 
@@ -777,7 +772,9 @@ def conditional_merge(
     - unmatched target rows persist (no NOT MATCHED BY SOURCE clause).
 
     Predicates are Columns over the ``t``/``b`` aliases (e.g.
-    ``F.col("b.status") == 'F'``), evaluated ONLY on matched pairs; a
+    ``F.col("b.status") == 'F'``) — ``matched_update`` may also be SQL
+    text over them, such as :func:`changed_predicate` — evaluated ONLY
+    on matched pairs; a
     clause fires only when its predicate is TRUE (a NULL
     ``matched_delete`` neither deletes nor updates) — the Delta/Iceberg
     conditional-clause MERGE surface expressed as :func:`_merge`'s
@@ -798,7 +795,7 @@ def merge_preview(
     batch: DataFrame,
     pk: str | Sequence[str],
     matched_delete: Column | None = None,
-    matched_update: Column | None = None,
+    matched_update: str | Column | None = None,
 ) -> DataFrame:
     """DRY-RUN of :func:`conditional_merge`: classify every would-be
     output decision WITHOUT writing — the MERGE preview (Delta's
@@ -906,20 +903,26 @@ def write_audit_publish(
 #     <root>/vNNNNNNNN/_deltas/__seq=<n>/part-*.parquet   (op: 'U' / 'D')
 # An append commits a NEW version: the current one hard-linked plus one
 # log. A base read skips `_deltas` (Spark lists no `_`-prefixed dir);
-# the logs read as one table whose partition column `__seq` orders
-# them — latest-op-wins per pk across (base < logs by seq), and within
-# one log the LAST row wins (``__pos``, frozen at write time, breaks
-# intra-batch ties deterministically). Compaction publishes the merged
-# view as a version without logs. Appends and compactions commit
-# through `_commit`, so each is crash-safe at every point: the pointer
-# names the old version or the new one, both complete, and the
-# post-flip vacuum retires the old one and any orphan of a crash.
+# `_read_version`, the one reader, reads the logs as one table whose
+# partition column `__seq` orders them and folds them into the base
+# through `_merge` on the keys the first append recorded (`_KEYS`) —
+# latest-op-wins per key across (base < logs by seq), and within one
+# log the LAST row wins (``__pos``, frozen at write time, breaks
+# intra-batch ties deterministically). So `read_table` and every
+# copy-on-write writer see the merged view, and `io.compact_table`
+# folds the logs: it publishes that view as a version without logs.
+# Appends commit through `_commit`, so each is crash-safe at every
+# point: the pointer names the old version or the new one, both
+# complete, and the post-flip vacuum retires the old one and any
+# orphan of a crash.
 # ---------------------------------------------------------------------------
 
 MOR_OP_COL = "__op"
 # a MOR version's delta logs, one `__seq=<n>` dir per append (n zero-padded,
 # so the logs sort alike whether `__seq` is inferred as a number or not)
 _DELTAS = "_deltas"
+# the key the logs fold on (a JSON list), recorded by the first append
+_KEYS_RECORD = "_KEYS"
 # compact once the delta logs outgrow this fraction of the base's bytes
 MOR_MAX_DELTA_FRAC = 0.10
 
@@ -935,14 +938,18 @@ def _delta_logs(data_dir: str) -> list[str]:
     return glob.glob(os.path.join(data_dir, _DELTAS, "__seq=*"))
 
 
-def append_mor_delta(spark: SparkSession, root: str, batch: DataFrame) -> int:
+def append_mor_delta(
+    spark: SparkSession, root: str, batch: DataFrame, pk: str | Sequence[str]
+) -> int:
     """Append one delta log (rows carry :data:`MOR_OP_COL`: 'U' or
     'D') as the table's next version; returns the log's seq number.
 
     Under the writer lease, the current version is hard-linked into the
     next version dir, the batch is written there as the newest log
     ``_deltas/__seq=<n>``, and the version commits through
-    :func:`_commit`.
+    :func:`_commit`. The first append records ``pk`` as the key the
+    logs fold on (``_deltas/_KEYS``); later appends must name the same
+    key. :func:`read_table` returns the merged view.
 
     Scale notes (100 TB): cost is O(batch) written plus one link per
     file of the current version — no read or rewrite of the base. Two
@@ -950,81 +957,44 @@ def append_mor_delta(spark: SparkSession, root: str, batch: DataFrame) -> int:
     ``__pos`` is assigned in row order over the single coalesced
     partition and frozen in the file, so every later read breaks the
     tie the same way."""
+    keys = _key_list(pk)
     with writer_lock(root):
-        if _current_version(root) is None:
+        data = table_data_path(root)
+        if data is None:
             raise FileNotFoundError(f"no merge-on-read base under {root}")
+        record = os.path.join(_DELTAS, _KEYS_RECORD)
+        if os.path.exists(os.path.join(data, record)):
+            with open(os.path.join(data, record)) as fh:
+                if json.load(fh) != keys:
+                    raise ValueError(f"{root}'s delta logs are keyed on another key")
         version = _next_version_name(root)
         new = os.path.join(root, version)
-        shutil.copytree(table_data_path(root), new, copy_function=os.link)
+        shutil.copytree(data, new, copy_function=os.link)
         seq = len(_delta_logs(new)) + 1
         batch.coalesce(1).withColumn(
             "__pos", F.monotonically_increasing_id()
         ).write.parquet(os.path.join(new, _DELTAS, f"__seq={seq:08d}"))
+        if seq == 1:
+            with open(os.path.join(new, record), "w") as fh:
+                json.dump(keys, fh)
         _commit(root, version, keep_versions=1)
         return seq
 
 
-def read_mor(spark: SparkSession, root: str, pk: str) -> DataFrame:
-    """Merge-on-read scan: latest-op-wins per pk over the base and the
-    delta logs of ONE version (the pointer is resolved once).
-
-    Scale notes (100 TB): the base is scanned ONCE (through its schema
-    record) with no rewrite history; the merge is one window over the
-    DELTAS (delta-grain, not base-grain) + one pk anti-join of base
-    against touched pks + a union. The anti-join is NOT force-broadcast:
-    between compactions the delta log is unbounded, and a forced
-    broadcast of a large touched-pk set risks the driver/maxResultSize
-    blowup (round-12 lesson) — the touched set is built through a
-    shuffle, so AQE sizes the join from real stats and broadcasts
-    exactly when it is small. ``compact_mor`` folds the logs back when
-    they grow."""
-    data = table_data_path(root)
-    base = _read_version(spark, data)
-    if not _delta_logs(data):
-        return base
-    deltas = spark.read.parquet(os.path.join(data, _DELTAS))
-    w = Window.partitionBy(pk).orderBy(F.desc("__seq"), F.desc("__pos"))
-    latest = (
-        deltas.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__seq", "__pos")
-    )
-    touched = latest.select(pk)
-    survivors = base.join(touched, pk, "left_anti")
-    upserts = latest.filter(F.col(MOR_OP_COL) == "U").drop(MOR_OP_COL)
-    return survivors.unionByName(upserts)
-
-
-def compact_mor(spark: SparkSession, root: str, pk: str) -> int:
-    """Fold every delta log into a new base (the MOR maintenance job);
-    returns the number of logs folded.
-
-    Under the writer lease, the merged view commits through
-    :func:`_publish` as the next version, which has no ``_deltas``. A
-    crash before the pointer flip leaves the old version (base + logs)
-    current and consistent; the post-flip vacuum retires the old
-    version and any orphan version of a crash."""
-    with writer_lock(root):
-        n = len(_delta_logs(table_data_path(root)))
-        if n:
-            _publish(root, read_mor(spark, root, pk), keep_versions=1)
-        return n
-
-
 def mor_should_compact(root: str, max_files: int = 64) -> bool:
     """Compaction-cadence policy, pinned by the round-13 probe
-    (scripts/probe_r13_mor.md): read_mor degrades LINEARLY with the
-    accumulated delta count (~15 ms per delta log at sf0.1 — file
-    listing + one task per log + delta-grain window rows), while
-    compaction costs one merged read + base write and resets the scan
-    to base-only (0.31 s vs 2.96 s at 128 logs). Compact when either
-    the current version's LOG COUNT reaches ``max_files`` (one file per
-    log: task/listing overhead) or the delta BYTES exceed
-    :data:`MOR_MAX_DELTA_FRAC` of the base (window + anti-join work,
-    and the broadcast-size risk read_mor avoids by letting AQE size the
-    join). Pure filesystem metadata — no Spark job."""
+    (scripts/probe_r13_mor.md): a merged read degrades LINEARLY with
+    the accumulated delta count (~15 ms per delta log at sf0.1 — file
+    listing + one task per log + delta-grain dedup rows), while
+    compaction (``io.compact_table``) costs one merged read + base
+    write and resets the scan to base-only (0.31 s vs 2.96 s at 128
+    logs). Compact when either the current version's LOG COUNT reaches
+    ``max_files`` (one file per log: task/listing overhead) or the
+    delta BYTES exceed :data:`MOR_MAX_DELTA_FRAC` of the base (the
+    merge's work grows with them). Pure filesystem metadata — no Spark
+    job."""
     base = table_data_path(root)
-    logs = _delta_logs(base)
+    logs = base and _delta_logs(base)
     if not logs:
         return False
     if len(logs) >= max_files:
@@ -1149,7 +1119,7 @@ def merge_branch(
         base = _read_version(spark, os.path.join(broot, _BRANCH_BASE))
         ours = read_table(spark, target_path)
         theirs = read_table(spark, broot)
-        changed = _changed_sql([f for f in base.schema if f.name not in keys])
+        changed = changed_predicate([f for f in base.schema if f.name not in keys])
 
         def changed_rows(side: DataFrame) -> DataFrame:
             # the side's rows a MERGE into base would insert or update
