@@ -1,5 +1,9 @@
 """Paginated REST source tests with an injected fixture transport
-(SURVEY §5: bounded pagination, error paths, retry, fan-out, clean)."""
+(SURVEY §5: bounded pagination, error paths, retry, fan-out, clean).
+
+The executor-side cases read through the ``paginated_rest`` DataSource,
+which builds its transport on each executor from a module-level factory
+named in the ``transport`` option (``module:tests.test_rest_api.<f>``)."""
 
 from __future__ import annotations
 
@@ -69,8 +73,12 @@ def test_retry_exhaustion_raises():
         list(R.fetch_pages(t, "u", retries=2, retry_delay_s=0))
 
 
+def _popular(spark, transport, **kwargs):
+    return R.fetch_all_endpoints(spark, transport, endpoints=("popular",), **kwargs)
+
+
 def test_fetch_endpoint_df_typed(spark):
-    df = R.fetch_endpoint_df(spark, fixture_transport(2, 3), "popular")
+    df = _popular(spark, fixture_transport(2, 3))
     assert df.count() == 6
     assert dict(df.dtypes)["genre_ids"] == "array<int>"
     assert dict(df.dtypes)["id"] == "bigint"
@@ -81,7 +89,7 @@ def test_empty_endpoint_raises(spark):
         return {"page": 1, "total_pages": 1, "results": []}
 
     with pytest.raises(ValueError):
-        R.fetch_endpoint_df(spark, empty, "popular")
+        _popular(spark, empty)
 
 
 def test_fan_out_union_tags_endpoint(spark):
@@ -96,7 +104,7 @@ def test_fan_out_union_tags_endpoint(spark):
 
 
 def test_clean_movies_semantics(spark):
-    df = R.fetch_endpoint_df(spark, fixture_transport(1, 4), "popular")
+    df = _popular(spark, fixture_transport(1, 4))
     out = R.clean_movies(df)
     rows = {r.id: r for r in out.collect()}
     assert rows[0].release_date is None  # "" → NULL, not 1970-01-01
@@ -106,11 +114,31 @@ def test_clean_movies_semantics(spark):
     assert dict(out.dtypes)["genre_ids"] == "array<int>"  # stays native
 
 
-def test_distributed_page_fetch(spark):
-    def make_transport():
-        return fixture_transport(4, 3)
+def _paginated_rest(spark, factory: str, **options):
+    from the_movies_db_spark.sources.rest_datasource import PaginatedRestDataSource
 
-    df = R.fetch_pages_distributed(spark, make_transport, "u", num_pages=4)
+    spark.dataSource.register(PaginatedRestDataSource)
+    reader = spark.read.format("paginated_rest").option("url", "u")
+    reader = reader.option("transport", f"module:tests.test_rest_api.{factory}")
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def four_pages():
+    return fixture_transport(4, 3)
+
+
+def eight_pages():
+    return fixture_transport(8, 2)
+
+
+def flaky_page():
+    return fixture_transport(1, 2, fail_first=1)
+
+
+def test_distributed_page_fetch(spark):
+    df = _paginated_rest(spark, "four_pages", num_pages=4, pages_per_partition=2)
     assert df.count() == 12
     assert dict(df.dtypes)["id"] == "bigint"
 
@@ -132,43 +160,27 @@ def test_end_to_end_pipeline_parity(spark, tmp_path):
     assert final.count() == 6  # ids 0..5, once each
 
 
-def test_token_bucket_enforces_rate():
-    """A bucket at r tokens/sec with capacity 1 admits n requests in no
-    less than (n-1)/r seconds."""
-    import time as _t
-
-    bucket = R.TokenBucket(rate=50.0, capacity=1.0)
-    t0 = _t.monotonic()
-    for _ in range(11):
-        bucket.acquire()
-    elapsed = _t.monotonic() - t0
-    assert elapsed >= 10 / 50.0  # 11 requests, 10 refill intervals
-    assert elapsed < 2.0  # and it doesn't over-throttle
-
-
 def test_distributed_fetch_respects_global_rate(spark):
     """With requests_per_sec set, the wall-clock for the whole fetch is
     bounded below by pages / global_rate (counting transport: every
     page is one request)."""
     import time as _t
 
-    def make_transport():
-        return fixture_transport(8, 2)
-
     t0 = _t.monotonic()
-    df = R.fetch_pages_distributed(
-        spark,
-        make_transport,
-        "u",
-        num_pages=8,
-        partitions=2,
-        requests_per_sec=10.0,
-    )
-    n = df.count()
+    n = _paginated_rest(
+        spark, "eight_pages", num_pages=8, pages_per_partition=4, requests_per_sec=4
+    ).count()
     elapsed = _t.monotonic() - t0
     assert n == 16
-    # 8 requests over 2 tasks at 5 req/s/task → ≥ (4-1)/5 = 0.6 s
-    assert elapsed >= 0.6
+    # 8 requests over 2 tasks at 2 req/s/task → ≥ (4-1)/2 = 1.5 s
+    assert elapsed >= 1.5
+
+
+def test_distributed_fetch_retries_a_failed_page(spark):
+    """Each executor task pages through ``fetch_pages``, so a transient
+    ``ApiError`` is retried instead of failing the read."""
+    df = _paginated_rest(spark, "flaky_page", num_pages=1)
+    assert sorted(r.id for r in df.collect()) == [0, 1]
 
 
 def _single_page(results: list[dict]):
@@ -178,14 +190,14 @@ def _single_page(results: list[dict]):
     return call
 
 
-def _bigint_page():
+def bigint_page():
     return _single_page([{"id": 1, "vote_count": None}, {"id": 2, "vote_count": 2**53 + 1}])
 
 
 def test_distributed_fetch_keeps_bigint_next_to_null(spark):
     """A NULL on the same page must not turn the column into float64:
     2**53 + 1 has no exact double."""
-    df = R.fetch_pages_distributed(spark, _bigint_page, "u", num_pages=1)
+    df = _paginated_rest(spark, "bigint_page", num_pages=1)
     assert sorted((r.id, r.vote_count) for r in df.collect()) == [
         (1, None),
         (2, 2**53 + 1),
@@ -240,14 +252,21 @@ def test_fan_out_matches_row_path(spark):
 _MISTYPED = [{"id": 1.5}, {"id": 1, "vote_count": "12"}, {"id": 1, "adult": 1}]
 
 
+def mistyped_page():
+    """Page of ``u/<i>``: a good record, then ``_MISTYPED[i]``."""
+
+    def call(url: str, params: dict) -> dict:
+        bad = _MISTYPED[int(url.rsplit("/", 1)[1])]
+        return _single_page([{"id": 0}, bad])(url, params)
+
+    return call
+
+
 @pytest.mark.parametrize("bad", _MISTYPED)
 @pytest.mark.parametrize(
     "fetch",
-    [
-        lambda spark, t: R.fetch_endpoint_df(spark, t, "popular"),
-        lambda spark, t: R.fetch_all_endpoints(spark, t, endpoints=("popular",)),
-    ],
-    ids=["endpoint", "fan_out"],
+    [_popular],
+    ids=["fan_out"],
 )
 def test_mistyped_record_is_rejected(spark, fetch, bad):
     """A value the row path rejects is not coerced (1.5 must not load as 1)."""
@@ -260,9 +279,7 @@ def test_mistyped_record_is_rejected(spark, fetch, bad):
 @pytest.mark.parametrize("bad", _MISTYPED)
 def test_distributed_fetch_rejects_mistyped_record(spark, bad):
     """The executor path runs the same verifier as the driver path."""
-
-    def make_transport():
-        return _single_page([{"id": 0}, bad])
-
+    url = f"u/{_MISTYPED.index(bad)}"
+    df = _paginated_rest(spark, "mistyped_page", url=url, num_pages=1)
     with pytest.raises(Exception, match="can not accept object"):
-        R.fetch_pages_distributed(spark, make_transport, "u", num_pages=1).collect()
+        df.collect()

@@ -9,8 +9,11 @@ from the_movies_db_spark.sources.rest_datasource import (
     SYNTHETIC_TOTAL_PAGES,
     PaginatedRestDataSource,
     PaginatedRestReader,
+    TokenBucket,
     synthetic_transport,
 )
+
+ALL_IDS = list(range(SYNTHETIC_TOTAL_PAGES * SYNTHETIC_PAGE_SIZE))
 
 
 @pytest.fixture(scope="module")
@@ -33,8 +36,7 @@ def test_batch_reads_all_pages(registered):
     rows = df.collect()
     # total_pages=5 bounds the synthetic feed even though num_pages=10
     assert len(rows) == SYNTHETIC_TOTAL_PAGES * SYNTHETIC_PAGE_SIZE
-    ids = sorted(r.id for r in rows)
-    assert ids == list(range(SYNTHETIC_TOTAL_PAGES * SYNTHETIC_PAGE_SIZE))
+    assert sorted(r.id for r in rows) == ALL_IDS
     first = rows[0]
     assert isinstance(first.genre_ids, list)  # native array, not JSON string
 
@@ -54,15 +56,17 @@ def test_pushdown_projection(registered):
     assert df.count() == 2 * SYNTHETIC_PAGE_SIZE
 
 
+def _stream(spark, **opts):
+    reader = spark.readStream.format("paginated_rest").option(
+        "url", "https://example.test/movie/popular"
+    ).option("transport", "synthetic")
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
 def test_stream_reader_pages_as_offsets(registered, tmp_path):
-    stream = (
-        registered.readStream.format("paginated_rest")
-        .option("url", "https://example.test/movie/popular")
-        .option("transport", "synthetic")
-        .option("num_pages", 3)
-        .option("pages_per_batch", 1)
-        .load()
-    )
+    stream = _stream(registered, num_pages=3, pages_per_partition=2)
     q = (
         stream.writeStream.format("memory")
         .queryName("rest_stream_test")
@@ -73,9 +77,27 @@ def test_stream_reader_pages_as_offsets(registered, tmp_path):
     )
     q.awaitTermination(120)
     out = registered.table("rest_stream_test").collect()
-    # availableNow drains one batch window: at least page 1, at most 3 pages
-    assert len(out) >= SYNTHETIC_PAGE_SIZE
-    assert len(out) <= 3 * SYNTHETIC_PAGE_SIZE
+    # availableNow drains every page up to num_pages, each once
+    assert sorted(r.id for r in out) == list(range(3 * SYNTHETIC_PAGE_SIZE))
+
+
+def test_stream_restart_reads_every_page_once(registered, tmp_path):
+    """Two ``availableNow`` runs on one checkpoint: the first reads the
+    whole feed, the restart resumes at the checkpointed offset and
+    reads nothing again."""
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    for _ in range(2):
+        q = (
+            _stream(registered, num_pages=10, pages_per_partition=2)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    ids = [r.id for r in registered.read.parquet(sink).collect()]
+    assert sorted(ids) == ALL_IDS
 
 
 def test_synthetic_transport_shape():
@@ -84,3 +106,17 @@ def test_synthetic_transport_shape():
     assert p1["total_pages"] == SYNTHETIC_TOTAL_PAGES
     assert len(p1["results"]) == SYNTHETIC_PAGE_SIZE
     assert t("u", {"page": 99})["results"] == []
+
+
+def test_token_bucket_enforces_rate():
+    """A bucket at r tokens/sec with capacity 1 admits n requests in no
+    less than (n-1)/r seconds."""
+    import time as _t
+
+    bucket = TokenBucket(rate=50.0, capacity=1.0)
+    t0 = _t.monotonic()
+    for _ in range(11):
+        bucket.acquire()
+    elapsed = _t.monotonic() - t0
+    assert elapsed >= 10 / 50.0  # 11 requests, 10 refill intervals
+    assert elapsed < 2.0  # and it doesn't over-throttle

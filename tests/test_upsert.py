@@ -249,6 +249,31 @@ def test_partitioned_upsert_crash_before_flip_keeps_previous_version(
     )
 
 
+def test_partitioned_upsert_on_mor_root_keeps_delta_logs(spark, tmp_path):
+    """A partitioned upsert into a merge-on-read version merges its
+    folded view: a delta log on a partition the batch does not touch
+    survives the upsert."""
+    import the_movies_db_spark.upsert as U
+
+    path = str(tmp_path / "ptbl")
+    schema = "pk long, v string, d string"
+    U.write_upsert_partitioned(
+        spark, path, spark.createDataFrame([(1, "a", "d1"), (2, "b", "d2")], schema),
+        "pk", "d", order_col=None,
+    )
+    U.append_mor_delta(
+        spark, path,
+        spark.createDataFrame([(2, "U", "b2", "d2")], "pk long, __op string, v string, d string"),
+        "pk",
+    )
+    U.write_upsert_partitioned(
+        spark, path, spark.createDataFrame([(1, "A", "d1")], schema),
+        "pk", "d", order_col=None,
+    )
+    got = sorted(tuple(r) for r in U.read_table(spark, path).collect())
+    assert got == [(1, "A", "d1"), (2, "b2", "d2")]
+
+
 def test_merge_upsert_empty_batch_is_identity(spark):
     from the_movies_db_spark.upsert import merge_upsert
 
@@ -435,6 +460,29 @@ def test_writer_lock_stale_lease_is_stolen(spark, tmp_path):
     os.utime(lock, (0, 0))  # ancient mtime -> stale
     write_upsert(spark, root, _df(spark, [(2, "b", T1)]), "id")
     assert _as_map(U.read_table(spark, root)).keys() == {1, 2}
+    assert not os.path.exists(lock)
+
+
+def test_writer_lock_stolen_lease_survives_old_holder_release(tmp_path):
+    """A holder whose lease expired and was stolen must not delete the
+    new holder's lease when it finally releases: the table stays
+    locked until the new holder is done."""
+    import os
+
+    import the_movies_db_spark.upsert as U
+
+    root = str(tmp_path / "tbl")
+    lock = os.path.join(root, U.WRITER_LOCK)
+    old, new = U.writer_lock(root), U.writer_lock(root)
+    old.__enter__()
+    os.utime(lock, (0, 0))  # the old holder outlives its lease
+    new.__enter__()  # ... and the next writer steals it
+    old.__exit__(None, None, None)
+    assert os.path.exists(lock)
+    with pytest.raises(U.WriterLockError):
+        with U.writer_lock(root):
+            pass
+    new.__exit__(None, None, None)
     assert not os.path.exists(lock)
 
 

@@ -14,15 +14,14 @@ as engine parameters:
 - **bounded pagination** with ``max_pages`` + honoring the payload's
   ``total_pages`` when present;
 - **retry with backoff** per page (D3 parity, themovies.py:117-122);
-- **driver or executor fetch**: ``fetch_endpoint_df`` builds the
-  DataFrame driver-side (fine for ≤10k rows/endpoint — the reference's
-  actual scale); ``fetch_pages_distributed`` parallelizes page fetches
-  across executors via ``mapInArrow`` over a page-id DataFrame — the
-  shape you'd use for millions of pages, throttled by a per-task token
-  bucket (D2).
+- **one page loop, one record builder, two fetch shapes**:
+  ``fetch_all_endpoints`` fetches on the driver (fine for ≤10k
+  rows/endpoint — the reference's actual scale); the ``paginated_rest``
+  DataSource (``rest_datasource.py``) fetches page ranges on executors,
+  the shape you'd use for millions of pages. Both page through
+  ``fetch_pages`` and build records with ``_records_table``.
 
-Arrow-native ingest: both paths turn fetched records into Arrow with
-one builder, ``_records_table``. It first runs Spark's own row
+Arrow-native ingest: ``_records_table`` first runs Spark's own row
 verifier (the check ``createDataFrame(rows, verifySchema=True)``
 runs), because ``pa.Table.from_pylist`` alone silently truncates a
 float into an integer column; then it builds the table against the
@@ -109,11 +108,13 @@ def fetch_pages(
     retries: int = 1,
     retry_delay_s: float = 3.0,
     params: dict | None = None,
+    first: int = 1,
 ) -> Iterable[dict]:
-    """Yield record dicts across pages. Termination: ``total_pages``
-    from the payload when present, else ``max_pages`` (never
-    error-driven — reference bug §2.13.6). Per-page retry (D3)."""
-    page = 1
+    """Yield record dicts across pages ``first``..``max_pages``: the one
+    page loop of the package. Termination: ``total_pages`` from the
+    payload when present, else ``max_pages`` (never error-driven —
+    reference bug §2.13.6). Per-page retry (D3)."""
+    page = first
     while page <= max_pages:
         attempt = 0
         while True:
@@ -145,136 +146,32 @@ def _records_table(rows: list[dict], schema: StructType) -> pa.Table:
     return pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
 
 
-def _fetch_endpoint_table(
-    transport: Transport,
-    endpoint: str,
-    schema: StructType,
-    base_url: str = BASE_URL,
-    max_pages: int = 500,
-    **kwargs,
-) -> pa.Table:
-    rows = list(fetch_pages(transport, f"{base_url}/{endpoint}", max_pages, **kwargs))
-    if not rows:  # reference P8 empty-input guard (themovies.py:60-61)
-        raise ValueError(f"no rows returned for endpoint {endpoint!r}")
-    return _records_table(rows, schema)
-
-
-def fetch_endpoint_df(
-    spark: SparkSession,
-    transport: Transport,
-    endpoint: str,
-    base_url: str = BASE_URL,
-    max_pages: int = 500,
-    schema: StructType = MOVIE_SCHEMA,
-    **kwargs,
-) -> DataFrame:
-    """Driver-side fetch → typed DataFrame (right for ≤10k rows/endpoint).
-    The records are verified and built into one Arrow table
-    (``_records_table``), which enters the plan as a ``LocalRelation``."""
-    table = _fetch_endpoint_table(transport, endpoint, schema, base_url, max_pages, **kwargs)
-    return spark.createDataFrame(table, schema)
-
-
 def fetch_all_endpoints(
     spark: SparkSession,
     transport: Transport,
     endpoints: Sequence[str] = ENDPOINTS,
     schema: StructType = MOVIE_SCHEMA,
+    base_url: str = BASE_URL,
     **kwargs,
 ) -> DataFrame:
-    """Per-endpoint fan-out (reference D1 dynamic task mapping,
-    themovies.py:133-148) → one DataFrame tagged by a non-nullable
-    ``endpoint`` column. The endpoints' Arrow tables are concatenated
-    and handed to Spark in a single ``createDataFrame``."""
+    """Driver-side fetch with per-endpoint fan-out (reference D1 dynamic
+    task mapping, themovies.py:133-148) → one DataFrame tagged by a
+    non-nullable ``endpoint`` column. Each endpoint's pages
+    (:func:`fetch_pages`, which gets ``**kwargs``) become one Arrow
+    table (:func:`_records_table`); the tables are concatenated and
+    handed to Spark in a single ``createDataFrame``, so the batch
+    enters the plan as one ``LocalRelation``."""
     tag = StructField("endpoint", StringType(), nullable=False)
     tables = []
     for e in endpoints:
-        t = _fetch_endpoint_table(transport, e, schema, **kwargs)
+        rows = list(fetch_pages(transport, f"{base_url}/{e}", **kwargs))
+        if not rows:  # reference P8 empty-input guard (themovies.py:60-61)
+            raise ValueError(f"no rows returned for endpoint {e!r}")
+        t = _records_table(rows, schema)
         tables.append(t.append_column(tag.name, pa.array([e] * t.num_rows, pa.string())))
     return spark.createDataFrame(
         pa.concat_tables(tables), StructType([*schema.fields, tag])
     )
-
-
-class TokenBucket:
-    """Thread-safe token-bucket rate limiter (the D2 throttle done
-    properly): ``rate`` tokens/sec refill up to ``capacity``;
-    ``acquire`` blocks until a token is available. Monotonic clock, so
-    wall-clock jumps can't mint tokens."""
-
-    def __init__(self, rate: float, capacity: float | None = None):
-        import threading
-
-        self.rate = float(rate)
-        self.capacity = float(capacity if capacity is not None else max(1.0, rate))
-        self._tokens = self.capacity
-        self._last = time.monotonic()
-        self._lock = threading.Lock()
-
-    def acquire(self, n: float = 1.0) -> float:
-        """Block until ``n`` tokens are available; returns seconds slept."""
-        slept = 0.0
-        while True:
-            with self._lock:
-                now = time.monotonic()
-                self._tokens = min(
-                    self.capacity, self._tokens + (now - self._last) * self.rate
-                )
-                self._last = now
-                if self._tokens >= n:
-                    self._tokens -= n
-                    return slept
-                wait = (n - self._tokens) / self.rate
-            time.sleep(wait)
-            slept += wait
-
-
-def fetch_pages_distributed(
-    spark: SparkSession,
-    make_transport: Callable[[], Transport],
-    url: str,
-    num_pages: int,
-    schema: StructType = MOVIE_SCHEMA,
-    partitions: int | None = None,
-    requests_per_sec: float | None = None,
-) -> DataFrame:
-    """Executor-side page fetch: parallelize page ids, fetch per
-    partition via mapInArrow. ``make_transport`` must be picklable
-    (e.g. a module-level factory) — each executor builds its own
-    session. Each page's records go through ``_records_table``, the
-    same verifier and Arrow builder as the driver path, so a bigint
-    stays exact next to a NULL and a mistyped value is rejected.
-
-    Rate limiting (D2): ``requests_per_sec`` is the GLOBAL ceiling;
-    each task runs a token bucket at ``requests_per_sec /
-    max_concurrent_tasks`` so the fleet-wide rate holds no matter how
-    many executors fetch at once (tasks never coordinate — the
-    division is the coordination, and it stays correct as executors
-    scale because the scheduler caps concurrent tasks at the partition
-    count)."""
-    pages = spark.range(1, num_pages + 1).withColumnRenamed("id", "page")
-    if partitions:
-        pages = pages.repartition(partitions)
-    n_tasks = partitions or pages.rdd.getNumPartitions()
-    per_task_rate = (
-        requests_per_sec / max(1, n_tasks) if requests_per_sec else None
-    )
-
-    def fetch(batches):
-        transport = make_transport()
-        bucket = (
-            TokenBucket(per_task_rate, capacity=1.0) if per_task_rate else None
-        )
-        for batch in batches:
-            out = []
-            for page in batch.column("page").to_pylist():
-                if bucket is not None:
-                    bucket.acquire()
-                payload = transport(url, {"page": page})
-                out.extend(payload.get("results", []))
-            yield from _records_table(out, schema).to_batches()
-
-    return pages.mapInArrow(fetch, schema)
 
 
 def clean_movies(df: DataFrame) -> DataFrame:

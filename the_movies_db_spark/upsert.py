@@ -60,6 +60,7 @@ import os
 import re
 import shutil
 import time
+import uuid
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
@@ -302,7 +303,10 @@ def writer_lock(target_path: str, wait_seconds: float = 0.0):
     """Exclusive writer lease on a versioned table root.
 
     Acquisition is an atomic ``O_CREAT|O_EXCL`` create of
-    ``_WRITER_LOCK`` (content: pid + wallclock, for operators).
+    ``_WRITER_LOCK`` (content: pid + wallclock, for operators, and a
+    token unique to this acquisition). Release unlinks the lease only
+    while it still holds that token, so a holder whose lease was stolen
+    never deletes the new holder's lease.
     ``wait_seconds=0`` (default) raises :class:`WriterLockError`
     immediately when the lease is held — concurrent writers are
     EXCLUDED, not queued; pass a wait to serialize instead. A lease
@@ -311,12 +315,13 @@ def writer_lock(target_path: str, wait_seconds: float = 0.0):
     stealer's rename succeeds) and acquisition retries."""
     os.makedirs(target_path, exist_ok=True)
     lock = os.path.join(target_path, WRITER_LOCK)
+    token = f"{os.getpid()} {time.time():.3f} {uuid.uuid4().hex}\n"
     deadline = time.monotonic() + wait_seconds
     while True:
         try:
             fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             try:
-                os.write(fd, f"{os.getpid()} {time.time():.3f}\n".encode())
+                os.write(fd, token.encode())
             finally:
                 os.close(fd)
             break
@@ -346,7 +351,10 @@ def writer_lock(target_path: str, wait_seconds: float = 0.0):
         yield
     finally:
         try:
-            os.unlink(lock)
+            with open(lock) as fh:
+                ours = fh.read() == token
+            if ours:
+                os.unlink(lock)
         except FileNotFoundError:
             pass  # lease was stolen mid-write (we exceeded it)
 
@@ -647,7 +655,9 @@ def write_upsert_partitioned(
     the merged rows into the next version dir. Every partition dir of
     the current version that the new version lacks is then hard-linked
     file by file into it, so untouched partitions are never rewritten.
-    Returns the list of rewritten partition values.
+    A merge-on-read version is the exception: its delta logs may touch
+    any partition and the new version carries none, so its whole merged
+    view is merged and written. Returns the batch's partition values.
     """
     keys = _key_list(pk)
     parts = [
@@ -656,14 +666,16 @@ def write_upsert_partitioned(
     ]
     with writer_lock(target_path):
         current = table_data_path(target_path)
+        pruned = current is not None and not _delta_logs(current)
         if current is None:
             out = batch
             if order_col in batch.columns:
                 out = keep_latest(batch, keys, order_col)
         else:
             target = _read_version(spark, current)
-            affected = target.filter(F.col(partition_col).isin(parts))
-            out = merge_upsert(affected, batch, keys, order_col=order_col)
+            if pruned:
+                target = target.filter(F.col(partition_col).isin(parts))
+            out = merge_upsert(target, batch, keys, order_col=order_col)
         # repartition on the partition column first: partitionBy from
         # an arbitrarily-partitioned frame writes tasks x directories
         # small files (the round-13 partition-evolution lesson);
@@ -672,7 +684,7 @@ def write_upsert_partitioned(
             target_path, out.repartition(F.col(partition_col)), partition_col
         )
         new = os.path.join(target_path, version)
-        for d in os.listdir(current) if current is not None else []:
+        for d in os.listdir(current) if pruned else []:
             # an untouched partition: hard-link its files (.crc included)
             if "=" in d and not os.path.exists(os.path.join(new, d)):
                 shutil.copytree(
